@@ -1,0 +1,5 @@
+"""Benchmark of record: seeded workloads, per-layer tracing, steadiness mode.
+
+Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` from the repository root. See ``run.py``.
+"""
