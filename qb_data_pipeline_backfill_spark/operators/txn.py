@@ -24,16 +24,20 @@ provide — a MANIFEST as the single source of truth:
 
 Commit kinds: ``commit_append`` (optionally keyed-idempotent),
 ``commit_append_with_stats`` (records per-file key zone maps from the
-parquet footers), ``commit_upsert`` (full-rewrite MERGE),
-``commit_upsert_cow`` (file-pruned copy-on-write MERGE: only files
-whose zone map overlaps the update's key range are rewritten, the
-rest move forward by reference), ``commit_merge`` (full three-clause
-MERGE INTO: matched-update / matched-delete / not-matched-insert, the
-CDC-apply primitive), ``commit_replace_where`` (INSERT OVERWRITE ...
-WHERE, the idempotent-backfill slice swap), ``commit_compact``
-(replace-files rewrite), ``commit_delete`` (right-to-be-forgotten),
+parquet footers), ``commit_merge`` (three-clause MERGE INTO:
+matched-update / matched-delete / not-matched-insert, the CDC-apply
+primitive), ``commit_upsert`` (the default-clause MERGE) and
+``commit_delete`` (right-to-be-forgotten) — all three one
+copy-on-write core that picks its touched files from the manifest:
+on a table zone-mapped on the key only files whose key interval
+holds a source key are rewritten and the rest move forward by
+reference, otherwise every file is rewritten —
+``commit_replace_where`` (INSERT OVERWRITE ... WHERE, the
+idempotent-backfill slice swap), ``commit_compact_files``
+(replace-files rewrite of the named files, default every file),
 plus ``stream_to_txn`` (exactly-once foreachBatch sink),
-``read_table_where`` (manifest-driven file skipping),
+``read_table_where`` / ``read_table_within`` (manifest-driven file
+skipping on one or several zone-mapped columns),
 ``clone_table`` (zero-copy shallow clone via hard links), and
 table-level CHECK ``expectations`` stored in the manifest and
 enforced on every incoming batch before staging. Log hygiene:
@@ -313,7 +317,7 @@ def _read_manifest(path: str, version: int) -> dict:
 # --- zone-map stat (de)serialization ------------------------------------
 # Parquet footer min/max come back as Python date/datetime/Decimal for
 # DATE/TIMESTAMP/DECIMAL keys; json.dump can't take those. Stats round-
-# trip through a small type tag so read_table_where/commit_upsert_cow
+# trip through a small type tag so read_table_where/commit_merge
 # compare the SAME Python types the caller's bounds have.
 
 
@@ -402,10 +406,20 @@ def read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
     LOGICAL schema — so time travel across a rename shows each
     version's own names (Delta column-mapping semantics)."""
     man = _read_manifest(path, version)
-    files = [os.path.join(path, "data", name) for name in man["files"]]
-    if not files:
+    return _scan_files(spark, path, man, man["files"])
+
+
+def _scan_files(
+    spark: SparkSession, path: str, man: dict, names: list[str]
+) -> DataFrame:
+    """The named files of ``man`` under its logical schema, with the
+    manifest's deletion vectors applied — the one read every snapshot,
+    pruned and copy-on-write scan goes through."""
+    if not names:
         return spark.createDataFrame([], man["schema_ddl"])
-    df = spark.read.schema(_physical_ddl(man)).parquet(*files)
+    df = spark.read.schema(_physical_ddl(man)).parquet(
+        *[os.path.join(path, "data", n) for n in names]
+    )
     return _to_logical(_apply_dvs(spark, path, man, df), man)
 
 
@@ -572,19 +586,10 @@ def commit_append(
         out,
         path,
         base,
-        stats_col=prev0.get("stats_col"),
         carried=prev0.get("files", []),
-        carried_stats=prev0.get("stats", {}),
-        stats_cols=prev0.get("stats_cols"),
-        carried_col_stats=prev0.get("col_stats", {}),
         # a bloom spec set at table creation (commit_append_with_bloom)
         # is inherited by every later append, like the zone-map columns
         bloom_spec=prev0.get("bloom_spec") or bloom_spec,
-        carried_blooms=prev0.get("blooms", {}),
-        # carried files keep their deletion vectors; new files are
-        # fresh appends no DV row can reference
-        carried_dvs=prev0.get("dvs"),
-        dv_key=prev0.get("dv_key"),
         extra_meta=extra,
         cdc="append",
         op="append",
@@ -768,8 +773,7 @@ def maintain_table(
         # files already out of the manifest) so reads stop loading it.
         # The "needing nothing publishes nothing" rule is the OUTER
         # threshold gate.
-        dv_refs = _dv_referenced_files(spark, path, man.get("dvs", []))
-        rewrite = set(small) | (dv_refs & set(man["files"]))
+        rewrite = set(small) | _dv_live_refs(path, man)
         total = sum(sizes[n] for n in rewrite)
         parts = max(1, -(-total // target_file_bytes))  # ceil
         commit_compact_files(
@@ -778,7 +782,6 @@ def maintain_table(
             sorted(rewrite),
             target_partitions=int(parts),
             expected_base=v,
-            dv_refs=dv_refs,  # spare compaction the second DV scan
             zorder_by=zorder_by,
         )
         head = _read_manifest(path, current_version(path))
@@ -881,52 +884,14 @@ def commit_upsert(
     expected_base: int | None = None,
 ) -> int:
     """MERGE semantics: rows in ``df`` replace same-key rows in the
-    current snapshot; unmatched rows append. Publishes one new
-    version whose manifest references ONLY the rewritten file set, so
-    readers switch snapshots atomically.
-
-    This -lite core rewrites the full surviving row set (correct at
-    any size, efficient at modest size). The production copy-on-write
-    refinement — rewrite only the files whose key-range stats overlap
-    the update keys, carry the rest forward by reference — changes
-    which files land in the manifest, not the protocol.
-    """
+    current snapshot; unmatched rows append. This is ``commit_merge``
+    with its default clauses (same copy-on-write core, so a
+    zone-mapped table rewrites only the files that may hold a batch
+    key), labelled ``upsert`` in the table history. Publishes one new
+    version, so readers switch snapshots atomically; creates the
+    table when no version exists yet."""
     base = current_version(path) if expected_base is None else expected_base
-    prev = _read_manifest(path, base) if base >= 0 else {}
-    enforce_expectations(df, prev.get("expectations", {}))
-    dup = _duplicate_key_example(df, key)
-    if dup:
-        raise ValueError(
-            f"upsert batch has duplicate key {dup[0][key]!r}; a key "
-            "must match at most one batch row (MERGE semantics — and "
-            "a duplicated key would emit cross-joined CDC pairs)"
-        )
-    if base >= 0:
-        target = read_version(spark, path, base)
-        survivors = target.join(df.select(key), key, "left_anti")
-        merged = survivors.unionByName(df)
-        cols = [f.name for f in target.schema]
-        # change rows are computed (and their pre-image join paid)
-        # only when the table opted into the feed
-        if prev.get("change_feed"):
-            cdc = _cdc_upsert_changes(target, df.select(*cols), key, cols)
-        else:
-            cdc = "unrecorded"
-    else:
-        merged = df
-        cdc = "append"
-    return _commit_replace(
-        spark,
-        merged,
-        path,
-        base,
-        stats_col=prev.get("stats_col"),
-        stats_cols=prev.get("stats_cols"),
-        bloom_spec=prev.get("bloom_spec"),
-        extra_meta=_carry_meta(prev),
-        cdc=cdc,
-        op="upsert",
-    )
+    return _merge(spark, df, path, key, base, "upsert")
 
 
 def stream_to_txn(
@@ -963,61 +928,8 @@ def stream_to_txn(
     )
 
 
-def commit_compact(
-    spark: SparkSession,
-    path: str,
-    target_partitions: int = 1,
-    expected_base: int | None = None,
-) -> int:
-    """Compaction as a transaction: rewrite the CURRENT rows into
-    ``target_partitions`` files and publish a version whose manifest
-    references only the compacted set. Row content is unchanged (the
-    small-file fix of operators/layout.py:compact, now atomic):
-    readers on old versions keep their exact file lists, new readers
-    see the compacted layout, and a concurrent append loses the CAS
-    race cleanly instead of interleaving with the rewrite."""
-    base = current_version(path) if expected_base is None else expected_base
-    current = read_version(spark, path, base).coalesce(target_partitions)
-    prev = _read_manifest(path, base) if base >= 0 else {}
-    return _commit_replace(
-        spark,
-        current,
-        path,
-        base,
-        stats_col=prev.get("stats_col"),
-        stats_cols=prev.get("stats_cols"),
-        bloom_spec=prev.get("bloom_spec"),
-        extra_meta=_carry_meta(prev),
-        # row-preserving rewrite: dataChange=false, the change feed
-        # skips this version entirely
-        cdc="none",
-        op="compact",
-    )
-
-
-def _dv_referenced_files(spark: SparkSession, path: str, dvs: list) -> set:
-    """Distinct file names the deletion-vector rows reference — one
-    scan of the (delete-batch-sized) DV set, file names only, never
-    data-sized driver traffic."""
-    if not dvs:
-        return set()
-    return {
-        r["file_name"]
-        for r in spark.read.parquet(
-            *[os.path.join(path, "data", n) for n in dvs]
-        )
-        .select("file_name")
-        .distinct()
-        .collect()
-    }
-
-
 def _dvs_still_needed(
-    spark: SparkSession,
-    path: str,
-    man: dict,
-    carried: list[str],
-    dv_refs: set | None = None,
+    path: str, man: dict, carried: list[str], staged: bool
 ) -> bool:
     """True when some deletion-vector row still references a file the
     commit carries forward BY REFERENCE. When every DV-referenced file
@@ -1025,103 +937,81 @@ def _dvs_still_needed(
     the list must NOT carry — inert DV files would otherwise stay in
     the manifest and every subsequent read would keep loading them in
     ``_apply_dvs``' broadcast anti-join until a maintenance cycle
-    clears them (r7 advice: upsert/replace-where carried them
-    unconditionally). ``dv_refs`` lets a caller that already scanned
-    the DV set (maintain_table) pass it down instead of re-reading."""
-    dvs = man.get("dvs") or []
-    if not dvs or not carried:
+    clears them. An append-shaped commit (it carries every file and
+    ``staged`` new ones) cannot make a DV row inert, so it keeps the
+    list without reading it; a commit that rewrites nothing and stages
+    nothing re-checks — how maintenance drops a list no file needs."""
+    if not man.get("dvs") or not carried:
         return False
-    ref = (
-        _dv_referenced_files(spark, path, dvs) if dv_refs is None else dv_refs
-    )
-    return bool(ref & set(carried))
+    if staged and len(carried) == len(man["files"]):
+        return True
+    return bool(_dv_live_refs(path, man) & set(carried))
 
 
 def commit_compact_files(
     spark: SparkSession,
     path: str,
-    files_to_rewrite: list[str],
+    files_to_rewrite: list[str] | None = None,
     target_partitions: int = 1,
     expected_base: int | None = None,
-    dv_refs: set | None = None,
     zorder_by: list[str] | None = None,
 ) -> int:
-    """PARTIAL compaction: rewrite only the named files (with their
-    deletion vectors materialized away) into ``target_partitions``
-    files; every other file carries forward BY REFERENCE with its
-    zone-map stats and Bloom bits. This is the OPTIMIZE shape at
-    scale — bin-pack the stragglers, never rewrite the healthy 99% —
-    where ``commit_compact`` is the full-table rewrite. DV rows
-    referencing carried files keep applying; when every DV-referenced
-    file is in the rewrite set, the vector list clears entirely.
-    Row-preserving (``cdc`` mode ``none``).
+    """Compaction as a transaction: rewrite the named files (default:
+    every file) with their deletion vectors materialized away into
+    ``target_partitions`` files; every other file carries forward BY
+    REFERENCE with its zone-map stats and Bloom bits. Row content is
+    unchanged: readers on old versions keep their exact file lists,
+    new readers see the compacted layout, and a concurrent writer
+    loses the CAS race cleanly. Naming only the stragglers is the
+    OPTIMIZE shape at scale — bin-pack them, never rewrite the healthy
+    99%. DV rows referencing carried files keep applying; when every
+    DV-referenced file is in the rewrite set, the vector list clears
+    entirely. Row-preserving (``cdc`` mode ``none``).
 
     ``zorder_by`` (Delta ``OPTIMIZE ... ZORDER BY`` parity): the
     rewritten rows are laid out along the Morton curve of the named
     logical columns (operators/zorder.cluster_by_zorder — one range
     repartition + in-partition sort, the same shuffle price as the
     compaction itself) and those columns join the manifest's
-    ``stats_cols``, so ``read_table_where_multi`` prunes
-    multiplicatively on every clustered dimension afterwards. Like
-    Delta, clustering is incremental: only THIS pass's rewrite set is
-    clustered; carried files keep their old layout (and, lacking the
-    new column stats, scan conservatively until their turn). The
-    zvalue caller contract applies: non-negative ints fitting the
-    bit budget — bucket or rank wider domains first."""
+    ``stats_cols``, so ``read_table_within`` prunes multiplicatively
+    on every clustered dimension afterwards. Like Delta, clustering
+    is incremental: only THIS pass's rewrite set is clustered; carried
+    files keep their old layout (and, lacking the new column stats,
+    scan conservatively until their turn). The zvalue caller contract
+    applies: non-negative ints fitting the bit budget — bucket or rank
+    wider domains first."""
     base = current_version(path) if expected_base is None else expected_base
     if base < 0:
         raise FileNotFoundError(f"no committed version under {path}")
     man = _read_manifest(path, base)
-    rewrite = set(files_to_rewrite)
+    rewrite = set(man["files"] if files_to_rewrite is None else files_to_rewrite)
     unknown = rewrite - set(man["files"])
     if unknown:
         raise ValueError(f"not in manifest: {sorted(unknown)[:5]}")
-    carried = [n for n in man["files"] if n not in rewrite]
-    if rewrite:
-        tfiles = [os.path.join(path, "data", n) for n in sorted(rewrite)]
-        merged = _to_logical(
-            _apply_dvs(
-                spark,
-                path,
-                man,
-                spark.read.schema(_physical_ddl(man)).parquet(*tfiles),
-            ),
-            man,
-        )
-        if zorder_by:
-            from qb_data_pipeline_backfill_spark.operators.zorder import (
-                cluster_by_zorder,
-            )
-
-            merged = cluster_by_zorder(merged, zorder_by, target_partitions)
-        else:
-            merged = merged.coalesce(target_partitions)
-    else:
-        merged = read_version(spark, path, base).limit(0)
-    keep_dvs = _dvs_still_needed(spark, path, man, carried, dv_refs=dv_refs)
-    stats = man.get("stats", {})
-    col_stats = man.get("col_stats", {})
-    blooms = man.get("blooms", {})
-    stats_cols = list(man.get("stats_cols") or [])
+    merged = _scan_files(spark, path, man, sorted(rewrite))
+    stats_cols = man.get("stats_cols")
     if zorder_by:
-        stats_cols = sorted(
-            set(stats_cols) | {_phys(man, c) for c in zorder_by}
+        from qb_data_pipeline_backfill_spark.operators.zorder import (
+            cluster_by_zorder,
         )
+
+        if rewrite:
+            merged = cluster_by_zorder(merged, zorder_by, target_partitions)
+        stats_cols = sorted(
+            set(stats_cols or []) | {_phys(man, c) for c in zorder_by}
+        )
+    else:
+        merged = merged.coalesce(target_partitions)
     return _commit_replace(
         spark,
         merged,
         path,
         base,
-        stats_col=man.get("stats_col"),
-        carried=carried,
-        carried_stats={n: stats[n] for n in carried if n in stats},
-        stats_cols=stats_cols or None,
-        carried_col_stats={n: col_stats[n] for n in carried if n in col_stats},
-        bloom_spec=man.get("bloom_spec"),
-        carried_blooms={n: blooms[n] for n in carried if n in blooms},
-        carried_dvs=man.get("dvs") if keep_dvs else None,
-        dv_key=man.get("dv_key") if keep_dvs else None,
+        carried=[n for n in man["files"] if n not in rewrite],
+        stats_cols=stats_cols,
         extra_meta=_carry_meta(man),
+        # row-preserving rewrite: dataChange=false, the change feed
+        # skips this version entirely
         cdc="none",
         op="compact",
     )
@@ -1151,12 +1041,7 @@ def compact_where(
     if base < 0:
         raise FileNotFoundError(f"no committed version under {path}")
     man = _read_manifest(path, base)
-    chosen, _colname = _choose_files(
-        man,
-        _norm_stat(lo),
-        _norm_stat(hi),
-        _phys(man, col) if col is not None else None,
-    )
+    chosen = _choose_files(man, _physical_bounds(man, {col: (lo, hi)}))
     if not chosen:
         return base
     return commit_compact_files(
@@ -1357,8 +1242,8 @@ def _bloom_file_hit(words: list[list[int]], positions: list[int]) -> bool:
 def _duplicate_key_example(df: DataFrame, key: str) -> list:
     """A 1-row sample of a duplicated ``key`` value ([] when unique) —
     one map-side-combined aggregate with an existence limit; the
-    shared probe behind MERGE's unique-source contract and
-    replace_where's keyed-CDC fallback."""
+    probe behind the snapshot diff's keyed-CDC fallback (MERGE's
+    unique-source check rides in ``_probe_source`` instead)."""
     from pyspark.sql import functions as FF
 
     return (
@@ -1478,27 +1363,29 @@ def _commit_replace(
     merged: DataFrame,
     path: str,
     base: int,
+    *,
+    carried: list[str] = (),
     stats_col: str | None = None,
-    carried: list[str] | None = None,
-    carried_stats: dict[str, list] | None = None,
     stats_cols: list[str] | None = None,
-    carried_col_stats: dict[str, dict] | None = None,
     bloom_spec: dict | None = None,
-    carried_blooms: dict | None = None,
-    carried_dvs: list | None = None,
-    dv_key: str | None = None,
     extra_meta: dict | None = None,
     cdc: "str | DataFrame | None" = None,
     op: str | None = None,
 ) -> int:
     """Publish ``merged``'s rewrite as version base+1: the manifest
-    references the newly staged files plus any ``carried`` files
-    (copy-on-write: untouched files move forward by reference, with
-    their zone-map stats). With ``stats_col``, per-file [min, max] of
-    that column is read from each staged parquet footer and stored in
-    the manifest for file skipping; ``stats_cols`` records the same
-    for additional columns (``col_stats`` in the manifest) so
-    ``read_table_where(col=...)`` can prune on non-key predicates.
+    references the newly staged files plus the ``carried`` files of
+    the base manifest (copy-on-write: untouched files move forward by
+    reference). With ``stats_col``, per-file [min, max] of that column
+    is read from each staged parquet footer and stored in the manifest
+    for file skipping; ``stats_cols`` records the same for additional
+    columns (``col_stats`` in the manifest) so ``read_table_where(
+    col=...)`` can prune on non-key predicates. ``stats_col``,
+    ``stats_cols`` and ``bloom_spec`` default to the base manifest's.
+
+    The carry-forward policy lives here, in one place: each carried
+    file keeps its base-manifest zone maps, Bloom bits, row and null
+    counts, and the base's deletion vectors carry while some DV row
+    still references a carried file (``_dvs_still_needed``).
 
     ``cdc`` records the commit's change-data-capture metadata (read by
     ``sources/txn_cdf.py``): ``"append"`` declares the newly staged
@@ -1515,33 +1402,34 @@ def _commit_replace(
     stage_dir = os.path.join(path, "_staging", stage_id)
     _to_physical_df(merged, cmap).write.mode("overwrite").parquet(stage_dir)
     new_files: list[str] = []
-    stats: dict[str, list] = dict(carried_stats or {})
-    col_stats: dict[str, dict] = dict(carried_col_stats or {})
-    blooms: dict[str, list] = dict(carried_blooms or {})
+    prev_man = _read_manifest(path, base) if base >= 0 else {}
+    stats_col = stats_col or prev_man.get("stats_col")
+    stats_cols = stats_cols or prev_man.get("stats_cols")
+    bloom_spec = bloom_spec or prev_man.get("bloom_spec")
+
+    def _carry(field: str, same_index: bool = True) -> dict:
+        have = prev_man.get(field, {}) if same_index else {}
+        return {f: have[f] for f in carried if f in have}
+
+    # a carried file's zone map / Bloom bits are only meaningful under
+    # the column (spec) they were computed for
+    stats = _carry("stats", prev_man.get("stats_col") == stats_col)
+    col_stats = _carry("col_stats")
+    blooms = _carry("blooms", prev_man.get("bloom_spec") == bloom_spec)
     # per-file row counts (Delta numRecords analog): the footer read
     # already happens for the zero-row check, so recording it is free;
     # carried files inherit the base manifest's count (footer fallback
     # for pre-feature manifests), and snapshot_row_count answers
     # COUNT(*) from metadata alone
-    prev_man = _read_manifest(path, base) if base >= 0 else {}
-    prev_counts = prev_man.get("row_counts", {})
     row_counts: dict[str, int] = {
-        f: (
-            prev_counts[f]
-            if f in prev_counts
-            else _parquet_num_rows(os.path.join(path, "data", f))
-        )
-        for f in (carried or [])
+        f: _file_row_count(path, prev_man, f) for f in carried
     }
     # per-file NULL counts for the zone-mapped columns (Delta's
     # nullCount stats analog): recorded from the same footer at commit
     # time so count_where's full-keep proof needs no query-time footer
     # reads; carried files inherit (absent entries fall back to a
     # footer read at query time — pre-feature manifests)
-    prev_nulls = prev_man.get("null_counts", {})
-    null_counts: dict[str, dict] = {
-        f: prev_nulls[f] for f in (carried or []) if f in prev_nulls
-    }
+    null_counts: dict[str, dict] = _carry("null_counts")
     null_cols = list(
         dict.fromkeys(([stats_col] if stats_col else []) + list(stats_cols or []))
     )
@@ -1598,7 +1486,7 @@ def _commit_replace(
             blooms[unique] = staged_blooms[name]
     manifest = {
         "version": base + 1,
-        "files": (carried or []) + new_files,
+        "files": list(carried) + new_files,
         "schema_ddl": ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in merged.schema
         ),
@@ -1617,9 +1505,9 @@ def _commit_replace(
     if bloom_spec:
         manifest["bloom_spec"] = bloom_spec
         manifest["blooms"] = blooms
-    if carried_dvs:
-        manifest["dvs"] = carried_dvs
-        manifest["dv_key"] = dv_key
+    if _dvs_still_needed(path, prev_man, carried, bool(new_files)):
+        manifest["dvs"] = prev_man["dvs"]
+        manifest["dv_key"] = prev_man["dv_key"]
     if extra_meta:
         manifest.update(extra_meta)
     # the commit's operation label (DESCRIBE HISTORY parity) is
@@ -1667,18 +1555,18 @@ def commit_delete(
     expected_base: int | None = None,
 ) -> int:
     """Delete-by-key as a transaction (the right-to-be-forgotten
-    primitive a training-data pipeline must support): survivors of the
-    touched files anti-joined against ``keys``, published in one
-    atomic snapshot switch.
+    primitive a training-data pipeline must support): every row whose
+    key is in ``keys`` (duplicates allowed) departs in one atomic
+    snapshot switch.
 
-    Copy-on-write file pruning (round 7): on a table whose zone-map
-    stats are keyed on ``key``, only files whose key interval contains
-    a delete key are rewritten (per-file probe, same machinery as
-    ``commit_upsert_cow``); every other file — at scale, almost all —
-    carries forward by reference with its stats, Bloom bits, and
-    deletion vectors. A stats-less table falls back to the full
-    rewrite. Compare ``commit_delete_mor``: that defers even the
-    touched-file rewrite by recording deletion vectors instead.
+    The keys feed ``commit_merge``'s copy-on-write core as departures:
+    on a table whose zone-map stats are keyed on ``key``, only files
+    whose key interval contains a delete key are rewritten; every
+    other file — at scale, almost all — carries forward by reference
+    with its stats, Bloom bits, and deletion vectors. A stats-less
+    table rewrites every file. Compare ``commit_delete_mor``: that
+    defers even the touched-file rewrite by recording deletion vectors
+    instead.
 
     Note the retention interaction: deleted rows remain readable via
     time travel on OLD versions until those manifests are retired —
@@ -1688,67 +1576,8 @@ def commit_delete(
     base = current_version(path) if expected_base is None else expected_base
     if base < 0:
         raise FileNotFoundError(f"no committed version under {path}")
-    from pyspark.sql import functions as FF
-
-    prev = _read_manifest(path, base)
-    if prev.get("stats_col") == _phys(prev, key) and prev["files"]:
-        touched = _touched_files_by_probe(spark, prev, keys.select(key), key)
-        untouched = [n for n in prev["files"] if n not in set(touched)]
-        if touched:
-            tfiles = [os.path.join(path, "data", n) for n in touched]
-            target = _to_logical(
-                _apply_dvs(
-                    spark,
-                    path,
-                    prev,
-                    spark.read.schema(_physical_ddl(prev)).parquet(*tfiles),
-                ),
-                prev,
-            )
-        else:
-            target = read_version(spark, path, base).limit(0)
-    else:
-        touched, untouched = list(prev["files"]), []
-        target = read_version(spark, path, base)
-    survivors = target.join(keys.select(key), key, "left_anti")
-    # CDC: the departed rows (visible-at-base rows matching the delete
-    # keys, all of which live in touched files), with their pre-delete
-    # values — replaying the same delete finds no visible matches and
-    # records an empty change set. Computed only for feed-enabled
-    # tables; a probe that touched nothing is a row-preserving no-op.
-    if not touched:
-        cdc = "none"
-    elif prev.get("change_feed"):
-        cdc = target.join(keys.select(key), key, "left_semi").withColumn(
-            "_change_type", FF.lit("delete")
-        )
-    else:
-        cdc = "unrecorded"
-    _keep_dvs = _dvs_still_needed(spark, path, prev, untouched)
-    stats = prev.get("stats", {})
-    col_stats = prev.get("col_stats", {})
-    blooms = prev.get("blooms", {})
-    return _commit_replace(
-        spark,
-        survivors,
-        path,
-        base,
-        stats_col=prev.get("stats_col"),
-        carried=untouched,
-        carried_stats={n: stats[n] for n in untouched if n in stats},
-        stats_cols=prev.get("stats_cols"),
-        carried_col_stats={n: col_stats[n] for n in untouched if n in col_stats},
-        bloom_spec=prev.get("bloom_spec"),
-        carried_blooms={n: blooms[n] for n in untouched if n in blooms},
-        # DV rows for rewritten files go inert; carry the list (and
-        # its key, same convention as upsert/replace-where) only while
-        # some row still references a carried file — the full-rewrite
-        # fallback and reference-free lists carry none.
-        carried_dvs=prev.get("dvs") if _keep_dvs else None,
-        dv_key=prev.get("dv_key") if _keep_dvs else None,
-        extra_meta=_carry_meta(prev),
-        cdc=cdc,
-        op="delete",
+    return _merge(
+        spark, keys.select(key), path, key, base, "delete", delete_keys=True
     )
 
 
@@ -1764,7 +1593,8 @@ def commit_append_with_stats(
     """Keyed idempotent append that also records per-file [min, max]
     zone-map stats of ``key`` in the manifest (read from the parquet
     footers — no extra data scan), enabling ``read_table_where`` file
-    skipping and ``commit_upsert_cow`` partial rewrites.
+    skipping and copy-on-write MERGE / delete rewrites of only the
+    files a batch's keys can touch.
 
     ``extra_cols`` records secondary zone maps too (Delta collects
     stats for its first N columns the same way), so
@@ -1793,57 +1623,97 @@ def commit_append_with_stats(
         out,
         path,
         base,
-        stats_col=_phys(man, key),
         carried=man.get("files", []),
-        carried_stats=man.get("stats", {}),
+        stats_col=_phys(man, key),
         stats_cols=stats_cols,
-        carried_col_stats=man.get("col_stats", {}),
-        bloom_spec=man.get("bloom_spec"),
-        carried_blooms=man.get("blooms", {}),
-        carried_dvs=man.get("dvs"),
-        dv_key=man.get("dv_key"),
         extra_meta={**_carry_meta(man), **feed, **schema},
         cdc="append",
         op="append",
     )
 
 
-def _choose_files(man: dict, lo, hi, col: str | None) -> tuple[list[str], str]:
-    """(files overlapping [lo, hi] on ``col``, resolved column).
-
-    col=None resolves to the primary key zone map; otherwise the
-    column must be in the manifest's ``stats_cols`` set. Files without
-    stats for the column are scanned conservatively. All orderings go
-    through ``_cmp_stat`` so a date-widened column's mixed
-    date/datetime stats stay comparable."""
-    lo, hi = _cmp_stat(lo), _cmp_stat(hi)
+def _zone_map(man: dict, col: str | None) -> tuple[str, "callable"]:
+    """``(physical column, file -> [min, max] or None)`` for the zone
+    map on physical ``col``. None (or the key's own column) is the
+    primary key zone map; any other column must be in the manifest's
+    ``stats_cols`` set."""
     primary = man.get("stats_col")
     if col is None or col == primary:
         if primary is None:
             raise ValueError("table has no zone-map stats")
-        stats = man.get("stats", {})
-        return [
-            n
-            for n in man["files"]
-            if n not in stats
-            or not (
-                _cmp_stat(stats[n][1]) < lo or _cmp_stat(stats[n][0]) > hi
-            )
-        ], primary
+        return primary, man.get("stats", {}).get
     if col not in (man.get("stats_cols") or []):
         raise ValueError(
             f"no zone-map stats for column {col!r}; recorded: "
             f"{[primary] + (man.get('stats_cols') or [])}"
         )
     col_stats = man.get("col_stats", {})
-    chosen = []
-    for n in man["files"]:
-        pair = col_stats.get(n, {}).get(col)
-        if pair is None or not (
-            _cmp_stat(pair[1]) < lo or _cmp_stat(pair[0]) > hi
-        ):
-            chosen.append(n)
-    return chosen, col
+    return col, lambda n: col_stats.get(n, {}).get(col)
+
+
+def _physical_bounds(man: dict, bounds: dict) -> dict[str, tuple]:
+    """Logical ``{col: (lo, hi)}`` bounds (col None = the key) keyed
+    on their zone-mapped physical columns instead, with tz-aware
+    timestamp bounds normalized to naive UTC like the stats."""
+    return {
+        _zone_map(man, None if c is None else _phys(man, c))[0]: (
+            _norm_stat(lo),
+            _norm_stat(hi),
+        )
+        for c, (lo, hi) in bounds.items()
+    }
+
+
+def _choose_files(man: dict, bounds: dict[str, tuple]) -> list[str]:
+    """Files whose zone map overlaps every physical ``{col: (lo, hi)}``
+    bound — the one chooser behind pruned reads, pruned-file counts
+    and ``compact_where``. A file without stats for a column is kept
+    (scanned conservatively). All orderings go through ``_cmp_stat``
+    so a date-widened column's mixed date/datetime stats stay
+    comparable."""
+    checks = [
+        (_zone_map(man, c)[1], _cmp_stat(lo), _cmp_stat(hi))
+        for c, (lo, hi) in bounds.items()
+    ]
+
+    def overlaps(n: str) -> bool:
+        for stats_of, lo, hi in checks:
+            pair = stats_of(n)
+            if pair is not None and (
+                _cmp_stat(pair[1]) < lo or _cmp_stat(pair[0]) > hi
+            ):
+                return False
+        return True
+
+    return [n for n in man["files"] if overlaps(n)]
+
+
+def read_table_within(
+    spark: SparkSession,
+    path: str,
+    bounds: dict,
+    version: int | None = None,
+) -> DataFrame:
+    """Snapshot read pruned by the manifest's zone maps: a file is
+    scanned only if its [min, max] overlaps every ``{col: (lo, hi)}``
+    bound (col None = the key; files without stats are scanned
+    conservatively), then the exact predicates filter residual rows.
+    The manifest IS the data-skipping index — no footer reads, no
+    directory listing. With a Morton-clustered layout
+    (operators/zorder.py ``cluster_by_zorder``) each file's bounding
+    box is tight on every clustered dimension, so a k-dimensional
+    range predicate prunes multiplicatively — the lakehouse z-order +
+    data-skipping combination, here as composable engine pieces."""
+    from pyspark.sql import functions as FF
+
+    v = current_version(path) if version is None else version
+    man = _read_manifest(path, v)
+    pb = _physical_bounds(man, bounds)
+    out = _scan_files(spark, path, man, _choose_files(man, pb))
+    for c, (lo, hi) in pb.items():
+        c = _logical_of(man, c)
+        out = out.filter((FF.col(c) >= lo) & (FF.col(c) <= hi))
+    return out
 
 
 def read_table_where(
@@ -1854,215 +1724,29 @@ def read_table_where(
     version: int | None = None,
     col: str | None = None,
 ) -> DataFrame:
-    """Snapshot read pruned by the manifest's zone maps: only files
-    whose [min, max] range overlaps [lo, hi] are scanned (files
-    without stats are scanned conservatively), then the exact
-    predicate filters residual rows. The manifest IS the data-
-    skipping index — no footer reads, no directory listing.
-    ``col`` prunes on a secondary zone map (default: the key)."""
-    v = current_version(path) if version is None else version
-    man = _read_manifest(path, v)
-    lo, hi = _norm_stat(lo), _norm_stat(hi)
-    # ``col`` is logical; zone maps are keyed on physical names
-    chosen, colname = _choose_files(
-        man, lo, hi, _phys(man, col) if col is not None else None
-    )
-    from pyspark.sql import functions as FF
-
-    if not chosen:
-        empty = spark.createDataFrame([], man["schema_ddl"])
-        return empty
-    files = [os.path.join(path, "data", n) for n in chosen]
-    scanned = _apply_dvs(
-        spark, path, man, spark.read.schema(_physical_ddl(man)).parquet(*files)
-    ).filter((FF.col(colname) >= lo) & (FF.col(colname) <= hi))
-    return _to_logical(scanned, man)
+    """``read_table_within`` on one column: ``col`` (default: the key)
+    between ``lo`` and ``hi``."""
+    return read_table_within(spark, path, {col: (lo, hi)}, version)
 
 
-def read_table_where_multi(
-    spark: SparkSession,
-    path: str,
-    bounds: dict[str, tuple],
-    version: int | None = None,
-) -> DataFrame:
-    """Snapshot read pruned on SEVERAL columns at once: a file is
-    scanned only if its zone map overlaps every ``col: (lo, hi)``
-    bound. With a Morton-clustered layout (operators/zorder.py
-    ``cluster_by_zorder``) each file's bounding box is tight on every
-    clustered dimension, so a k-dimensional range predicate prunes
-    multiplicatively — the lakehouse z-order + data-skipping
-    combination, here as composable engine pieces."""
-    v = current_version(path) if version is None else version
-    man = _read_manifest(path, v)
-    chosen = list(man["files"])
-    norm: dict[str, tuple] = {}
-    for col, (lo, hi) in bounds.items():
-        lo, hi = _norm_stat(lo), _norm_stat(hi)
-        norm[_phys(man, col)] = (lo, hi)
-        keep, _ = _choose_files(man, lo, hi, _phys(man, col))
-        keep_set = set(keep)
-        chosen = [n for n in chosen if n in keep_set]
-    if not chosen:
-        return spark.createDataFrame([], man["schema_ddl"])
-    from pyspark.sql import functions as FF
-
-    out = _apply_dvs(
-        spark,
-        path,
-        man,
-        spark.read.schema(_physical_ddl(man)).parquet(
-            *[os.path.join(path, "data", n) for n in chosen]
-        ),
-    )
-    for col, (lo, hi) in norm.items():
-        out = out.filter((FF.col(col) >= lo) & (FF.col(col) <= hi))
-    return _to_logical(out, man)
-
-
-def pruned_file_count_multi(
-    path: str, bounds: dict[str, tuple], version: int | None = None
+def pruned_file_count_within(
+    path: str, bounds: dict, version: int | None = None
 ) -> tuple[int, int]:
-    """(files scanned, files total) for a multi-column range predicate."""
+    """(files scanned, files total) for ``read_table_within``'s
+    bounds — the observability hook for skipping effectiveness."""
     v = current_version(path) if version is None else version
     man = _read_manifest(path, v)
-    chosen = set(man["files"])
-    for col, (lo, hi) in bounds.items():
-        keep, _ = _choose_files(
-            man, _norm_stat(lo), _norm_stat(hi), _phys(man, col)
-        )
-        chosen &= set(keep)
-    return len(chosen), len(man["files"])
+    return len(_choose_files(man, _physical_bounds(man, bounds))), len(
+        man["files"]
+    )
 
 
 def pruned_file_count(
     path: str, lo, hi, version: int | None = None, col: str | None = None
 ) -> tuple[int, int]:
-    """(files scanned, files total) for a [lo, hi] predicate on the
-    key (default) or a secondary stats column — the observability hook
-    for skipping effectiveness."""
-    v = current_version(path) if version is None else version
-    man = _read_manifest(path, v)
-    lo, hi = _norm_stat(lo), _norm_stat(hi)
-    chosen, _ = _choose_files(
-        man, lo, hi, _phys(man, col) if col is not None else None
-    )
-    return len(chosen), len(man["files"])
-
-
-def commit_upsert_cow(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    key: str,
-    expected_base: int | None = None,
-) -> int:
-    """Copy-on-write MERGE with file pruning: only files whose key
-    zone map overlaps the update batch's key range are rewritten
-    (their survivors + the updates become new files); every other
-    file — at scale, almost all of them — moves to the new version BY
-    REFERENCE with its stats intact. This is the production
-    refinement commit_upsert's docstring promises: same protocol,
-    same atomic publish, rewrite cost proportional to the touched key
-    range instead of the table.
-    """
-    base = current_version(path) if expected_base is None else expected_base
-    if base < 0:
-        return commit_append_with_stats(spark, df, path, key)
-    man = _read_manifest(path, base)
-    # the CHECK contract holds on every write path: _carry_meta forwards
-    # the expectations key, so the incoming batch must satisfy it here
-    # too (ADVICE r5: carrying the contract without enforcing it would
-    # let violating rows through the CoW MERGE path)
-    enforce_expectations(df, man.get("expectations", {}))
-    if man.get("stats_col") != _phys(man, key):
-        raise ValueError(
-            f"table at {path} lacks zone-map stats on {key!r}; "
-            "write it with commit_append_with_stats/commit_upsert_cow"
-        )
-    from pyspark.sql import functions as FF
-
-    dup = _duplicate_key_example(df, key)
-    if dup:
-        raise ValueError(
-            f"upsert batch has duplicate key {dup[0][key]!r}; a key "
-            "must match at most one batch row (MERGE semantics — and "
-            "a duplicated key would emit cross-joined CDC pairs)"
-        )
-    if df.limit(1).count() == 0:  # empty update batch: nothing to rewrite
-        return _commit_replace(
-            spark,
-            read_version(spark, path, base).limit(0),
-            path,
-            base,
-            stats_col=_phys(man, key),
-            carried=man["files"],
-            carried_stats=man.get("stats", {}),
-            stats_cols=man.get("stats_cols"),
-            carried_col_stats=man.get("col_stats", {}),
-            bloom_spec=man.get("bloom_spec"),
-            carried_blooms=man.get("blooms", {}),
-            carried_dvs=man.get("dvs"),
-            dv_key=man.get("dv_key"),
-            extra_meta=_carry_meta(man),
-            cdc="none",
-            op="upsert",
-        )
-    stats = man.get("stats", {})
-    # per-file interval probing, not the batch's [lo, hi] envelope —
-    # a batch mixing low and high keys otherwise touches everything
-    touched = _touched_files_by_probe(spark, man, df.select(key), key)
-    untouched = [n for n in man["files"] if n not in set(touched)]
-    cols = [f.split(" ")[0] for f in man["schema_ddl"].split(", ")]
-    if touched:
-        tfiles = [os.path.join(path, "data", n) for n in touched]
-        current = _to_logical(
-            _apply_dvs(
-                spark,
-                path,
-                man,
-                spark.read.schema(_physical_ddl(man)).parquet(*tfiles),
-            ),
-            man,
-        )
-        survivors = current.join(df.select(key), key, "left_anti")
-        merged = survivors.unionByName(df)
-        # CDC against the touched files only: zone-map containment
-        # guarantees any existing row with an update key lives in a
-        # touched file, so the net change is complete. Feed-gated.
-        if man.get("change_feed"):
-            cdc = _cdc_upsert_changes(current, df.select(*cols), key, cols)
-        else:
-            cdc = "unrecorded"
-    else:
-        merged = df
-        # no existing file can hold these keys: every row is an insert
-        # and the commit is append-shaped — the staged data files ARE
-        # the change rows (zero extra bytes, feed-readable either way)
-        cdc = "append"
-    _keep_dvs = _dvs_still_needed(spark, path, man, untouched)
-    col_stats = man.get("col_stats", {})
-    blooms = man.get("blooms", {})
-    return _commit_replace(
-        spark,
-        merged,
-        path,
-        base,
-        stats_col=_phys(man, key),
-        carried=untouched,
-        carried_stats={n: stats[n] for n in untouched if n in stats},
-        stats_cols=man.get("stats_cols"),
-        carried_col_stats={n: col_stats[n] for n in untouched if n in col_stats},
-        bloom_spec=man.get("bloom_spec"),
-        carried_blooms={n: blooms[n] for n in untouched if n in blooms},
-        # DV rows for untouched files must keep applying; when no DV
-        # row references a carried file the (inert) list drops here
-        # instead of taxing every later read until maintenance
-        carried_dvs=man.get("dvs") if _keep_dvs else None,
-        dv_key=man.get("dv_key") if _keep_dvs else None,
-        extra_meta=_carry_meta(man),
-        cdc=cdc,
-        op="upsert",
-    )
+    """``pruned_file_count_within`` on one column: ``col`` (default:
+    the key) between ``lo`` and ``hi``."""
+    return pruned_file_count_within(path, {col: (lo, hi)}, version)
 
 
 def commit_append_with_bloom(
@@ -2203,8 +1887,9 @@ def commit_delete_mor(
     same atomic manifest CAS as every other commit. File-scoping is
     what keeps later writes correct: a re-appended or upserted key
     lands in a NEW file no DV row references, so it is never shadowed.
-    Readers pay one broadcast anti-join until ``commit_compact`` (or
-    any full rewrite) materializes the deletes and clears the vectors.
+    Readers pay one broadcast anti-join until compaction
+    (``commit_compact_files``) or a rewrite of the referenced files
+    materializes the deletes and clears the vectors.
     """
     base = current_version(path) if expected_base is None else expected_base
     if base < 0:
@@ -2948,23 +2633,7 @@ def count_where(
         raise FileNotFoundError(f"no committed version under {path}")
     man = _read_manifest(path, v)
     lo, hi = _norm_stat(lo), _norm_stat(hi)
-    primary = man.get("stats_col")
-    phys = _phys(man, col) if col is not None else None
-    if phys is None or phys == primary:
-        if primary is None:
-            raise ValueError("table has no zone-map stats")
-        colname = primary
-        per_file = man.get("stats", {})
-        lookup = per_file.get
-    else:
-        if phys not in (man.get("stats_cols") or []):
-            raise ValueError(
-                f"no zone-map stats for column {col!r}; recorded: "
-                f"{[primary] + (man.get('stats_cols') or [])}"
-            )
-        colname = phys
-        col_stats = man.get("col_stats", {})
-        lookup = lambda n: (col_stats.get(n) or {}).get(phys)  # noqa: E731
+    colname, lookup = _zone_map(man, _phys(man, col) if col is not None else None)
     referenced = _dv_live_refs(path, man)
     null_counts = man.get("null_counts", {})
 
@@ -3407,20 +3076,7 @@ def commit_replace_where(
         ]
     else:
         touched = []
-    untouched = [n for n in prev["files"] if n not in set(touched)]
-    if touched:
-        tfiles = [os.path.join(path, "data", n) for n in touched]
-        target = _to_logical(
-            _apply_dvs(
-                spark,
-                path,
-                prev,
-                spark.read.schema(_physical_ddl(prev)).parquet(*tfiles),
-            ),
-            prev,
-        )
-    else:
-        target = read_version(spark, path, base).limit(0)
+    target = _scan_files(spark, path, prev, touched)
     # every predicate-matching row lives in a touched file by
     # construction, so survivors-of-touched ∪ carried = the exact
     # post-replace state, and the CDC below is complete on this scope
@@ -3448,26 +3104,13 @@ def commit_replace_where(
         cdc = _snapshot_diff_cdc(old_slice, df.select(*cols), key, cols)
     else:
         cdc = "unrecorded"
-    _keep_dvs = _dvs_still_needed(spark, path, prev, untouched)
-    stats = prev.get("stats", {})
-    col_stats = prev.get("col_stats", {})
-    blooms = prev.get("blooms", {})
+    hit = set(touched)
     return _commit_replace(
         spark,
         merged,
         path,
         base,
-        stats_col=prev.get("stats_col"),
-        carried=untouched,
-        carried_stats={n: stats[n] for n in untouched if n in stats},
-        stats_cols=prev.get("stats_cols"),
-        carried_col_stats={n: col_stats[n] for n in untouched if n in col_stats},
-        bloom_spec=prev.get("bloom_spec"),
-        carried_blooms={n: blooms[n] for n in untouched if n in blooms},
-        # DV rows for untouched files must keep applying; a list no
-        # carried file references is inert and drops here
-        carried_dvs=prev.get("dvs") if _keep_dvs else None,
-        dv_key=prev.get("dv_key") if _keep_dvs else None,
+        carried=[n for n in prev["files"] if n not in hit],
         extra_meta=_carry_meta(prev),
         cdc=cdc,
         op="replace_where",
@@ -3614,172 +3257,174 @@ def restore_table(
     return _publish_metadata_commit(path, manifest, base, op="restore")
 
 
-def _touched_files_by_probe(
-    spark: SparkSession, man: dict, keys: DataFrame, key: str
-) -> list[str]:
-    """Files whose key zone map contains at least ONE probe key —
-    per-file interval membership, not the batch's [min, max] envelope
-    (an envelope degrades to scan-everything when a batch mixes a few
-    low keys with a few high ones; per-file probing touches only the
-    files that can actually hold a key). One broadcast range join of
-    the O(#files) bounds table against the distinct probe keys, then
-    an O(#files) name collect — never data-sized driver traffic.
-    Files without recorded stats are scanned conservatively."""
+def _bound_sql(v, ltype: str) -> str:
+    """A zone-map bound as a SQL literal of the key's logical type
+    ``ltype``. Timestamp stats are naive UTC instants (``_norm_stat``)
+    and timestamp_ntz stats wall-clock values — either may be a DATE
+    from a file written before a date→timestamp widening, which
+    ``_cmp_stat`` promotes to its midnight."""
+    if ltype == "timestamp":
+        return f"TIMESTAMP '{_cmp_stat(v).isoformat(sep=' ')}Z'"
+    if ltype == "timestamp_ntz":
+        return f"TIMESTAMP_NTZ '{_cmp_stat(v).isoformat(sep=' ')}'"
+    if isinstance(v, bytes):
+        return f"CAST(X'{v.hex()}' AS {ltype})"
+    if isinstance(v, str):
+        v = v.replace("\\", "\\\\").replace("'", "\\'")
+    return f"CAST('{v}' AS {ltype})"
+
+
+def _probe_source(
+    spark: SparkSession, man: dict, source: DataFrame, key: str
+) -> tuple[int, list, list[str]]:
+    """``(source rows, [a duplicated key] or [], touched files)`` from
+    ONE aggregate — the duplicate-key check MERGE runs anyway, with the
+    touched-file probe riding along (same shuffle, same Spark jobs).
+
+    The touched set comes from the manifest: on a table whose zone-map
+    stats are keyed on ``key``, a file is touched when its [min, max]
+    holds at least one source key (per-file interval membership, not
+    the batch's [min, max] envelope, which degrades to every file when
+    a batch mixes low and high keys) or when it has no stats; on any
+    other table every file is touched. The O(#files) bounds travel as
+    a literal array in the aggregate's expression, so the probe adds no
+    join and no job; the driver collects at most two rows. An empty
+    source touches nothing."""
     from pyspark.sql import functions as FF
 
-    stats = man.get("stats", {})
-    unstatted = [n for n in man["files"] if n not in stats]
-    bounded = [(n, stats[n][0], stats[n][1]) for n in man["files"] if n in stats]
-    if not bounded:
-        return list(man["files"])
-    bdf = spark.createDataFrame(bounded, ["__f", "__lo", "__hi"])
-    hit = (
-        keys.dropDuplicates()
-        .join(
-            FF.broadcast(bdf),
-            (FF.col(key) >= FF.col("__lo")) & (FF.col(key) <= FF.col("__hi")),
+    files = man["files"]
+    zoned = man.get("stats_col") == _phys(man, key)
+    stats = man.get("stats", {}) if zoned else {}
+    ltype = dict(_logical_fields(man)).get(key) if zoned else None
+    # ONE SQL expression, not O(#files) Column objects: each Column
+    # call is a driver-JVM round trip
+    bounds = ", ".join(
+        f"named_struct('i', {i}, 'lo', {_bound_sql(stats[n][0], ltype)}, "
+        f"'hi', {_bound_sql(stats[n][1], ltype)})"
+        for i, n in enumerate(files)
+        if n in stats
+    )
+    k = "`" + key.replace("`", "``") + "`"
+    aggs = [FF.grouping_id().alias("__g"), FF.count(FF.lit(1)).alias("__n")]
+    if bounds:
+        aggs.append(
+            FF.expr(
+                "array_distinct(flatten(collect_set(transform(filter("
+                f"array({bounds}), __b -> {k} >= __b.lo AND {k} <= __b.hi), "
+                "__b -> __b.i))))"
+            ).alias("__h")
         )
-        .select("__f")
-        .distinct()
+    # ROLLUP(key) is the grouping sets (key) and (): ONE shuffle yields
+    # the per-key counts (a duplicate is __n > 1) and the whole-batch
+    # row (__g = 1, sorted first); an empty source yields no row at all
+    rows = (
+        source.rollup(key)
+        .agg(*aggs)
+        .filter((FF.col("__g") == 1) | (FF.col("__n") > 1))
+        .orderBy(FF.col("__g").desc())
+        .limit(2)
         .collect()
     )
-    hit_names = {r["__f"] for r in hit}
-    return [n for n in man["files"] if n in hit_names or n in set(unstatted)]
+    if not rows:
+        return 0, [], []
+    n_rows, dup = rows[0]["__n"], [r[key] for r in rows[1:]]
+    if not zoned:
+        return n_rows, dup, list(files)
+    hit = {files[i] for i in (rows[0]["__h"] if bounds else [])}
+    return n_rows, dup, [n for n in files if n in hit or n not in stats]
 
 
-def commit_merge_cow(
+def _merge(
     spark: SparkSession,
     source: DataFrame,
     path: str,
     key: str,
+    base: int,
+    op: str,
     *,
     matched_update: bool = True,
     matched_delete: str | None = None,
     not_matched_insert: bool = True,
-    expected_base: int | None = None,
     meta: dict | None = None,
+    delete_keys: bool = False,
 ) -> int:
-    """File-pruned copy-on-write MERGE INTO: ``commit_merge``'s three
-    clauses with ``commit_upsert_cow``'s cost model — only files whose
-    key zone map overlaps the SOURCE batch's key range are read and
-    rewritten; every other file moves forward by reference with its
-    stats/blooms/DVs intact. Zone-map containment is what keeps the
-    clause semantics exact on the pruned scope: any existing row with
-    a source key lives in a touched file, so matched/not-matched
-    classification against the touched subset equals classification
-    against the whole table.
+    """The one copy-on-write MERGE core behind ``commit_merge``,
+    ``commit_upsert`` and ``commit_delete`` (``delete_keys``: ``source``
+    is a key set whose matching rows all depart, duplicates allowed).
 
-    This is the 100 TB shape of the CDC-apply loop: each replica
-    micro-batch costs O(files overlapping the batch's keys), not
-    O(table). Requires the table's zone-map stats to be keyed on
-    ``key`` (write it with commit_append_with_stats); same contracts
-    as ``commit_merge`` (unique source keys, expectations on writes,
-    ``meta`` watermark landing atomically)."""
+    ``_probe_source`` picks the touched files from the manifest; only
+    those are read (DV-aware) and rewritten, and every other file moves
+    forward by reference through ``_commit_replace``'s carry-forward.
+    Zone-map containment keeps the clause semantics exact on the pruned
+    scope: any existing row with a source key lives in a touched file,
+    so matched / not-matched classification against the touched subset
+    equals classification against the whole table, and the change rows
+    are complete. ``base < 0`` (an upsert creating the table) writes the
+    source as the first version."""
     from pyspark.sql import functions as FF
 
-    base = current_version(path) if expected_base is None else expected_base
-    if base < 0:
-        raise FileNotFoundError(f"no committed version under {path}")
-    man = _read_manifest(path, base)
-    if man.get("stats_col") != _phys(man, key):
+    man = _read_manifest(path, base) if base >= 0 else {"files": []}
+    n_rows, dup, touched = _probe_source(spark, man, source, key)
+    if dup and not delete_keys:
         raise ValueError(
-            f"table at {path} lacks zone-map stats on {key!r}; "
-            "write it with commit_append_with_stats, or use commit_merge"
+            f"MERGE source has duplicate key {dup[0]!r}; a key must match "
+            "at most one source row (and a duplicated key would emit "
+            "cross-joined CDC pairs)"
         )
-    dup = _duplicate_key_example(source, key)
-    if dup:
-        raise ValueError(
-            f"MERGE source has duplicate key {dup[0][key]!r}; "
-            "a key must match at most one source row"
-        )
-    cols = [f.split(" ")[0] for f in man["schema_ddl"].split(", ")]
-    n_keys = source.limit(1).count()
-    if n_keys == 0:  # empty batch: metadata-only version (+ watermark)
-        return _commit_replace(
-            spark,
-            read_version(spark, path, base).limit(0),
-            path,
-            base,
-            stats_col=_phys(man, key),
-            carried=man["files"],
-            carried_stats=man.get("stats", {}),
-            stats_cols=man.get("stats_cols"),
-            carried_col_stats=man.get("col_stats", {}),
-            bloom_spec=man.get("bloom_spec"),
-            carried_blooms=man.get("blooms", {}),
-            carried_dvs=man.get("dvs"),
-            dv_key=man.get("dv_key"),
-            extra_meta={**_carry_meta(man), **(meta or {})},
-            cdc="none",
-            op="merge",
-        )
-    touched = _touched_files_by_probe(spark, man, source.select(key), key)
-    untouched = [n for n in man["files"] if n not in set(touched)]
-    stats = man.get("stats", {})
-    if touched:
-        tfiles = [os.path.join(path, "data", n) for n in touched]
-        target = _to_logical(
-            _apply_dvs(
-                spark,
-                path,
-                man,
-                spark.read.schema(_physical_ddl(man)).parquet(*tfiles),
-            ),
-            man,
-        )
+    target = (
+        _scan_files(spark, path, man, touched) if base >= 0 else source.limit(0)
+    )
+    cols = target.columns
+    if delete_keys:
+        writes, departures = None, source
+        gone = departures
     else:
-        target = read_version(spark, path, base).limit(0)
-    del_pred = (
-        FF.coalesce(FF.expr(matched_delete).cast("boolean"), FF.lit(False))
-        if matched_delete is not None
-        else FF.lit(False)
-    )
-    writes = source.filter(~del_pred)
-    departures = source.filter(del_pred).select(key)
-    if not not_matched_insert:
-        writes = writes.join(target.select(key), key, "left_semi")
-    if not matched_update:
-        writes = writes.join(target.select(key), key, "left_anti")
-    writes = writes.select(*cols)
-    enforce_expectations(writes, man.get("expectations", {}))
-    survivors = target.join(
-        writes.select(key).unionByName(departures), key, "left_anti"
-    )
-    merged = survivors.unionByName(writes)
-    if not touched:
-        # no existing file holds a source key: the commit is
-        # append-shaped (all writes are inserts, tombstones are
-        # no-ops) and the staged files ARE the change rows — record
-        # the free append mode so the feed can always replay it
-        cdc = "append"
-    elif man.get("change_feed"):
-        cdc = _cdc_upsert_changes(target, writes, key, cols).unionByName(
-            target.join(departures, key, "left_semi").withColumn(
-                "_change_type", FF.lit("delete")
-            )
+        del_pred = (
+            FF.coalesce(FF.expr(matched_delete).cast("boolean"), FF.lit(False))
+            if matched_delete is not None
+            else FF.lit(False)
         )
+        writes = source.filter(~del_pred)
+        departures = source.filter(del_pred).select(key)
+        if not not_matched_insert:
+            writes = writes.join(target.select(key), key, "left_semi")
+        if not matched_update:
+            writes = writes.join(target.select(key), key, "left_anti")
+        writes = writes.select(*cols)
+        # the contract binds the rows the merge WRITES; delete-clause
+        # rows are departures, not writes
+        enforce_expectations(writes, man.get("expectations", {}))
+        gone = writes.select(key).unionByName(departures)
+    merged = target.join(gone, key, "left_anti")
+    if writes is not None:
+        merged = merged.unionByName(writes)
+    if not touched:
+        # no existing file can hold a source key: every write inserts
+        # and every departure is a no-op, so the commit is append-shaped
+        # and its staged files ARE the change rows
+        cdc = "append" if writes is not None and n_rows else "none"
+    elif man.get("change_feed"):
+        # written rows classify as insert/update against the target
+        # (value-compared — re-merging identical rows records nothing);
+        # departures surface the departed rows' pre-image, and
+        # tombstones for absent keys emit nothing (semi join)
+        cdc = target.join(departures, key, "left_semi").withColumn(
+            "_change_type", FF.lit("delete")
+        )
+        if writes is not None:
+            cdc = _cdc_upsert_changes(target, writes, key, cols).unionByName(cdc)
     else:
         cdc = "unrecorded"
-    col_stats = man.get("col_stats", {})
-    blooms = man.get("blooms", {})
+    hit = set(touched)
     return _commit_replace(
         spark,
         merged,
         path,
         base,
-        stats_col=_phys(man, key),
-        carried=untouched,
-        carried_stats={n: stats[n] for n in untouched if n in stats},
-        stats_cols=man.get("stats_cols"),
-        carried_col_stats={n: col_stats[n] for n in untouched if n in col_stats},
-        bloom_spec=man.get("bloom_spec"),
-        carried_blooms={n: blooms[n] for n in untouched if n in blooms},
-        # DVs of rewritten files go inert; untouched files' keep applying
-        carried_dvs=man.get("dvs"),
-        dv_key=man.get("dv_key"),
+        carried=[n for n in man["files"] if n not in hit],
         extra_meta={**_carry_meta(man), **(meta or {})},
         cdc=cdc,
-        op="merge",
+        op=op,
     )
 
 
@@ -3795,8 +3440,8 @@ def commit_merge(
     expected_base: int | None = None,
     meta: dict | None = None,
 ) -> int:
-    """Full MERGE INTO with the three standard clauses (Delta/ANSI
-    MERGE; ``commit_upsert`` is the update+insert special case):
+    """MERGE INTO with the three standard clauses (Delta/ANSI MERGE;
+    ``commit_upsert`` is the update+insert special case):
 
     - WHEN MATCHED AND ``matched_delete`` → the target row is removed
       (``matched_delete`` is a SQL predicate over the SOURCE row, e.g.
@@ -3813,74 +3458,35 @@ def commit_merge(
     expectations contract is enforced on the rows the merge WRITES
     (delete-clause rows are departures, not writes). Source must not
     contain duplicate keys (classic MERGE nondeterminism) — checked
-    with one aggregate, ValueError on violation. ``meta`` lands extra
-    keys in the published manifest ATOMICALLY with the merge — the
-    transactional-watermark hook (e.g. ``cdc_applied_version``) that
-    makes non-idempotent incremental maintenance exactly-once.
+    in the same aggregate that probes the touched files, ValueError on
+    violation. ``meta`` lands extra keys in the published manifest
+    ATOMICALLY with the merge — the transactional-watermark hook (e.g.
+    ``cdc_applied_version``) that makes non-idempotent incremental
+    maintenance exactly-once; an empty source still publishes it (a
+    metadata-only version).
 
-    Scale: full-rewrite core like ``commit_upsert``; the file-pruned
-    copy-on-write refinement is ``commit_upsert_cow``'s protocol.
-    ``matched_delete`` rows must keep the SOURCE schema (the predicate
-    sees source columns only — standard for CDC envelopes that carry
-    an op column; pass source with the op column projected away via
-    ``writes`` semantics if the table schema lacks it: the merge
-    writes exactly the source schema minus nothing).
+    Scale: copy-on-write. On a table whose zone-map stats are keyed on
+    ``key`` (written with ``commit_append_with_stats``) only files
+    whose key interval holds a source key are read and rewritten, so a
+    replica micro-batch costs O(files overlapping its keys), not
+    O(table); any other table rewrites every file. The merge writes
+    exactly the table's columns: source columns beyond them (an op
+    flag the ``matched_delete`` predicate reads) are projected away.
     """
-    from pyspark.sql import functions as FF
-
     base = current_version(path) if expected_base is None else expected_base
     if base < 0:
         raise FileNotFoundError(f"no committed version under {path}")
-    dup = _duplicate_key_example(source, key)
-    if dup:
-        raise ValueError(
-            f"MERGE source has duplicate key {dup[0][key]!r}; "
-            "a key must match at most one source row"
-        )
-    prev = _read_manifest(path, base)
-    del_pred = (
-        FF.coalesce(FF.expr(matched_delete).cast("boolean"), FF.lit(False))
-        if matched_delete is not None
-        else FF.lit(False)
-    )
-    writes = source.filter(~del_pred)
-    departures = source.filter(del_pred).select(key)
-    target = read_version(spark, path, base)
-    if not not_matched_insert:
-        writes = writes.join(target.select(key), key, "left_semi")
-    if not matched_update:
-        writes = writes.join(target.select(key), key, "left_anti")
-    table_cols = [f.name for f in target.schema]
-    writes = writes.select(*table_cols)
-    enforce_expectations(writes, prev.get("expectations", {}))
-    survivors = target.join(
-        writes.select(key).unionByName(departures), key, "left_anti"
-    )
-    merged = survivors.unionByName(writes)
-    # CDC: written rows classify as insert/update against the target
-    # (value-compared — re-merging identical rows records nothing);
-    # delete-clause rows surface the departed target rows' pre-image.
-    # Tombstones for absent keys are no-ops and emit nothing (semi).
-    # Computed only for feed-enabled tables.
-    if prev.get("change_feed"):
-        cdc = _cdc_upsert_changes(target, writes, key, table_cols).unionByName(
-            target.join(departures, key, "left_semi").withColumn(
-                "_change_type", FF.lit("delete")
-            )
-        )
-    else:
-        cdc = "unrecorded"
-    return _commit_replace(
+    return _merge(
         spark,
-        merged,
+        source,
         path,
+        key,
         base,
-        stats_col=prev.get("stats_col"),
-        stats_cols=prev.get("stats_cols"),
-        bloom_spec=prev.get("bloom_spec"),
-        extra_meta={**_carry_meta(prev), **(meta or {})},
-        cdc=cdc,
-        op="merge",
+        "merge",
+        matched_update=matched_update,
+        matched_delete=matched_delete,
+        not_matched_insert=not_matched_insert,
+        meta=meta,
     )
 
 
@@ -3955,8 +3561,8 @@ def apply_changes_scd2(
     unchanged (the foreachBatch replay guard, same watermark mechanism
     as ``commit_merge(meta=...)``).
 
-    Scale: copy-on-write with zone-map/bloom file pruning on ``key``
-    (same protocol as ``commit_upsert_cow``) — only files that may
+    Scale: copy-on-write with zone-map file pruning on ``key`` (the
+    same touched-file probe as ``commit_merge``) — only files that may
     hold a batch key are rewritten; everything else carries forward by
     reference with its stats. CDC (feed-enabled tables): closed
     current rows emit update_preimage/update_postimage, new version
@@ -4068,21 +3674,10 @@ def apply_changes_scd2(
                 "silently null history)"
             )
         enforce_expectations(new_rows, man.get("expectations", {}))
-        touched = _touched_files_by_probe(spark, man, changes.select(key), key)
-        untouched = [n for n in man["files"] if n not in set(touched)]
-        if touched:
-            tfiles = [os.path.join(path, "data", n) for n in touched]
-            existing = _to_logical(
-                _apply_dvs(
-                    spark,
-                    path,
-                    man,
-                    spark.read.schema(_physical_ddl(man)).parquet(*tfiles),
-                ),
-                man,
-            )
-        else:
-            existing = read_version(spark, path, base).limit(0)
+        # (key, seq) may repeat a key legitimately: the probe's
+        # duplicate-key answer is not this contract's
+        touched = _probe_source(spark, man, changes.select(key), key)[2]
+        existing = _scan_files(spark, path, man, touched)
         # no forced broadcast: first_seq is one row per BATCH key, and a
         # backfill batch can be corpus-sized — AQE picks the strategy from
         # its measured size (it broadcasts the common micro-batch case)
@@ -4151,31 +3746,17 @@ def apply_changes_scd2(
             cdc = ins.unionByName(pre).unionByName(post)
         else:
             cdc = "unrecorded"
-        _keep = _dvs_still_needed(spark, path, man, untouched)
-        stats = man.get("stats", {})
-        col_stats = man.get("col_stats", {})
-        blooms = man.get("blooms", {})
-        v = _commit_replace(
+        hit = set(touched)
+        return _commit_replace(
             spark,
             merged,
             path,
             base,
-            stats_col=_phys(man, key),
-            carried=untouched,
-            carried_stats={n: stats[n] for n in untouched if n in stats},
-            stats_cols=man.get("stats_cols"),
-            carried_col_stats={
-                n: col_stats[n] for n in untouched if n in col_stats
-            },
-            bloom_spec=man.get("bloom_spec"),
-            carried_blooms={n: blooms[n] for n in untouched if n in blooms},
-            carried_dvs=man.get("dvs") if _keep else None,
-            dv_key=man.get("dv_key") if _keep else None,
+            carried=[n for n in man["files"] if n not in hit],
             extra_meta={**_carry_meta(man), **meta_mark},
             cdc=cdc,
             op="scd2_apply",
         )
-        return v
     finally:
         # idempotent and cheap on the success path; without it every
         # raise (validation, expectation, commit conflict) leaked the

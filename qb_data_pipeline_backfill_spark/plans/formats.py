@@ -37,7 +37,7 @@ _SCRATCH = os.path.join(
 # paths it exercises). A cached table built by different code is
 # served only if its stamped rev matches — "head version looks
 # right" alone is no longer proof of a correct build.
-_FIXTURE_REV = "r10.1"
+_FIXTURE_REV = "r10.2"
 
 # A sibling .building-*/.old-* dir younger than this may belong to a
 # LIVE concurrent builder; only older ones are swept as orphans.
@@ -789,8 +789,10 @@ def txn_replace_where_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS n_merged
     FROM final GROUP BY o_orderstatus
     """,
-    doc="Full three-clause MERGE INTO (operators/txn.py commit_merge — "
-    "the single-statement CDC-apply primitive): orders commit as the "
+    doc="Three-clause MERGE INTO (operators/txn.py commit_merge — the "
+    "single-statement CDC-apply primitive, one copy-on-write core that "
+    "rewrites only the files its source keys can touch on a zone-mapped "
+    "table and every file of this stats-less one): orders commit as the "
     "target, then ONE merge applies a Debezium-shaped source batch "
     "carrying updates (priority rewritten, keys %101), tombstones "
     "(op='D', keys %97 ex-%101) and inserts (keys +10M, %103); the "
@@ -913,7 +915,7 @@ def txn_idempotent_stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     "worst case for part/supp predicates, every file spans both full "
     "domains — then one z-ordered compaction rewrites them into 8 "
     "Morton-clustered files whose (l_partkey, l_suppkey) zone maps "
-    "join the manifest. The read is read_table_where_multi, pruning "
+    "join the manifest. The read is read_table_within, pruning "
     "files on BOTH dimensions at once; hash equality with the plain "
     "SQL range filter proves the clustered rewrite + multi-column "
     "pruning is row-exact. The multiplicative-pruning property itself "
@@ -935,15 +937,11 @@ def txn_zorder_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         txn.commit_append_with_stats(spark, li, p, key="l_orderkey")
         txn.commit_compact_files(
-            spark,
-            p,
-            txn._read_manifest(p, 0)["files"],
-            target_partitions=8,
-            zorder_by=["l_partkey", "l_suppkey"],
+            spark, p, target_partitions=8, zorder_by=["l_partkey", "l_suppkey"]
         )
 
     _atomic_rebuild(path, 1, _build)
-    got = txn.read_table_where_multi(
+    got = txn.read_table_within(
         spark, path, {"l_partkey": (20, 120), "l_suppkey": (2, 8)}
     )
     return got.groupBy("l_returnflag").agg(
@@ -1011,7 +1009,7 @@ def txn_restore_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         ins = orders.filter(k % 103 == 0).withColumn(
             "o_orderkey", k + 10000000
         )
-        txn.commit_upsert_cow(spark, ups.unionByName(ins), p, key="o_orderkey")
+        txn.commit_upsert(spark, ups.unionByName(ins), p, key="o_orderkey")
         txn.commit_delete(
             spark,
             orders.filter(k % 97 == 0).select("o_orderkey"),
@@ -1142,9 +1140,9 @@ def txn_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         ups = orders.filter(k % 101 == 0).withColumn(
             "o_orderpriority", F.lit("H-UP")
         )
-        txn.commit_upsert_cow(spark, ups, p, key="o_orderkey")
+        txn.commit_upsert(spark, ups, p, key="o_orderkey")
         txn.alter_rename_column(p, "o_orderstatus", "status")
-        txn.commit_compact(spark, p, target_partitions=2)
+        txn.commit_compact_files(spark, p, target_partitions=2)
 
     _atomic_rebuild(path, 4, _build)
     hist = txn.table_history(spark, path).select("version", "operation")
@@ -1323,7 +1321,7 @@ def txn_snapshot_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             p,
             key="o_orderkey",
         )
-        txn.commit_compact(spark, p, target_partitions=2)
+        txn.commit_compact_files(spark, p, target_partitions=2)
 
     _atomic_rebuild(path, 2, _build)
     return _values_df(

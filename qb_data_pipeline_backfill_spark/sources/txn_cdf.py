@@ -677,10 +677,10 @@ def apply_cdf_to_table(
     batch — insert/update rows via the matched-update /
     not-matched-insert clauses, delete rows via the matched-delete
     clause — so the batch lands in a single atomic snapshot switch.
-    The replica is created with key zone maps and each batch applies
-    through ``commit_merge_cow``, so a micro-batch rewrites only the
-    replica files its keys overlap — O(touched files), not O(replica),
-    the cost model that keeps a 100 TB replica maintainable. The
+    The replica is created with key zone maps, so each batch's
+    ``commit_merge`` rewrites only the replica files its keys overlap
+    — O(touched files), not O(replica), the cost model that keeps a
+    100 TB replica maintainable. The
     reduction makes the merge's unique-source-key contract hold by
     construction, and the merge is effect-idempotent, so a
     foreachBatch replay after a crash re-applies harmlessly —
@@ -730,13 +730,7 @@ def apply_cdf_to_table(
                 key=key,
                 change_feed=replica_change_feed,
             )
-        man = txn._read_manifest(target_path, txn.current_version(target_path))
-        merge = (
-            txn.commit_merge_cow
-            if man.get("stats_col") == txn._phys(man, key)
-            else txn.commit_merge  # pre-existing stats-less target
-        )
-        merge(
+        txn.commit_merge(
             sp, src, target_path, key=key, matched_delete="__op = 'delete'"
         )
 

@@ -127,7 +127,7 @@ def test_compaction_preserves_rows_atomically(spark, tmp_path):
         txn.commit_append(spark, _df(spark, lo, lo + 10), path)
     before = txn.read_table(spark, path)
     n_files_before = len(txn._read_manifest(path, txn.current_version(path))["files"])
-    v = txn.commit_compact(spark, path, target_partitions=1)
+    v = txn.commit_compact_files(spark, path, target_partitions=1)
     man = txn._read_manifest(path, v)
     assert len(man["files"]) < n_files_before
     after = txn.read_table(spark, path)
@@ -181,7 +181,7 @@ def test_cow_upsert_rewrites_only_overlapping_files(spark):
         updates = spark.range(1050, 1060).select(
             F.col("id").alias("k"), F.lit(-1).alias("v")
         )
-        v = txn.commit_upsert_cow(spark, updates, path, key="k")
+        v = txn.commit_upsert(spark, updates, path, key="k")
         man_after = txn._read_manifest(path, v)
         carried = set(man_before["files"]) & set(man_after["files"])
         # the two non-overlapping ranges moved forward BY REFERENCE
@@ -232,20 +232,20 @@ def test_vacuum_retention_protects_inflight_writer(spark, tmp_path):
 
 
 def test_rewrite_commits_preserve_zone_maps(spark, tmp_path):
-    """commit_upsert / commit_delete / commit_compact on a table
+    """commit_upsert / commit_delete / commit_compact_files on a table
     maintained with commit_append_with_stats must keep the zone-map
     layer alive (stats recomputed for rewritten files), so
-    read_table_where and commit_upsert_cow keep working afterward."""
+    read_table_where and file-pruned upserts keep working afterward."""
     path = str(tmp_path / "t")
     txn.commit_append_with_stats(spark, _df(spark, 0, 100).coalesce(1), path, key="k")
     updates = spark.range(5, 15).select(F.col("id").alias("k"), F.lit(-1).alias("v"))
     txn.commit_upsert(spark, updates, path, key="k")
     assert txn.read_table_where(spark, path, 5, 9).count() == 5
     txn.commit_delete(spark, spark.range(0, 5).select(F.col("id").alias("k")), path, key="k")
-    txn.commit_compact(spark, path, target_partitions=1)
+    txn.commit_compact_files(spark, path, target_partitions=1)
     assert txn.read_table_where(spark, path, 0, 9).count() == 5
-    # cow upsert still accepts the table (stats_col survived 3 rewrites)
-    txn.commit_upsert_cow(
+    # upserts still prune (stats_col survived 3 rewrites)
+    txn.commit_upsert(
         spark,
         spark.range(500, 510).select(F.col("id").alias("k"), F.lit(9).cast("long").alias("v")),
         path,
@@ -309,7 +309,7 @@ def test_checkpoint_expire_caps_manifest_population(spark, tmp_path):
     floor = txn.checkpoint_version(path)
     assert floor == 20  # fires on versions divisible by K: v0, v10, v20
     # compact rewrites everything, then retire pre-checkpoint history
-    txn.commit_compact(spark, path, target_partitions=1)
+    txn.commit_compact_files(spark, path, target_partitions=1)
     txn.checkpoint(path)
     removed = txn.expire_manifests(path)
     assert len(removed) == 30
@@ -337,7 +337,7 @@ def test_cow_upsert_inserts_new_key_range(spark):
         inserts = spark.range(5000, 5010).select(
             F.col("id").alias("k"), F.lit(7).cast("long").alias("v")
         )
-        txn.commit_upsert_cow(spark, inserts, path, key="k")
+        txn.commit_upsert(spark, inserts, path, key="k")
         got = txn.read_table(spark, path)
         assert got.count() == 110
         assert got.filter(F.col("v") == 7).count() == 10
@@ -384,7 +384,7 @@ def test_randomized_op_sequences_match_model(spark, tmp_path):
                 for k in ks:
                     del model[k]
             elif op == "compact" and model:
-                txn.commit_compact(spark, path, target_partitions=1)
+                txn.commit_compact_files(spark, path, target_partitions=1)
             elif op == "checkpoint_expire" and txn.current_version(path) >= 0:
                 txn.checkpoint(path)
                 txn.expire_manifests(path)
@@ -440,15 +440,15 @@ def test_secondary_column_zone_maps(spark, tmp_path):
     # unknown column fails loudly
     with pytest.raises(ValueError, match="no zone-map stats for column"):
         txn.read_table_where(spark, path, 0, 1, col="w")
-    # cow upsert rewrites the middle k-range; v-stats survive and the
+    # the upsert rewrites the middle k-range; v-stats survive and the
     # rewritten file's v zone map is recomputed
     updates = spark.createDataFrame(
         [(k, -1, 0) for k in range(1040, 1045)], "k long, v long, w long"
     )
-    txn.commit_upsert_cow(spark, updates, path, key="k")
+    txn.commit_upsert(spark, updates, path, key="k")
     assert txn.read_table_where(spark, path, -1, -1, col="v").count() == 5
     # full-rewrite commits keep the secondary maps too
-    txn.commit_compact(spark, path, target_partitions=2)
+    txn.commit_compact_files(spark, path, target_partitions=2)
     man = txn._read_manifest(path, txn.current_version(path))
     assert man["stats_cols"] == ["v"]
     assert all(man["col_stats"].get(n) for n in man["files"])
@@ -476,10 +476,10 @@ def test_zorder_clustered_table_prunes_multiplicatively(spark, tmp_path):
         extra_cols=["x", "y"],
     )
     box = {"x": (8, 15), "y": (8, 15)}
-    scanned, total = txn.pruned_file_count_multi(zpath, box)
+    scanned, total = txn.pruned_file_count_within(zpath, box)
     assert total == 16
     assert scanned == 1  # 16x16 Morton tiles: the box lives in ONE file
-    got = txn.read_table_where_multi(spark, zpath, box)
+    got = txn.read_table_within(spark, zpath, box)
     assert got.count() == 64
     assert {(r["x"], r["y"]) for r in got.collect()} == {
         (x, y) for x in range(8, 16) for y in range(8, 16)
@@ -497,7 +497,7 @@ def test_zorder_clustered_table_prunes_multiplicatively(spark, tmp_path):
     sy, ty = txn.pruned_file_count(xpath, 8, 15, col="y")
     assert sx < 16 and sy == ty == 16
     # same answer, worse pruning
-    assert txn.read_table_where_multi(spark, xpath, box).count() == 64
+    assert txn.read_table_within(spark, xpath, box).count() == 64
 
 
 # --------------------------------------------------------------------------
@@ -536,8 +536,8 @@ def test_bloom_prunes_most_files(spark, tmp_path):
 
 def test_bloom_survives_rewrite_commits(spark, tmp_path):
     path = _bloom_table(spark, tmp_path)
-    # upsert_cow needs key zone maps — this table was built with plain
-    # bloom appends, so exercise delete + compact + plain upsert instead
+    # this table was built with plain bloom appends (no key zone maps),
+    # so delete + compact + upsert all rewrite every file
     txn.commit_delete(spark, spark.createDataFrame([(150,)], "k long"), path, key="k")
     assert txn.read_table_point(spark, path, 10150).count() == 0
     upd = spark.createDataFrame([(151, 77777)], "k long, u long")
@@ -547,7 +547,7 @@ def test_bloom_survives_rewrite_commits(spark, tmp_path):
     ] == [151]
     # the old u value of key 151 must no longer be reachable
     assert txn.read_table_point(spark, path, 10151).count() == 0
-    txn.commit_compact(spark, path, target_partitions=2)
+    txn.commit_compact_files(spark, path, target_partitions=2)
     assert [
         r["k"] for r in txn.read_table_point(spark, path, 77777).collect()
     ] == [151]
@@ -623,7 +623,7 @@ def test_delete_mor_compact_materializes_and_clears_dvs(spark, tmp_path):
     txn.commit_append(spark, _df(spark, 0, 100), path, key="k")
     txn.commit_delete_mor(spark, _keys(spark, *range(0, 100, 2)), path, key="k")
     assert txn.dv_file_count(path) == 1
-    v = txn.commit_compact(spark, path, target_partitions=1)
+    v = txn.commit_compact_files(spark, path, target_partitions=1)
     assert txn.dv_file_count(path) == 0
     got = txn.read_version(spark, path, v)
     assert got.count() == 50
@@ -660,7 +660,7 @@ def test_delete_mor_zone_map_reader_and_cow_upsert(spark, tmp_path):
     # deleted (survivors are read DV-aware), the untouched high file's
     # DV on 150 must keep applying
     upd = spark.createDataFrame([(6, 666)], "k long, v long")
-    txn.commit_upsert_cow(spark, upd, path, key="k")
+    txn.commit_upsert(spark, upd, path, key="k")
     got = txn.read_table(spark, path)
     assert got.filter(F.col("k") == 5).count() == 0
     assert got.filter(F.col("k") == 150).count() == 0
@@ -915,7 +915,7 @@ def test_compact_zorder_prunes_multiplicatively(spark, tmp_path):
     assert set(man.get("stats_cols", [])) >= {"x", "y"}
     got = {
         (r["x"], r["y"], r["k"])
-        for r in txn.read_table_where_multi(
+        for r in txn.read_table_within(
             spark, path, {"x": (0, 7), "y": (0, 7)}
         ).collect()
     }
@@ -1138,7 +1138,7 @@ def test_cdf_stream_compaction_nets_to_nothing(spark, tmp_path):
         spark, _df(spark, 0, 30), path, key="k", change_feed=True
     )
     v0 = txn.current_version(path)
-    txn.commit_compact(spark, path, target_partitions=1)
+    txn.commit_compact_files(spark, path, target_partitions=1)
     got = _drain_cdf(
         spark, path, tmp_path, "cdf_compact", start_version=v0
     ).collect()
@@ -1190,7 +1190,7 @@ def test_cdf_apply_maintains_derived_replica(spark, tmp_path):
         spark, spark.createDataFrame([(10,), (11,)], "k long"), src, key="k"
     )
     sync_and_check()
-    txn.commit_compact(spark, src, target_partitions=1)
+    txn.commit_compact_files(spark, src, target_partitions=1)
     txn.commit_delete(
         spark, spark.createDataFrame([(99,)], "k long"), src, key="k"
     )
@@ -1262,7 +1262,7 @@ def test_cdf_rollup_incremental_aggregate_maintenance(spark, tmp_path):
     sync_and_check()
     assert "b" not in _rollup_state(spark, roll)
     # compaction: no feed rows, no rollup change
-    txn.commit_compact(spark, src)
+    txn.commit_compact_files(spark, src)
     v = txn.current_version(roll)
     sync_and_check()
     assert txn.current_version(roll) == v
@@ -1327,7 +1327,7 @@ def test_diff_tables_classifies_divergence(spark, tmp_path):
     "seed", [7, 23, 91] if os.environ.get("SPARK_GRAFT_FULL_TESTS") else [7]
 )
 def test_cdf_random_history_equivalence(spark, tmp_path, seed):
-    """Seeded random commit histories (append / upsert / CoW-upsert /
+    """Seeded random commit histories (append / upsert /
     delete / MoR-delete / compact): the log-derived net feed must equal
     the snapshot diff, and a replica maintained only from the stream
     must equal the source — the three CDC faces agree on ARBITRARY
@@ -1350,7 +1350,8 @@ def test_cdf_random_history_equivalence(spark, tmp_path, seed):
         return spark.createDataFrame(pairs, "k long, v long")
 
     for _ in range(6):
-        op = rng.choice(["append", "upsert", "upsert_cow", "delete", "mor", "compact"])
+        # upserts carry twice the weight of each other op
+        op = rng.choice(["append", "upsert", "upsert", "delete", "mor", "compact"])
         ks = rng.sample(range(0, 60), rng.randint(1, 4))
         if op == "append":
             txn.commit_append_with_stats(
@@ -1358,10 +1359,6 @@ def test_cdf_random_history_equivalence(spark, tmp_path, seed):
             )
         elif op == "upsert":
             txn.commit_upsert(
-                spark, rows([(k, rng.randint(-5, 5)) for k in ks]), path, key="k"
-            )
-        elif op == "upsert_cow":
-            txn.commit_upsert_cow(
                 spark, rows([(k, rng.randint(-5, 5)) for k in ks]), path, key="k"
             )
         elif op == "delete":
@@ -1373,7 +1370,7 @@ def test_cdf_random_history_equivalence(spark, tmp_path, seed):
                 spark, rows([(k, 0) for k in ks]).select("k"), path, key="k"
             )
         else:
-            txn.commit_compact(spark, path, target_partitions=2)
+            txn.commit_compact_files(spark, path, target_partitions=2)
 
     def as_set(df):
         return {(r["k"], r["v"], r["_change_type"]) for r in df.collect()}
@@ -1409,7 +1406,7 @@ def test_cdf_watermark_survives_maintenance_commits(spark, tmp_path):
     ]
     from decimal import Decimal
 
-    txn.commit_compact(spark, roll)
+    txn.commit_compact_files(spark, roll)
     txn.commit_append(
         spark,
         spark.createDataFrame(
@@ -1437,7 +1434,7 @@ def test_cdf_log_batch_read_matches_stream_semantics(spark, tmp_path):
         spark, spark.createDataFrame([(3, 333), (50, 500)], "k long, v long"),
         path, key="k",
     )
-    txn.commit_compact(spark, path, target_partitions=1)
+    txn.commit_compact_files(spark, path, target_partitions=1)
     txn.commit_delete_mor(
         spark, spark.createDataFrame([(7,)], "k long"), path, key="k"
     )
@@ -1807,7 +1804,7 @@ def test_expectations_null_counts_as_violation_and_survive_rewrites(
     # rewrite commits (upsert, delete, compact) keep the contract
     txn.commit_upsert(spark, _df(spark, 5, 15), path, key="k")
     txn.commit_delete(spark, _df(spark, 0, 2).select("k"), path, key="k")
-    txn.commit_compact(spark, path)
+    txn.commit_compact_files(spark, path)
     assert txn._read_manifest(path, txn.current_version(path))[
         "expectations"
     ] == {"v_nonneg": "v >= 0"}
@@ -1831,10 +1828,10 @@ def test_expectations_enforced_on_cow_upsert_path(spark, tmp_path):
     )
     bad = spark.createDataFrame([(5, -1)], "k long, v long")
     with pytest.raises(txn.ExpectationViolation):
-        txn.commit_upsert_cow(spark, bad, path, key="k")
-    # nothing committed; a clean CoW batch still passes
+        txn.commit_upsert(spark, bad, path, key="k")
+    # nothing committed; a clean batch still passes
     v = txn.current_version(path)
-    txn.commit_upsert_cow(
+    txn.commit_upsert(
         spark, spark.createDataFrame([(5, 555)], "k long, v long"), path, key="k"
     )
     assert txn.current_version(path) == v + 1
@@ -1908,14 +1905,14 @@ def test_renamed_key_still_prunes_and_writes(spark, tmp_path):
     assert (scanned, total) == (1, 4)
     got = txn.read_table_where(spark, path, 110, 120, col="id")
     assert got.count() == 11 and set(got.columns) == {"id", "v"}
-    # post-rename writes: keyed append, CoW upsert, MoR delete
+    # post-rename writes: keyed append, file-pruned upsert, MoR delete
     txn.commit_append_with_stats(
         spark,
         spark.createDataFrame([(400, 9)], "id long, v long"),
         path,
         key="id",
     )
-    txn.commit_upsert_cow(
+    txn.commit_upsert(
         spark, spark.createDataFrame([(110, -1)], "id long, v long"), path,
         key="id",
     )
@@ -2087,17 +2084,16 @@ def test_merge_clause_toggles_and_dup_source_rejected(spark, tmp_path):
 
 
 def test_merge_cow_matches_merge_and_prunes_files(spark, tmp_path):
-    """commit_merge_cow must produce the same post-merge state as
-    commit_merge while carrying untouched files forward BY REFERENCE
-    (the O(touched files) CDC-apply cost model)."""
+    """One commit_merge on a zone-mapped table and on a stats-less one
+    must reach the same state and record the same change rows, while
+    the zone-mapped table carries the files the batch cannot touch
+    forward BY REFERENCE (the O(touched files) CDC-apply cost model)."""
     full, cow = str(tmp_path / "full"), str(tmp_path / "cow")
     # 4 files with disjoint key ranges
     for lo in (0, 100, 200, 300):
-        for p in (full, cow):
-            txn.commit_append_with_stats(
-                spark, _df(spark, lo, lo + 100).coalesce(1), p, key="k",
-                change_feed=True,
-            )
+        batch = _df(spark, lo, lo + 100).coalesce(1)
+        txn.commit_append(spark, batch, full, key="k", change_feed=True)
+        txn.commit_append_with_stats(spark, batch, cow, key="k", change_feed=True)
     source = spark.createDataFrame(
         [
             (110, 111, "U"),   # matched update (file 2)
@@ -2107,31 +2103,36 @@ def test_merge_cow_matches_merge_and_prunes_files(spark, tmp_path):
         ],
         "k long, v long, op string",
     )
-    txn.commit_merge(spark, source, full, key="k", matched_delete="op = 'D'")
+    full_before = txn._read_manifest(full, txn.current_version(full))
     man_before = txn._read_manifest(cow, txn.current_version(cow))
-    txn.commit_merge_cow(spark, source, cow, key="k", matched_delete="op = 'D'")
+    txn.commit_merge(spark, source, full, key="k", matched_delete="op = 'D'")
+    txn.commit_merge(spark, source, cow, key="k", matched_delete="op = 'D'")
+    full_after = txn._read_manifest(full, txn.current_version(full))
     man_after = txn._read_manifest(cow, txn.current_version(cow))
     same = {(r["k"], r["v"]) for r in txn.read_table(spark, full).collect()}
     assert {(r["k"], r["v"]) for r in txn.read_table(spark, cow).collect()} == same
-    # files whose ranges the batch never touched moved by reference
+    # only the [100, 200) file holds a source key: the other three moved
+    # by reference; without stats every file was rewritten
     carried = set(man_before["files"]) & set(man_after["files"])
-    assert len(carried) >= 2  # the [0,100) and [200,300) files at least
-    # the change feed agrees with the full-rewrite merge's CDC
+    assert carried == set(man_before["files"]) - {man_before["files"][1]}
+    assert not set(full_before["files"]) & set(full_after["files"])
+    # both tables record the same change rows
     from qb_data_pipeline_backfill_spark.sources.txn_cdf import read_cdf_log
 
-    v = txn.current_version(cow)
-    cdc = {
-        (r["k"], r["v"], r["_change_type"])
-        for r in read_cdf_log(spark, cow, v - 1, v).collect()
-    }
-    assert cdc == {
-        (110, 1100, "update_preimage"),
-        (110, 111, "update_postimage"),
-        (999, 9, "insert"),
-        (120, 1200, "delete"),
-    }
+    for p in (full, cow):
+        v = txn.current_version(p)
+        cdc = {
+            (r["k"], r["v"], r["_change_type"])
+            for r in read_cdf_log(spark, p, v - 1, v).collect()
+        }
+        assert cdc == {
+            (110, 1100, "update_preimage"),
+            (110, 111, "update_postimage"),
+            (999, 9, "insert"),
+            (120, 1200, "delete"),
+        }
     # empty batch: metadata-only version, watermark lands anyway
-    txn.commit_merge_cow(
+    txn.commit_merge(
         spark,
         source.limit(0),
         cow,
@@ -2142,18 +2143,102 @@ def test_merge_cow_matches_merge_and_prunes_files(spark, tmp_path):
     man = txn._read_manifest(cow, txn.current_version(cow))
     assert man["cdc_applied_version"] == 42
     assert man["cdc"]["mode"] == "none"
+    assert man["files"] == man_after["files"]
 
 
-def test_merge_cow_requires_key_stats(spark, tmp_path):
+def test_merge_without_key_stats_rewrites_every_file(spark, tmp_path):
+    """With no zone map on the merge key — plain appends, or stats
+    keyed on another column — there is nothing to prune with:
+    commit_merge rewrites every file, with the same result."""
+    upd = spark.createDataFrame([(1, -1)], "k long, v long")
+    for name, append in (
+        ("plain", lambda df, p: txn.commit_append(spark, df, p)),
+        ("other", lambda df, p: txn.commit_append_with_stats(spark, df, p, key="v")),
+    ):
+        path = str(tmp_path / name)
+        for lo in (0, 10):
+            append(_df(spark, lo, lo + 10).coalesce(1), path)
+        before = txn._read_manifest(path, 1)["files"]
+        txn.commit_merge(spark, upd, path, key="k")
+        assert not set(before) & set(txn._read_manifest(path, 2)["files"])
+        got = {r["k"]: r["v"] for r in txn.read_table(spark, path).collect()}
+        assert got[1] == -1 and got[11] == 110 and len(got) == 20
+
+
+def test_merge_probe_costs_no_extra_spark_job(spark, tmp_path):
+    """The touched-file probe rides in the duplicate-key aggregate MERGE
+    runs anyway. Counted through the status tracker: probing a
+    zone-mapped table runs the same Spark jobs as the stats-less case,
+    where nothing is probed, and no more than the duplicate-key check
+    alone; a whole zone-mapped merge runs no more jobs than the
+    stats-less full rewrite."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, "job count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    zoned, plain = str(tmp_path / "zoned"), str(tmp_path / "plain")
+    for lo in (0, 100, 200, 300):
+        batch = _df(spark, lo, lo + 100).coalesce(1)
+        txn.commit_append_with_stats(spark, batch, zoned, key="k")
+        txn.commit_append(spark, batch, plain, key="k")
+    source = spark.createDataFrame(
+        [(110, 1), (250, 2), (999, 3)], "k long, v long"
+    )
+    zman, pman = txn._read_manifest(zoned, 3), txn._read_manifest(plain, 3)
+    _, dup_jobs = jobs(lambda: txn._duplicate_key_example(source, "k"))
+    (n, dup, touched), zoned_jobs = jobs(
+        lambda: txn._probe_source(spark, zman, source, "k")
+    )
+    assert (n, dup) == (3, [])
+    assert touched == zman["files"][1:3]
+    (_, _, every), plain_jobs = jobs(
+        lambda: txn._probe_source(spark, pman, source, "k")
+    )
+    assert every == pman["files"]
+    assert zoned_jobs == plain_jobs <= dup_jobs
+    _, zoned_merge = jobs(lambda: txn.commit_merge(spark, source, zoned, key="k"))
+    _, plain_merge = jobs(lambda: txn.commit_merge(spark, source, plain, key="k"))
+    assert zoned_merge <= plain_merge
+
+
+def test_merge_drops_dvs_only_when_every_referenced_file_rewrites(
+    spark, tmp_path
+):
+    """Deletion vectors whose referenced files a merge all rewrites are
+    materialized away — an inert list would tax every later read with
+    _apply_dvs' anti-join until maintenance — while a DV on a file the
+    merge carries by reference keeps applying."""
     path = str(tmp_path / "t")
-    txn.commit_append(spark, _df(spark, 0, 10), path)  # no stats
-    with pytest.raises(ValueError, match="zone-map stats"):
-        txn.commit_merge_cow(
-            spark,
-            spark.createDataFrame([(1, 1)], "k long, v long"),
-            path,
-            key="k",
+    for lo in (0, 100):
+        txn.commit_append_with_stats(
+            spark, _df(spark, lo, lo + 100).coalesce(1), path, key="k"
         )
+    txn.commit_delete_mor(spark, _keys(spark, 5), path, key="k")
+    assert txn.dv_file_count(path) == 1
+    # the merge touches the low file, the only DV-referenced one
+    txn.commit_merge(
+        spark, spark.createDataFrame([(6, -6)], "k long, v long"), path, key="k"
+    )
+    assert txn.dv_file_count(path) == 0
+    got = {r["k"]: r["v"] for r in txn.read_table(spark, path).collect()}
+    assert 5 not in got and got[6] == -6 and len(got) == 199
+    # a DV on the high file survives a merge that touches the low one
+    txn.commit_delete_mor(spark, _keys(spark, 150), path, key="k")
+    txn.commit_merge(
+        spark, spark.createDataFrame([(7, -7)], "k long, v long"), path, key="k"
+    )
+    assert txn.dv_file_count(path) == 1
+    got = {r["k"]: r["v"] for r in txn.read_table(spark, path).collect()}
+    assert 150 not in got and got[7] == -7 and len(got) == 198
 
 
 def test_merge_enforces_expectations_on_writes_not_departures(
@@ -2298,7 +2383,7 @@ def test_enable_change_feed_records_from_that_version_on(spark, tmp_path):
         (2, -2, "update_postimage"),
     }
     # the property survives rewrite commits (_carry_meta)
-    txn.commit_compact(spark, path)
+    txn.commit_compact_files(spark, path)
     assert txn.change_feed_enabled(path)
     # and disable stops recording again
     txn.disable_change_feed(path)
@@ -2874,8 +2959,6 @@ def test_upsert_rejects_duplicate_batch_keys(spark, tmp_path):
     dup = spark.createDataFrame([(3, 1), (3, 2)], "k long, v long")
     with pytest.raises(ValueError, match="duplicate key"):
         txn.commit_upsert(spark, dup, path, key="k")
-    with pytest.raises(ValueError, match="duplicate key"):
-        txn.commit_upsert_cow(spark, dup, path, key="k")
     assert txn.current_version(path) == 0  # nothing committed
 
 
@@ -2920,14 +3003,14 @@ def test_table_history_labels_and_diffs(spark, tmp_path):
     txn.commit_delete_mor(
         spark, _df(spark, 0, 10).select("k"), path, key="k"
     )
-    txn.commit_upsert_cow(
+    txn.commit_upsert(
         spark,
         _df(spark, 5, 8).withColumn("v", F.lit(-1)),
         path,
         key="k",
     )
     txn.alter_rename_column(path, "v", "val")
-    txn.commit_compact(spark, path)
+    txn.commit_compact_files(spark, path)
     txn.restore_table(spark, path, 0)
     h = {
         r["version"]: r.asDict()
@@ -3125,7 +3208,7 @@ def test_snapshot_row_count_metadata_and_dv_paths(spark, tmp_path):
     assert txn.snapshot_row_count(spark, path) == 93
     # time travel: historical counts stay pinned
     assert txn.snapshot_row_count(spark, path, 0) == 100
-    txn.commit_compact(spark, path)
+    txn.commit_compact_files(spark, path)
     assert txn.snapshot_row_count(spark, path) == 93
     assert txn.read_table(spark, path).count() == 93
 
@@ -3576,7 +3659,7 @@ def test_scd2_watermark_survives_maintenance(spark, tmp_path):
         spark, path, _scd2_batch2(spark), "k", "seq", op_col="op",
         batch_id="b2",
     )
-    txn.commit_compact(spark, path, target_partitions=1)
+    txn.commit_compact_files(spark, path, target_partitions=1)
     head = txn.current_version(path)
     # the retry of b2 after the compaction: still an exactly-once no-op
     assert txn.apply_changes_scd2(

@@ -157,7 +157,7 @@ def main() -> int:
         # predicate-matching rows rewrite), so bytes_written tracks the
         # touched slice. A %11 key slice touches every hash-partitioned
         # file, so this probe records the WORST case; range-partitioned
-        # layouts (the mcow table below) show the pruned case.
+        # layouts (the mzoned table below) show the pruned case.
         rw = os.path.join(base, "rw")
         txn.commit_append(spark, orders, rw, key="o_orderkey")
         b0 = _data_bytes(rw)
@@ -178,7 +178,7 @@ def main() -> int:
         )
 
         cf = os.path.join(base, "cf")
-        # range-partitioned so the CoW upsert's zone maps actually prune
+        # range-partitioned so the upsert's zone maps actually prune
         ranged = orders.repartitionByRange(n_files, "o_orderkey")
         txn.commit_append_with_stats(
             spark, ranged, cf, key="o_orderkey", change_feed=True
@@ -186,7 +186,7 @@ def main() -> int:
         upd = orders.filter(F.col("o_orderkey") % 499 == 0).withColumn(
             "o_orderpriority", F.lit("X-PROBE")
         )
-        txn.commit_upsert_cow(spark, upd, cf, key="o_orderkey")
+        txn.commit_upsert(spark, upd, cf, key="o_orderkey")
         out["cdf_change_rows"] = read_cdf_log(spark, cf, 0).count()
         out["cdf_log_read_sec"] = _timed(
             lambda: read_cdf_log(spark, cf, 0).agg(F.count("*")).collect()
@@ -196,36 +196,41 @@ def main() -> int:
             .agg(F.count("*"))
             .collect()
         )
-        # -- CDC-apply merge: full-rewrite vs copy-on-write --------------
-        # a narrow-key-range merge batch (one replica "day") against
-        # full-rewrite MERGE and the probe-pruned CoW MERGE
+        # -- CDC-apply merge: one commit_merge, two table layouts --------
+        # the same narrow-key-range batch (one replica "day") merged into
+        # a zone-mapped table, where only the files its keys can touch
+        # rewrite, and into a stats-less table, where every file does
         lo_key = orders.agg(F.min("o_orderkey")).collect()[0][0]
         batch = (
             orders.filter(F.col("o_orderkey") < lo_key + 200)
             .withColumn("o_orderpriority", F.lit("Y-PROBE"))
             .withColumn("op", F.lit("U"))
         )
-        mfull, mcow = os.path.join(base, "mfull"), os.path.join(base, "mcow")
-        for p in (mfull, mcow):
-            txn.commit_append_with_stats(spark, ranged, p, key="o_orderkey")
-        b0 = _data_bytes(mfull)
-        out["merge_full_sec"] = _timed(
-            lambda: txn.commit_merge(
-                spark, batch, mfull, key="o_orderkey", matched_delete="op = 'X'"
-            )
-        )
-        out["merge_full_bytes_written"] = _data_bytes(mfull) - b0
-        b0 = _data_bytes(mcow)
-        out["merge_cow_sec"] = _timed(
-            lambda: txn.commit_merge_cow(
-                spark, batch, mcow, key="o_orderkey", matched_delete="op = 'X'"
-            )
-        )
-        out["merge_cow_bytes_written"] = _data_bytes(mcow) - b0
-        assert (
-            txn.read_table(spark, mcow).count()
-            == txn.read_table(spark, mfull).count()
-        )
+        merged_rows = {}
+        for layout, create in (
+            ("zoned", txn.commit_append_with_stats),
+            ("plain", txn.commit_append),
+        ):
+            p = os.path.join(base, f"m{layout}")
+            create(spark, ranged, p, key="o_orderkey")
+            touched: list[str] = []  # "files touched/files total" per commit
+
+            def merge():
+                v = txn.current_version(p)
+                txn.commit_merge(
+                    spark, batch, p, key="o_orderkey", matched_delete="op = 'X'"
+                )
+                before = txn._read_manifest(p, v)["files"]
+                after = set(txn._read_manifest(p, v + 1)["files"])
+                gone = sum(n not in after for n in before)
+                touched.append(f"{gone}/{len(before)}")
+
+            b0 = _data_bytes(p)
+            out[f"merge_{layout}_sec"] = _timed(merge)
+            out[f"merge_{layout}_bytes_written"] = _data_bytes(p) - b0
+            out[f"merge_{layout}_files_touched"] = touched
+            merged_rows[layout] = txn.read_table(spark, p).count()
+        assert merged_rows["zoned"] == merged_rows["plain"]
         # -- copy-on-write DELETE: zone-map pruned vs full rewrite -------
         # commit_delete on a range-keyed stats table rewrites only the
         # files whose key interval holds a delete key (round 7); the
@@ -258,15 +263,15 @@ def main() -> int:
             t0 = time.time()
             if kind == "mor_delete":
                 txn.commit_delete_mor(spark, doomed, p, key="o_orderkey")
-            elif kind == "upsert_cow":
-                txn.commit_upsert_cow(spark, upd, p, key="o_orderkey")
+            elif kind == "upsert":
+                txn.commit_upsert(spark, upd, p, key="o_orderkey")
             else:  # merge
                 txn.commit_merge(
                     spark, batch, p, key="o_orderkey", matched_delete="op = 'X'"
                 )
             return round(time.time() - t0, 3), _data_bytes(p) - b0
 
-        for kind in ("mor_delete", "upsert_cow", "merge"):
+        for kind in ("mor_delete", "upsert", "merge"):
             on_s, on_b = _one_commit(kind, True)
             off_s, off_b = _one_commit(kind, False)
             out[f"cdc_overhead_{kind}"] = {
@@ -284,7 +289,10 @@ def main() -> int:
         f"{out['read_after_mor_sec']}s; bloom scans "
         f"{out['bloom_files_scanned']}/{out['bloom_files_total']} files, "
         f"lookup {out['lookup_bloom_sec']}s vs fullscan "
-        f"{out['lookup_fullscan_sec']}s",
+        f"{out['lookup_fullscan_sec']}s; merge files touched zoned "
+        f"{out['merge_zoned_files_touched']} in {out['merge_zoned_sec']}s vs "
+        f"stats-less {out['merge_plain_files_touched']} in "
+        f"{out['merge_plain_sec']}s",
         file=sys.stderr,
     )
     return 0
