@@ -9,24 +9,27 @@ batch on any error (:63-65), risking duplicates.
 
 The Spark-native shape is a LEFT ANTI join against the target's key
 projection followed by an append. At 100 TB the decisive design point
-is the PROBE, not the join: an unpartitioned target makes the
-existing-key scan grow with the table's full history. ``partition_col``
-fixes that — the analog of the reference's B-tree index on
-``ingested_at_utc`` (init_qb_schema.sql:36-38): the target is laid out
-by (e.g.) ingest date, the batch's own partition values are collected
-(bounded — a backfill window touches a handful of dates), and the
-probe reads ONLY those directories via partition pruning.
+is the PROBE, not the join: an unpartitioned target would make the
+existing-key scan grow with the table's full history. The Parquet
+target is therefore always partitioned (``partition_col``) — the
+analog of the reference's B-tree index on ``ingested_at_utc``
+(init_qb_schema.sql:36-38): the target is laid out by (e.g.) window
+date, the batch's own partition values are collected (bounded — a
+backfill window touches a handful of dates), and the probe reads ONLY
+those directories via partition pruning.
 
-True transactional exactly-once needs a table format with atomic
-commits (Delta/Iceberg `MERGE INTO`) — not available in this image, so
-`write_idempotent` documents single-writer discipline instead.
+True transactional exactly-once needs atomic commits. Those live in
+``operators/txn.py`` (keyed idempotent append, snapshot isolation,
+conflict detection); until backfill windows land through it,
+``write_idempotent`` keeps single-writer discipline.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -41,63 +44,68 @@ def write_idempotent(
     batch: DataFrame,
     target_path: str,
     key: str = "id",
-    partition_col: str | None = None,
+    *,
+    partition_col: str,
 ) -> int:
-    """Append only not-yet-loaded rows to a Parquet target; returns the
-    number of rows written.
+    """Append only not-yet-loaded rows to a Parquet target partitioned
+    by ``partition_col``; returns the number of rows written.
 
     Implements the reference's idempotent-load contract (ops #20-#23):
-    re-running the same batch inserts 0 rows.
+    re-running the same batch inserts 0 rows. The existing-key probe
+    reads only the partitions the batch touches (op #40), so its cost
+    is bounded by the batch's window, not the target's lifetime size.
 
-    With ``partition_col`` the target is written partitioned by that
-    column AND the existing-key probe is restricted to the partitions
-    the batch actually touches (op #40) — the probe cost is bounded by
-    the batch's window, not the target's lifetime size. Single-writer
+    The source is read once: the batch is persisted before the
+    partition-value collect, which is its only pass over the source;
+    the anti-join and the append then run from that cache. A batch the
+    caller already cached is used as is and stays cached. Single-writer
     discipline: concurrent writers can still race between the
-    anti-join read and the append (the reference has the same race); a
-    transactional format (Delta MERGE) is the at-scale answer.
+    anti-join read and the append (the reference has the same race).
     """
-    if _target_exists(spark, target_path):
-        if partition_col:
-            # Bounded collect: a backfill batch spans few partition
-            # values (window dates).
-            values = [
-                r[0] for r in batch.select(partition_col).distinct().collect()
-            ]
-        else:
-            values = None
-        existing = existing_keys_probe(spark, target_path, key, partition_col, values)
-        batch = new_rows_only(batch, existing, key)
-    # Materialize once: we both count and write. At scale you would
-    # skip the count (or read the committed files' row count) — kept
-    # here because the reference logs "New records to insert: N".
-    batch = batch.persist()
+
+    def append(df: DataFrame) -> None:
+        df.write.mode("append").partitionBy(partition_col).parquet(target_path)
+
+    if not _target_has_data(spark, target_path):
+        return _append_new(batch, append)
+    owned = not batch.is_cached
+    if owned:
+        batch = batch.persist()
     try:
-        n = batch.count()
-        if n > 0:
-            writer = batch.write.mode("append")
-            if partition_col:
-                writer = writer.partitionBy(partition_col)
-            writer.parquet(target_path)
-        return n
+        # Bounded collect: a backfill batch spans few partition values
+        # (window dates).
+        values = [r[0] for r in batch.select(partition_col).distinct().collect()]
+        existing = existing_keys_probe(spark, target_path, key, partition_col, values)
+        return _append_new(new_rows_only(batch, existing, key), append)
     finally:
-        batch.unpersist()
+        if owned:
+            batch.unpersist()
 
 
 def existing_keys_probe(
     spark: SparkSession,
     target_path: str,
     key: str,
-    partition_col: str | None = None,
-    values: list | None = None,
+    partition_col: str,
+    values: list,
 ) -> DataFrame:
     """Key projection of the target, partition-pruned to ``values`` of
-    ``partition_col`` when given — the probe reads only the directories
-    the batch's window touches (verify with ``.inputFiles()``)."""
+    ``partition_col`` — the probe reads only the directories the
+    batch's window touches (verify with ``input_file_name()``)."""
     existing = spark.read.parquet(target_path)
-    if partition_col and values is not None:
-        existing = existing.filter(F.col(partition_col).isin(values))
-    return existing.select(key)
+    return existing.filter(F.col(partition_col).isin(values)).select(key)
+
+
+def _append_new(rows: DataFrame, append: Callable[[DataFrame], None]) -> int:
+    """Run ``append`` on ``rows`` and return how many rows it wrote.
+
+    The count rides the append's own action as an observed metric, so
+    no separate count job re-reads the input. An empty ``rows`` still
+    runs the append; neither sink adds a data file for it.
+    """
+    obs = Observation()
+    append(rows.observe(obs, F.count(F.lit(1)).alias("n")))
+    return obs.get["n"]
 
 
 _IDENTIFIER_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)?$")
@@ -119,7 +127,6 @@ def write_jdbc_idempotent(
     table: str,
     key: str = "id",
     properties: dict[str, str] | None = None,
-    probe_partitions: tuple[str, int] | None = None,
     _read_existing=None,
     _append=None,
 ) -> int:
@@ -127,12 +134,12 @@ def write_jdbc_idempotent(
     Postgres ``raw.*`` via io_config.yaml:84-91); returns rows written.
 
     The existing-key probe pushes a key-only projection down to the
-    database. ``probe_partitions=(partition_column, n)`` splits the
-    probe read across ``n`` parallel JDBC partitions (the reference
-    reads the whole key set over one connection — unbounded at scale).
+    database.
 
     ``_read_existing``/``_append`` are injection seams so the logic is
     unit-testable without a database; by default they run real JDBC.
+    ``_append`` must consume its rows in a Spark action: the returned
+    count is observed on that action.
 
     Postgres dialect notes (untestable in this sandbox — no pg JDBC
     jar ships here; semantics are proven against embedded Derby): the
@@ -147,34 +154,13 @@ def write_jdbc_idempotent(
     props = {"driver": "org.postgresql.Driver", **(properties or {})}
 
     def default_read_existing() -> DataFrame:
-        reader = (
+        return (
             spark.read.format("jdbc")
             .option("url", url)
             .option("dbtable", f"(SELECT {key} FROM {table}) AS existing_keys")
             .options(**props)
+            .load()
         )
-        if probe_partitions:
-            part_col, n = probe_partitions
-            _check_identifier(part_col, "probe partition column")
-            bounds = (
-                spark.read.format("jdbc")
-                .option("url", url)
-                .option(
-                    "dbtable",
-                    f"(SELECT MIN({part_col}) lo, MAX({part_col}) hi FROM {table}) b",
-                )
-                .options(**props)
-                .load()
-                .collect()[0]
-            )
-            if bounds["lo"] is not None:
-                reader = (
-                    reader.option("partitionColumn", part_col)
-                    .option("lowerBound", str(bounds["lo"]))
-                    .option("upperBound", str(bounds["hi"]))
-                    .option("numPartitions", str(n))
-                )
-        return reader.load()
 
     def default_append(df: DataFrame) -> None:
         (
@@ -187,23 +173,23 @@ def write_jdbc_idempotent(
         )
 
     existing = (_read_existing or default_read_existing)()
-    new_rows = new_rows_only(batch, existing, key).persist()
-    try:
-        n = new_rows.count()
-        if n > 0:
-            (_append or default_append)(new_rows)
-        return n
-    finally:
-        new_rows.unpersist()
+    return _append_new(
+        new_rows_only(batch, existing, key), _append or default_append
+    )
 
 
-def _target_exists(spark: SparkSession, path: str) -> bool:
+def _target_has_data(spark: SparkSession, path: str) -> bool:
     """Existence check through the Hadoop FileSystem of the path —
     scheme-less paths resolve against fs.defaultFS exactly as the
     write will, so the probe and the append always agree on the
     filesystem (a driver-local os.path check would not, on a cluster
-    whose defaultFS is HDFS/S3)."""
+    whose defaultFS is HDFS/S3). A first append of zero rows leaves
+    only ``_SUCCESS``, which has no schema to read: still a new target."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
+    fs = p.getFileSystem(conf)
+    return fs.exists(p) and any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(p)
+    )

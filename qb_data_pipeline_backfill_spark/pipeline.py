@@ -9,7 +9,7 @@ window filter → envelope projection → validation → anti-join →
 partitioned append. Catalyst fuses extract/validate into the scan
 stage; the only shuffles are the dedup and the idempotence anti-join,
 and the sink's existing-key probe is partition-pruned to the batch's
-ingest date (op #40).
+extract-window date (op #40).
 
 Also here: the CSV-over-HTTP template loader (op #24) feeding the
 median-imputation transformer — the reference's example_pipeline
@@ -57,10 +57,12 @@ def run_backfill(
     window inserts 0 rows.
 
     Metrics come from ``DataFrame.observe`` accumulators riding the
-    sink's own action — NOT separate ``count()`` jobs, which would
-    re-scan the source twice per run (and for the REST source,
-    re-fetch every page twice). One pass computes the pipeline AND
-    its run metrics.
+    sink's single pass over the source — NOT separate ``count()`` jobs,
+    which would re-scan the source (and for the REST source, re-fetch
+    every page) per metric. On an existing target that pass is the
+    sink's partition-value collect, which fills its cache for the
+    anti-join and the append; on a new target it is the append itself.
+    The inserted count is observed on the append too.
     """
     from pyspark.sql import Observation
 
@@ -90,7 +92,7 @@ def run_backfill(
     # the pruned probe always sees the partition a rerun would collide
     # with. (Load-time ingest_date would change on rerun and the probe
     # would miss the original rows.) Cross-window global dedup needs
-    # partition_col=None or a transactional MERGE.
+    # the keyed append of the txn table (operators/txn.py).
     env = env.withColumn("window_date", F.to_date("extract_window_start_utc"))
     n_inserted = write_idempotent(
         spark, env, target_path, key="id", partition_col="window_date"

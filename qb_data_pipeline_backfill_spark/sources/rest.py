@@ -139,9 +139,6 @@ class _QboRestReader(DataSourceReader):
         self.page_pause_s = float(options.get("page_pause_s", "0.5"))
         self.retry_wait_s = float(options.get("retry_wait_s", "60"))
         self.max_retries = int(options.get("max_retries", "5"))
-        self.use_count_pushdown = (
-            options.get("count_pushdown", "true").lower() == "true"
-        )
         # Pages grouped per input partition: amortizes per-task (and
         # Python-worker) overhead while keeping pages the pacing unit.
         self.pages_per_partition = int(options.get("pages_per_partition", "1"))
@@ -159,7 +156,9 @@ class _QboRestReader(DataSourceReader):
     # --- pushdown (op #4) -------------------------------------------------
     def pushFilters(self, filters: list[Filter]):  # noqa: N802 (API name)
         """Translate one supported Catalyst filter on ``id`` into the
-        remote query's WHERE clause; everything else stays in Spark."""
+        remote query's WHERE clause; everything else stays in Spark.
+        Spark never re-checks a pushed filter, so only string values that
+        cannot leave the quoted literal (no quote or backslash) are pushed."""
         ops = {
             EqualTo: "=",
             GreaterThan: ">",
@@ -173,7 +172,8 @@ class _QboRestReader(DataSourceReader):
                 op is not None
                 and self.where is None
                 and tuple(f.attribute) == ("id",)
-                and isinstance(f.value, (str, int))
+                and isinstance(f.value, str)
+                and not any(c in f.value for c in "'\\")
             ):
                 self.where = f"Id {op} '{f.value}'"
                 continue
@@ -236,19 +236,16 @@ class _QboRestReader(DataSourceReader):
 
     # --- planning (ops #1, #5) -------------------------------------------
     def partitions(self):
-        if self.use_count_pushdown:
-            try:
-                data = self._get(self._query_url(self._entity_query("COUNT(*)")))
-                total = data["QueryResponse"]["totalCount"]
-                n_pages = max((total + self.page_size - 1) // self.page_size, 1)
-                step = max(self.pages_per_partition, 1)
-                return [
-                    _Page(p, min(step, n_pages - p + 1))
-                    for p in range(1, n_pages + 1, step)
-                ]
-            except (urllib.error.HTTPError, KeyError):
-                pass  # remote dialect lacks COUNT → sequential fallback
-        return [_Page(-1)]
+        try:
+            data = self._get(self._query_url(self._entity_query("COUNT(*)")))
+            total = data["QueryResponse"]["totalCount"]
+        except (urllib.error.HTTPError, KeyError):
+            return [_Page(-1)]  # remote dialect lacks COUNT → sequential fallback
+        n_pages = max((total + self.page_size - 1) // self.page_size, 1)
+        step = max(self.pages_per_partition, 1)
+        return [
+            _Page(p, min(step, n_pages - p + 1)) for p in range(1, n_pages + 1, step)
+        ]
 
     # --- execution --------------------------------------------------------
     def read(self, partition: _Page):
@@ -287,7 +284,7 @@ class QboRestDataSource(DataSource):
 
     entity, environment (sandbox|production), base_url (override),
     realm_id, client_id, client_secret, refresh_token, page_size,
-    page_pause_s, retry_wait_s, max_retries, count_pushdown, where.
+    pages_per_partition, page_pause_s, retry_wait_s, max_retries, where.
     """
 
     @classmethod

@@ -65,6 +65,7 @@ class StubQboServer:
             for k, name, nation, seg, bal in rows
         ]
         self.fail_first_n = fail_first_n
+        self.reject_count = False  # True: COUNT → HTTP 400 (no-COUNT dialect)
         self.n_429_sent = 0
         self.n_page_requests = 0
         self.n_token_requests = 0
@@ -116,6 +117,8 @@ class StubQboServer:
                 query = qs.get("query", [""])[0]
 
                 m = _COUNT_RE.match(query)
+                if m and server_self.reject_count:
+                    return self._json(400, {"error": "COUNT not supported"})
                 if m:
                     recs = server_self._filtered(m.group(2), m.group(3), m.group(4))
                     return self._json(

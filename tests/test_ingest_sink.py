@@ -65,13 +65,17 @@ def test_envelope_schema_and_payload(spark):
     assert row.page_size == 100
 
 
+def _one_window(df):
+    return df.withColumn("window_date", F.lit("2024-01-01"))
+
+
 def test_write_idempotent_rerun_inserts_zero(spark, tmp_path, batch):
     target = str(tmp_path / "raw_things")
-    clean = validate_batch(batch, key="id", order_cols=["val"])
-    n1 = write_idempotent(spark, clean, target, key="id")
+    clean = _one_window(validate_batch(batch, key="id", order_cols=["val"]))
+    n1 = write_idempotent(spark, clean, target, key="id", partition_col="window_date")
     assert n1 == 3
     # reference invariant: second identical run inserts 0 rows
-    n2 = write_idempotent(spark, clean, target, key="id")
+    n2 = write_idempotent(spark, clean, target, key="id", partition_col="window_date")
     assert n2 == 0
     loaded = spark.read.parquet(target)
     assert loaded.count() == loaded.select("id").distinct().count() == 3
@@ -79,11 +83,36 @@ def test_write_idempotent_rerun_inserts_zero(spark, tmp_path, batch):
 
 def test_write_idempotent_incremental(spark, tmp_path):
     target = str(tmp_path / "raw_inc")
-    b1 = spark.createDataFrame([("1", "a"), ("2", "b")], ["id", "v"])
-    b2 = spark.createDataFrame([("2", "b"), ("3", "c")], ["id", "v"])
-    assert write_idempotent(spark, b1, target) == 2
-    assert write_idempotent(spark, b2, target) == 1  # only "3" is new
+    b1 = _one_window(spark.createDataFrame([("1", "a"), ("2", "b")], ["id", "v"]))
+    b2 = _one_window(spark.createDataFrame([("2", "b"), ("3", "c")], ["id", "v"]))
+    assert write_idempotent(spark, b1, target, partition_col="window_date") == 2
+    # only "3" is new
+    assert write_idempotent(spark, b2, target, partition_col="window_date") == 1
     assert {r.id for r in spark.read.parquet(target).collect()} == {"1", "2", "3"}
+
+
+def test_write_idempotent_keeps_caller_cache(spark, tmp_path):
+    target = str(tmp_path / "raw_cached")
+    b1 = _one_window(spark.createDataFrame([("1", "a")], ["id", "v"])).cache()
+    b2 = _one_window(spark.createDataFrame([("1", "a"), ("2", "b")], ["id", "v"])).cache()
+    # fresh target, then existing target: the caller's cache survives both
+    assert write_idempotent(spark, b1, target, partition_col="window_date") == 1
+    assert b1.is_cached
+    assert write_idempotent(spark, b2, target, partition_col="window_date") == 1
+    assert b2.is_cached
+    b1.unpersist()
+    b2.unpersist()
+
+
+def test_write_idempotent_empty_first_window(spark, tmp_path):
+    # an empty first batch leaves no readable data behind; the next
+    # batch must still see a new target rather than fail its probe
+    target = str(tmp_path / "raw_empty_first")
+    rows = _one_window(spark.createDataFrame([("1", "a")], ["id", "v"]))
+    assert write_idempotent(spark, rows.limit(0), target, partition_col="window_date") == 0
+    assert write_idempotent(spark, rows, target, partition_col="window_date") == 1
+    assert write_idempotent(spark, rows, target, partition_col="window_date") == 0
+    assert spark.read.parquet(target).count() == 1
 
 
 def test_new_rows_only_anti_join(spark):

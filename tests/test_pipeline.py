@@ -84,6 +84,58 @@ def test_run_backfill_second_window_appends(spark, tmp_path, source):
     assert spark.read.parquet(target).count() == 4
 
 
+def test_run_backfill_fetches_each_page_once_per_window(spark, tmp_path, sf_dir):
+    """One pass over the REST source per window: landing a window on an
+    existing target and replaying it each fetch every page once (150
+    stub customers at 40 per page = 4 pages), not once per sink job."""
+    from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
+    from qb_data_pipeline_backfill_spark.sources.rest import read_qbo
+
+    srv = SQ.StubQboServer(f"{sf_dir}/customer.parquet")
+    target = str(tmp_path / "raw_customers")
+
+    def land(start, end):
+        source = read_qbo(
+            spark,
+            base_url=srv.base_url,
+            client_id=SQ.STUB_CLIENT_ID,
+            client_secret=SQ.STUB_CLIENT_SECRET,
+            refresh_token=SQ.STUB_REFRESH_TOKEN,
+            page_pause_s="0.0",
+            page_size="40",
+        )
+        return run_backfill(
+            spark,
+            source,
+            target,
+            id_col="id",
+            # ids 0-74 fall in January, 75-149 in February
+            date_col=F.when(F.col("id").cast("int") < 75, "2024-01-10").otherwise(
+                "2024-02-10"
+            ),
+            window_start=start,
+            window_end=end,
+            entity_type="customers",
+            payload_cols=["payload"],
+            order_cols=["payload"],
+            ingested_at=_as_of(),
+        )
+
+    try:
+        land("2024-01-01", "2024-01-31")  # the target now exists
+        before = srv.n_page_requests
+        m = land("2024-02-01", "2024-02-29")
+        assert m == {"extracted": 150, "after_filter": 75, "inserted": 75}
+        assert srv.n_page_requests - before == 4
+        before = srv.n_page_requests
+        m = land("2024-02-01", "2024-02-29")  # replay
+        assert m == {"extracted": 150, "after_filter": 75, "inserted": 0}
+        assert srv.n_page_requests - before == 4
+    finally:
+        srv.close()
+    assert spark.read.parquet(target).count() == 150
+
+
 def test_probe_is_partition_pruned(spark, tmp_path):
     target = str(tmp_path / "raw_pruned")
     b1 = spark.createDataFrame([("1", "2024-01-01")], ["id", "window_date"])

@@ -56,7 +56,8 @@ def test_partition_per_page_and_complete_scan(spark, srv):
 
 
 def test_sequential_fallback_stops_on_short_page(spark, srv):
-    df = read_qbo(spark, **_opts(srv, page_size="40", count_pushdown="false"))
+    srv.reject_count = True  # remote dialect without COUNT
+    df = read_qbo(spark, **_opts(srv, page_size="40"))
     assert df.rdd.getNumPartitions() == 1  # serial pagination, one reader
     assert df.count() == 150
     # 4 pages fetched: 40+40+40+30 (short page ends the loop)
@@ -86,6 +87,17 @@ def test_filter_pushdown_reaches_server(spark, srv):
     assert [r["id"] for r in rows] == ["42"]
     # the pushed WHERE shrank the count probe to 1 row → 1 page → 1 request
     assert srv.n_page_requests == 1
+
+
+@pytest.mark.parametrize("value", ["4'2", "x' OR Id > '"])
+def test_quoted_filter_value_stays_residual(spark, srv, value):
+    # a quote would break out of the remote query's string literal, so
+    # the filter must stay in Spark instead of reaching the server
+    df = read_qbo(spark, **_opts(srv)).filter(F.col("id") == value)
+    assert df.collect() == []
+    # no WHERE pushed → the full 2-page scan happened (a pushed WHERE
+    # matching nothing plans a single page)
+    assert srv.n_page_requests == 2
 
 
 def test_unsupported_filter_is_residual_but_correct(spark, srv):
