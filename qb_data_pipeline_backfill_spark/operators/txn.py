@@ -370,33 +370,81 @@ def _write_manifest_json(manifest: dict, tmp: str) -> None:
         json.dump(enc, f)
 
 
-def _apply_dvs(spark: SparkSession, path: str, man: dict, df: DataFrame) -> DataFrame:
-    """Filter out rows covered by the manifest's deletion vectors.
+def _publish(path: str, manifest: dict, base: int, op: str | None) -> int:
+    """Publish ``manifest`` as version base+1 — the one compare-and-swap
+    every commit kind goes through. The manifest is written to a temp
+    file and hard-linked into place: ``os.link`` fails if the version
+    already exists, so exactly one writer wins and a loser gets
+    ``ConcurrentCommitError`` (it re-reads and retries on the new
+    base). Stamps ``version``, ``parent`` and ``committed_at``, and the
+    commit's ``operation`` label (see ``table_history``); a label a
+    caller's whole-manifest spread dragged in is dropped first —
+    provenance is per-commit, never inherited. A new table publishes
+    with ``base`` -1."""
+    manifest.pop("operation", None)
+    manifest.update(version=base + 1, parent=base, committed_at=time.time())
+    if op is not None:
+        manifest["operation"] = op
+    os.makedirs(_txn_dir(path), exist_ok=True)
+    tmp = os.path.join(_txn_dir(path), f".tmp-{uuid.uuid4().hex}.json")
+    _write_manifest_json(manifest, tmp)
+    try:
+        os.link(tmp, _manifest_path(path, base + 1))
+    except FileExistsError as e:
+        raise ConcurrentCommitError(
+            f"version {base + 1} already committed under {path}"
+        ) from e
+    finally:
+        os.unlink(tmp)
+    return base + 1
+
+
+def _input_file_name():
+    """The data file a scanned row came from, as the manifest names it
+    — the one definition of "file" that deletion-vector rows, the
+    Bloom index and replace-where's touch scan share. Valid only on a
+    direct parquet scan."""
+    from pyspark.sql import functions as FF
+
+    return FF.element_at(FF.split(FF.input_file_name(), "/"), -1)
+
+
+def _apply_dvs(
+    spark: SparkSession,
+    path: str,
+    man: dict,
+    df: DataFrame,
+    keep_file: bool = False,
+) -> DataFrame:
+    """Filter out rows covered by the manifest's deletion vectors — the
+    only reader of DV files.
 
     A DV row is (file_name, key): it suppresses that key ONLY inside
     that named data file, so a later re-append or upsert of the same
     key (which lands in a NEW file) is never shadowed. ``df`` must be
-    a direct parquet scan of the manifest's files — the file identity
-    comes from input_file_name(). DV sets are delete batches, so the
-    anti-join broadcasts them and the table side never shuffles; a
+    a direct parquet scan of the manifest's files under physical names
+    — the file identity comes from ``_input_file_name``. With
+    ``keep_file`` the visible rows keep that identity in a
+    ``__dv_file`` column (DVs or not). DV sets are delete batches, so
+    the anti-join broadcasts them and the table side never shuffles; a
     table whose DVs have grown large should compact (which
     materializes the deletes and clears the vectors)."""
     dvs = man.get("dvs")
-    if not dvs:
+    if not dvs and not keep_file:
         return df
     from pyspark.sql import functions as FF
 
-    key = man["dv_key"]
-    dv = spark.read.parquet(*[os.path.join(path, "data", n) for n in dvs])
-    dvr = dv.select(FF.col("file_name").alias("__dv_file"), FF.col(key))
-    tagged = df.withColumn(
-        "__dv_file", FF.element_at(FF.split(FF.input_file_name(), "/"), -1)
-    )
-    return tagged.join(
-        FF.broadcast(dvr.dropDuplicates(["__dv_file", key])),
-        ["__dv_file", key],
-        "left_anti",
-    ).drop("__dv_file")
+    tagged = df.withColumn("__dv_file", _input_file_name())
+    if dvs:
+        key = man["dv_key"]
+        dv = spark.read.parquet(*[os.path.join(path, "data", n) for n in dvs])
+        dvr = dv.select(FF.col("file_name").alias("__dv_file"), FF.col(key))
+        tagged = tagged.join(
+            FF.broadcast(dvr.dropDuplicates(["__dv_file", key])),
+            ["__dv_file", key],
+            "left_anti",
+        )
+    return tagged if keep_file else tagged.drop("__dv_file")
 
 
 def read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
@@ -414,7 +462,8 @@ def _scan_files(
 ) -> DataFrame:
     """The named files of ``man`` under its logical schema, with the
     manifest's deletion vectors applied — the one read every snapshot,
-    pruned and copy-on-write scan goes through."""
+    pruned, point and copy-on-write scan, and every metadata reader's
+    DV-referenced files, go through."""
     if not names:
         return spark.createDataFrame([], man["schema_ddl"])
     df = spark.read.schema(_physical_ddl(man)).parquet(
@@ -472,7 +521,6 @@ def commit_append(
     key: str | None = None,
     expected_base: int | None = None,
     checkpoint_every: int | None = None,
-    bloom_spec: dict | None = None,
     expectations: dict[str, str] | None = None,
     change_feed: bool | None = None,
     txn_app: str | None = None,
@@ -526,11 +574,47 @@ def commit_append(
     if (txn_app is None) != (txn_version is None):
         raise ValueError("txn_app and txn_version must be passed together")
     base = current_version(path) if expected_base is None else expected_base
-    out = df
-    if key is not None and base >= 0:
-        existing = read_version(spark, path, base).select(key)
-        out = df.join(existing, key, "left_anti")
+    v = _append(
+        spark,
+        df,
+        path,
+        base,
+        key,
+        expectations=expectations,
+        change_feed=change_feed,
+        txn_app=txn_app,
+        txn_version=txn_version,
+    )
+    if checkpoint_every is not None and v % checkpoint_every == 0:
+        checkpoint(path)
+    return v
 
+
+def _append(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    base: int,
+    key: str | None,
+    *,
+    expectations: dict[str, str] | None = None,
+    change_feed: bool | None = None,
+    txn_app: str | None = None,
+    txn_version: int | None = None,
+    key_zone_map: bool = False,
+    stats_cols: list[str] | None = None,
+    bloom_spec: dict | None = None,
+) -> int:
+    """The one keyed-append body behind ``commit_append``,
+    ``commit_append_with_stats`` and ``commit_append_with_bloom``: the
+    ``txn_app`` replay guard, the key anti-join against ``base``, the
+    expectations contract, the column guard, the schema union and the
+    carried table metadata, published as an append-shaped commit.
+    ``key_zone_map`` records the key's zone map on the new files;
+    ``stats_cols`` / ``bloom_spec`` set the secondary zone maps and the
+    Bloom index a table is created with (``None`` inherits the base's;
+    a base's ``stats_cols`` always wins — the set is fixed at
+    creation)."""
     prev0 = _read_manifest(path, base) if base >= 0 else {}
     if (
         txn_app is not None
@@ -539,6 +623,10 @@ def commit_append(
         # this application's transaction already applied: idempotent
         # replay returns the head untouched (no staged bytes, no commit)
         return base
+    out = df
+    if key is not None and base >= 0:
+        existing = read_version(spark, path, base).select(key)
+        out = df.join(existing, key, "left_anti")
     if expectations and _RESERVED_EXPECTATION in expectations:
         raise ValueError(
             f"expectation name {_RESERVED_EXPECTATION!r} is reserved for "
@@ -581,22 +669,19 @@ def commit_append(
             **prev0.get("app_versions", {}),
             txn_app: int(txn_version),
         }
-    v = _commit_replace(
+    return _commit_replace(
         spark,
         out,
         path,
         base,
         carried=prev0.get("files", []),
-        # a bloom spec set at table creation (commit_append_with_bloom)
-        # is inherited by every later append, like the zone-map columns
-        bloom_spec=prev0.get("bloom_spec") or bloom_spec,
+        stats_col=_phys(prev0, key) if key_zone_map else None,
+        stats_cols=prev0.get("stats_cols") or stats_cols,
+        bloom_spec=bloom_spec,
         extra_meta=extra,
         cdc="append",
         op="append",
     )
-    if checkpoint_every is not None and v % checkpoint_every == 0:
-        checkpoint(path)
-    return v
 
 
 def step_is_append_shaped(path: str, version: int) -> bool:
@@ -1210,7 +1295,7 @@ def _file_blooms(
     rows = (
         df.filter(FF.col(col).isNotNull())
         .select(
-            FF.element_at(FF.split(FF.input_file_name(), "/"), -1).alias("fname"),
+            _input_file_name().alias("fname"),
             FF.explode(FF.array(*pos)).alias("pos"),
         )
         .select(
@@ -1358,6 +1443,58 @@ def _snapshot_diff_cdc(
     )
 
 
+def _carry_index(
+    path: str,
+    prev: dict,
+    carried: list[str],
+    stats_col: str | None = None,
+    stats_cols: list[str] | None = None,
+    bloom_spec: dict | None = None,
+) -> dict:
+    """The manifest's per-file index for the ``carried`` files of
+    ``prev`` — the one carry-forward policy every commit that moves
+    files forward by reference uses. ``stats_col``, ``stats_cols`` and
+    ``bloom_spec`` default to ``prev``'s and are recorded with the
+    index. A carried file keeps:
+
+    - its zone map, only under the same stats column;
+    - its ``col_stats``;
+    - its Bloom bits, only under the same spec (bits are meaningful
+      only for the column and hash family they were built with);
+    - its row count (Delta numRecords analog — footer fallback for
+      pre-feature manifests), so ``snapshot_row_count`` answers
+      COUNT(*) from metadata;
+    - its null counts (Delta nullCount analog; absent entries fall back
+      to a footer read at query time), so ``count_where``'s full-keep
+      proof needs no query-time footer reads.
+
+    The returned dicts are the manifest's; a commit staging new files
+    adds their entries to them."""
+    stats_col = stats_col or prev.get("stats_col")
+    stats_cols = stats_cols or prev.get("stats_cols")
+    bloom_spec = bloom_spec or prev.get("bloom_spec")
+
+    def keep(field: str, same: bool = True) -> dict:
+        have = prev.get(field, {}) if same else {}
+        return {f: have[f] for f in carried if f in have}
+
+    index: dict = {
+        "row_counts": {f: _file_row_count(path, prev, f) for f in carried}
+    }
+    if stats_col is not None:
+        index["stats_col"] = stats_col
+        index["stats"] = keep("stats", prev.get("stats_col") == stats_col)
+    if stats_cols:
+        index["stats_cols"] = list(stats_cols)
+        index["col_stats"] = keep("col_stats")
+    if null_counts := keep("null_counts"):
+        index["null_counts"] = null_counts
+    if bloom_spec:
+        index["bloom_spec"] = bloom_spec
+        index["blooms"] = keep("blooms", prev.get("bloom_spec") == bloom_spec)
+    return index
+
+
 def _commit_replace(
     spark: SparkSession,
     merged: DataFrame,
@@ -1382,10 +1519,9 @@ def _commit_replace(
     col=...)`` can prune on non-key predicates. ``stats_col``,
     ``stats_cols`` and ``bloom_spec`` default to the base manifest's.
 
-    The carry-forward policy lives here, in one place: each carried
-    file keeps its base-manifest zone maps, Bloom bits, row and null
-    counts, and the base's deletion vectors carry while some DV row
-    still references a carried file (``_dvs_still_needed``).
+    Each carried file keeps its per-file facts through
+    ``_carry_index``, and the base's deletion vectors carry while some
+    DV row still references a carried file (``_dvs_still_needed``).
 
     ``cdc`` records the commit's change-data-capture metadata (read by
     ``sources/txn_cdf.py``): ``"append"`` declares the newly staged
@@ -1395,7 +1531,6 @@ def _commit_replace(
     skips it); a DataFrame is the commit's net change rows, staged as
     CDC files alongside the data."""
     os.makedirs(os.path.join(path, "data"), exist_ok=True)
-    os.makedirs(_txn_dir(path), exist_ok=True)
     cmap = (extra_meta or {}).get("column_map") or {}
     _guard_new_columns([f.name for f in merged.schema], extra_meta or {})
     stage_id = uuid.uuid4().hex
@@ -1403,33 +1538,12 @@ def _commit_replace(
     _to_physical_df(merged, cmap).write.mode("overwrite").parquet(stage_dir)
     new_files: list[str] = []
     prev_man = _read_manifest(path, base) if base >= 0 else {}
-    stats_col = stats_col or prev_man.get("stats_col")
-    stats_cols = stats_cols or prev_man.get("stats_cols")
-    bloom_spec = bloom_spec or prev_man.get("bloom_spec")
-
-    def _carry(field: str, same_index: bool = True) -> dict:
-        have = prev_man.get(field, {}) if same_index else {}
-        return {f: have[f] for f in carried if f in have}
-
-    # a carried file's zone map / Bloom bits are only meaningful under
-    # the column (spec) they were computed for
-    stats = _carry("stats", prev_man.get("stats_col") == stats_col)
-    col_stats = _carry("col_stats")
-    blooms = _carry("blooms", prev_man.get("bloom_spec") == bloom_spec)
-    # per-file row counts (Delta numRecords analog): the footer read
-    # already happens for the zero-row check, so recording it is free;
-    # carried files inherit the base manifest's count (footer fallback
-    # for pre-feature manifests), and snapshot_row_count answers
-    # COUNT(*) from metadata alone
-    row_counts: dict[str, int] = {
-        f: _file_row_count(path, prev_man, f) for f in carried
-    }
-    # per-file NULL counts for the zone-mapped columns (Delta's
-    # nullCount stats analog): recorded from the same footer at commit
-    # time so count_where's full-keep proof needs no query-time footer
-    # reads; carried files inherit (absent entries fall back to a
-    # footer read at query time — pre-feature manifests)
-    null_counts: dict[str, dict] = _carry("null_counts")
+    index = _carry_index(
+        path, prev_man, carried, stats_col, stats_cols, bloom_spec
+    )
+    stats_col = index.get("stats_col")
+    stats_cols = index.get("stats_cols")
+    bloom_spec = index.get("bloom_spec")
     null_cols = list(
         dict.fromkeys(([stats_col] if stats_col else []) + list(stats_cols or []))
     )
@@ -1462,18 +1576,18 @@ def _commit_replace(
             os.path.join(stage_dir, name), os.path.join(path, "data", unique)
         )
         new_files.append(unique)
-        row_counts[unique] = n_rows
+        index["row_counts"][unique] = n_rows
         if stats_col is not None:
             s = _stats_from_md(md, stats_col)
             if s is not None:
-                stats[unique] = s
+                index["stats"][unique] = s
         if stats_cols:
             per_file = {}
             for c in stats_cols:
                 s = _stats_from_md(md, c)
                 if s is not None:
                     per_file[c] = s
-            col_stats[unique] = per_file
+            index["col_stats"][unique] = per_file
         if null_cols:
             per_col = {
                 c: n
@@ -1481,41 +1595,21 @@ def _commit_replace(
                 if (n := _null_count_from_md(md, c)) is not None
             }
             if per_col:
-                null_counts[unique] = per_col
+                index.setdefault("null_counts", {})[unique] = per_col
         if bloom_spec and name in staged_blooms:
-            blooms[unique] = staged_blooms[name]
+            index["blooms"][unique] = staged_blooms[name]
     manifest = {
-        "version": base + 1,
         "files": list(carried) + new_files,
         "schema_ddl": ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in merged.schema
         ),
-        "parent": base,
-        "committed_at": time.time(),
-        "row_counts": row_counts,
+        **index,
     }
-    if stats_col is not None:
-        manifest["stats_col"] = stats_col
-        manifest["stats"] = stats
-    if stats_cols:
-        manifest["stats_cols"] = list(stats_cols)
-        manifest["col_stats"] = col_stats
-    if null_counts:
-        manifest["null_counts"] = null_counts
-    if bloom_spec:
-        manifest["bloom_spec"] = bloom_spec
-        manifest["blooms"] = blooms
     if _dvs_still_needed(path, prev_man, carried, bool(new_files)):
         manifest["dvs"] = prev_man["dvs"]
         manifest["dv_key"] = prev_man["dv_key"]
     if extra_meta:
         manifest.update(extra_meta)
-    # the commit's operation label (DESCRIBE HISTORY parity) is
-    # per-commit provenance, never inherited: pop anything a caller's
-    # whole-manifest spread dragged along before stamping this commit's
-    manifest.pop("operation", None)
-    if op is not None:
-        manifest["operation"] = op
     if isinstance(cdc, str):
         if cdc == "append":
             manifest["cdc"] = {"mode": "append", "files": new_files}
@@ -1534,17 +1628,7 @@ def _commit_replace(
             "mode": "files",
             "files": _stage_cdc_files(spark, cdc, path, stage_id, cmap),
         }
-    tmp = os.path.join(_txn_dir(path), f".tmp-{stage_id}.json")
-    _write_manifest_json(manifest, tmp)
-    try:
-        os.link(tmp, _manifest_path(path, base + 1))
-    except FileExistsError as e:
-        raise ConcurrentCommitError(
-            f"version {base + 1} already committed under {path}"
-        ) from e
-    finally:
-        os.unlink(tmp)
-    return base + 1
+    return _publish(path, manifest, base, op)
 
 
 def commit_delete(
@@ -1604,31 +1688,15 @@ def commit_append_with_stats(
     sets the table's change-feed property (see ``commit_append``) —
     pass it at creation when the table will be tailed."""
     base = current_version(path) if expected_base is None else expected_base
-    out = df
-    if base >= 0:
-        existing = read_version(spark, path, base).select(key)
-        out = df.join(existing, key, "left_anti")
-    man = _read_manifest(path, base) if base >= 0 else {}
-    enforce_expectations(out, man.get("expectations", {}))
-    stats_cols = man.get("stats_cols") or (list(extra_cols) if extra_cols else None)
-    feed = {"change_feed": True} if change_feed else {}
-    # published schema = union of table + batch, exactly as in
-    # commit_append: a batch that omits a column (its files surface
-    # NULL) or carries a narrower widened type must not shrink or
-    # narrow the live schema
-    _guard_new_columns([f.name for f in out.schema], man)
-    schema = {"schema_ddl": _union_schema_ddl(man, out.schema)}
-    return _commit_replace(
+    return _append(
         spark,
-        out,
+        df,
         path,
         base,
-        carried=man.get("files", []),
-        stats_col=_phys(man, key),
-        stats_cols=stats_cols,
-        extra_meta={**_carry_meta(man), **feed, **schema},
-        cdc="append",
-        op="append",
+        key,
+        change_feed=change_feed,
+        key_zone_map=True,
+        stats_cols=extra_cols,
     )
 
 
@@ -1806,9 +1874,7 @@ def commit_append_with_bloom(
                     f"table already has bloom spec {prev}, got {spec}"
                 )
             spec = prev
-    return commit_append(
-        spark, df, path, key=key, expected_base=base, bloom_spec=spec
-    )
+    return _append(spark, df, path, base, key, bloom_spec=spec)
 
 
 def bloom_file_candidates(path: str, value, version: int | None = None) -> list[str]:
@@ -1841,21 +1907,12 @@ def read_table_point(
     false-positive rows."""
     v = current_version(path) if version is None else version
     man = _read_manifest(path, v)
-    chosen = bloom_file_candidates(path, value, version=v)
-    col = man["bloom_spec"]["col"]  # bloom specs store physical names
-    if not chosen:
-        return spark.createDataFrame([], man["schema_ddl"])
     from pyspark.sql import functions as FF
 
-    scanned = _apply_dvs(
-        spark,
-        path,
-        man,
-        spark.read.schema(_physical_ddl(man)).parquet(
-            *[os.path.join(path, "data", n) for n in chosen]
-        ),
-    ).filter(FF.col(col) == value)
-    return _to_logical(scanned, man)
+    chosen = bloom_file_candidates(path, value, version=v)
+    # bloom specs store physical names
+    col = _logical_of(man, man["bloom_spec"]["col"])
+    return _scan_files(spark, path, man, chosen).filter(FF.col(col) == value)
 
 
 def bloom_pruned_file_count(
@@ -1881,15 +1938,18 @@ def commit_delete_mor(
     100 TB where ``commit_delete``'s copy-on-write rewrite would churn
     petabytes to remove a few keys.
 
-    The DV is computed by probing only the files whose rows match (one
-    broadcast join of the delete batch against the snapshot, tagged
-    with input_file_name), staged as parquet, and published in the
-    same atomic manifest CAS as every other commit. File-scoping is
-    what keeps later writes correct: a re-appended or upserted key
-    lands in a NEW file no DV row references, so it is never shadowed.
-    Readers pay one broadcast anti-join until compaction
-    (``commit_compact_files``) or a rewrite of the referenced files
-    materializes the deletes and clears the vectors.
+    The DV rows come from one probe of every live file: its visible
+    rows (existing DVs applied), tagged with their file name, meet the
+    delete batch in a broadcast join, so only the files holding a
+    matching row gain DV rows. They are staged as parquet and
+    published in the same atomic manifest CAS as every other commit;
+    every file carries forward with its per-file index
+    (``_carry_index``) and the table metadata (``_carry_meta``).
+    File-scoping is what keeps later writes correct: a re-appended or
+    upserted key lands in a NEW file no DV row references, so it is
+    never shadowed. Readers pay one broadcast anti-join until
+    compaction (``commit_compact_files``) or a rewrite of the
+    referenced files materializes the deletes and clears the vectors.
     """
     base = current_version(path) if expected_base is None else expected_base
     if base < 0:
@@ -1903,39 +1963,27 @@ def commit_delete_mor(
     from pyspark.sql import functions as FF
 
     os.makedirs(os.path.join(path, "data"), exist_ok=True)
-    os.makedirs(_txn_dir(path), exist_ok=True)
     stage_id = uuid.uuid4().hex
     stage_dir = os.path.join(path, "_staging", stage_id)
     files = [os.path.join(path, "data", n) for n in man["files"]]
     pkeys = keys.select(FF.col(key).alias(pkey)).dropDuplicates([pkey])
     if files:
-        tagged = (
-            spark.read.schema(_physical_ddl(man))
-            .parquet(*files)
-            .withColumn(
-                "file_name",
-                FF.element_at(FF.split(FF.input_file_name(), "/"), -1),
-            )
+        # probe only rows still VISIBLE: a replayed delete of
+        # already-deleted keys finds no visible match and stages NO new
+        # DV rows — without this, every replay re-recorded the same
+        # (file, key) suppressions and a delete-heavy table accreted
+        # duplicate DV files that every read's broadcast anti-join must
+        # re-load
+        visible = _apply_dvs(
+            spark,
+            path,
+            man,
+            spark.read.schema(_physical_ddl(man)).parquet(*files),
+            keep_file=True,
         )
-        # probe only rows still VISIBLE (existing DVs applied on the
-        # already-tagged frame): a replayed delete of already-deleted
-        # keys finds no visible match and stages NO new DV rows —
-        # without this, every replay re-recorded the same (file, key)
-        # suppressions and a delete-heavy table accreted duplicate DV
-        # files that every read's broadcast anti-join must re-load
-        dvs = man.get("dvs")
-        if dvs:
-            dvr = spark.read.parquet(
-                *[os.path.join(path, "data", n) for n in dvs]
-            ).select(
-                FF.col("file_name"), FF.col(man["dv_key"])
-            ).dropDuplicates(["file_name", man["dv_key"]])
-            tagged = tagged.join(
-                FF.broadcast(dvr), ["file_name", man["dv_key"]], "left_anti"
-            )
         hits = (
-            tagged.join(FF.broadcast(pkeys), pkey, "inner")
-            .select("file_name", pkey)
+            visible.join(FF.broadcast(pkeys), pkey, "inner")
+            .select(FF.col("__dv_file").alias("file_name"), pkey)
             .dropDuplicates(["file_name", pkey])
         )
     else:
@@ -1955,12 +2003,11 @@ def commit_delete_mor(
     # CDC: the rows this commit makes invisible, with pre-delete values
     # — computed DV-aware (read_version) so re-deleting an already
     # deleted key records an empty change set. The pre-image read is
-    # the expensive half of a MoR delete (the DV probe above touches
-    # only matching files; this re-opens the snapshot slice), so it
-    # runs ONLY for feed-enabled tables. A delete that suppressed
-    # NOTHING (replay, or keys absent) is a provable no-op — mode
-    # "none" regardless of the feed setting, so it can never poison a
-    # later-enabled feed's history (and skips the pre-image read).
+    # a second pass over the snapshot, so it runs ONLY for
+    # feed-enabled tables. A delete that suppressed NOTHING (replay,
+    # or keys absent) is a provable no-op — mode "none" regardless of
+    # the feed setting, so it can never poison a later-enabled feed's
+    # history (and skips the pre-image read).
     if not dv_files:
         cdc_rec = {"mode": "none"}
     elif man.get("change_feed"):
@@ -1976,75 +2023,17 @@ def commit_delete_mor(
     else:
         cdc_rec = {"mode": "unrecorded"}
     manifest = {
-        "version": base + 1,
         "files": man["files"],
         "schema_ddl": man["schema_ddl"],
-        "parent": base,
-        "committed_at": time.time(),
+        # data files are untouched by a MoR delete, so every per-file
+        # fact stays valid (DV suppression is subtracted at read time)
+        **_carry_index(path, man, man["files"]),
         "dvs": man.get("dvs", []) + dv_files,
         "dv_key": pkey,
         "cdc": cdc_rec,
-        "operation": "delete_mor",
+        **_carry_meta(man),
     }
-    for fld in (
-        "stats_col",
-        "stats",
-        "stats_cols",
-        "col_stats",
-        "bloom_spec",
-        "blooms",
-        "expectations",
-        "column_map",
-        "dropped_physical",
-        "cdc_applied_version",
-        "change_feed",
-        # per-application transaction watermarks: a MoR delete dropping
-        # them would let a replayed idempotent producer double-apply
-        "app_versions",
-        # data files are untouched by a MoR delete, so their recorded
-        # row counts stay valid (DV suppression is subtracted at
-        # snapshot_row_count time, not here)
-        "row_counts",
-        "null_counts",
-    ):
-        if fld in man:
-            manifest[fld] = man[fld]
-    tmp = os.path.join(_txn_dir(path), f".tmp-{stage_id}.json")
-    _write_manifest_json(manifest, tmp)
-    try:
-        os.link(tmp, _manifest_path(path, base + 1))
-    except FileExistsError as e:
-        raise ConcurrentCommitError(
-            f"version {base + 1} already committed under {path}"
-        ) from e
-    finally:
-        os.unlink(tmp)
-    return base + 1
-
-
-def _publish_metadata_commit(
-    path: str, manifest: dict, base: int, op: str | None = None
-) -> int:
-    """Publish a metadata-only manifest (no staged data) as base+1 via
-    the same atomic CAS as data commits. ``op`` stamps the commit's
-    operation label (see ``table_history``); any label a caller's
-    whole-manifest spread dragged in is dropped first — provenance is
-    per-commit, never inherited."""
-    manifest.pop("operation", None)
-    if op is not None:
-        manifest["operation"] = op
-    os.makedirs(_txn_dir(path), exist_ok=True)
-    tmp = os.path.join(_txn_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    _write_manifest_json(manifest, tmp)
-    try:
-        os.link(tmp, _manifest_path(path, base + 1))
-    except FileExistsError as e:
-        raise ConcurrentCommitError(
-            f"version {base + 1} already committed under {path}"
-        ) from e
-    finally:
-        os.unlink(tmp)
-    return base + 1
+    return _publish(path, manifest, base, "delete_mor")
 
 
 def _expectation_mentions(man: dict, name: str) -> list[str]:
@@ -2092,9 +2081,6 @@ def alter_rename_column(path: str, old: str, new: str) -> int:
         cmap[new] = physical
     manifest = {
         **man,
-        "version": base + 1,
-        "parent": base,
-        "committed_at": time.time(),
         "schema_ddl": ", ".join(
             f"{new if n == old else n} {t}" for n, t in fields
         ),
@@ -2104,7 +2090,7 @@ def alter_rename_column(path: str, old: str, new: str) -> int:
         manifest["column_map"] = cmap
     else:
         manifest.pop("column_map", None)
-    return _publish_metadata_commit(path, manifest, base, op="rename_column")
+    return _publish(path, manifest, base, "rename_column")
 
 
 _INT_WIDTH = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3}
@@ -2182,15 +2168,12 @@ def widen_column_type(path: str, col: str, new_type: str) -> int:
         )
     manifest = {
         **man,
-        "version": base + 1,
-        "parent": base,
-        "committed_at": time.time(),
         "schema_ddl": ", ".join(
             f"{n} {new_type if n == col else t}" for n, t in fields
         ),
         "cdc": {"mode": "none"},
     }
-    return _publish_metadata_commit(path, manifest, base, op="widen_column")
+    return _publish(path, manifest, base, "widen_column")
 
 
 def alter_drop_column(path: str, name: str) -> int:
@@ -2237,9 +2220,6 @@ def alter_drop_column(path: str, name: str) -> int:
     cmap.pop(name, None)
     manifest = {
         **man,
-        "version": base + 1,
-        "parent": base,
-        "committed_at": time.time(),
         "schema_ddl": ", ".join(
             f"{n} {t}" for n, t in fields if n != name
         ),
@@ -2250,7 +2230,7 @@ def alter_drop_column(path: str, name: str) -> int:
         manifest["column_map"] = cmap
     else:
         manifest.pop("column_map", None)
-    return _publish_metadata_commit(path, manifest, base, op="drop_column")
+    return _publish(path, manifest, base, "drop_column")
 
 
 def drop_expectation(path: str, name: str) -> int:
@@ -2273,16 +2253,13 @@ def drop_expectation(path: str, name: str) -> int:
     del exprs[name]
     manifest = {
         **man,
-        "version": base + 1,
-        "parent": base,
-        "committed_at": time.time(),
         "cdc": {"mode": "none"},
     }
     if exprs:
         manifest["expectations"] = exprs
     else:
         manifest.pop("expectations", None)
-    return _publish_metadata_commit(path, manifest, base, op="drop_expectation")
+    return _publish(path, manifest, base, "drop_expectation")
 
 
 def change_feed_enabled(path: str, version: int | None = None) -> bool:
@@ -2318,13 +2295,10 @@ def enable_change_feed(path: str) -> int:
     man = _read_manifest(path, base)
     manifest = {
         **man,
-        "version": base + 1,
-        "parent": base,
-        "committed_at": time.time(),
         "change_feed": True,
         "cdc": {"mode": "none"},
     }
-    return _publish_metadata_commit(path, manifest, base, op="set_change_feed")
+    return _publish(path, manifest, base, "set_change_feed")
 
 
 def disable_change_feed(path: str) -> int:
@@ -2337,12 +2311,9 @@ def disable_change_feed(path: str) -> int:
     man = _read_manifest(path, base)
     manifest = {
         **{k: v for k, v in man.items() if k != "change_feed"},
-        "version": base + 1,
-        "parent": base,
-        "committed_at": time.time(),
         "cdc": {"mode": "none"},
     }
-    return _publish_metadata_commit(path, manifest, base, op="set_change_feed")
+    return _publish(path, manifest, base, "set_change_feed")
 
 
 def dv_file_count(path: str, version: int | None = None) -> int:
@@ -2552,41 +2523,23 @@ def snapshot_row_count(
     in that file (more than one under keyless dup-key appends), and
     rows referencing since-rewritten files are inert. So the probe
     scans ONLY the DV-referenced files still in the manifest — the
-    same file-scoping as the delete itself — and counts their
-    suppressed rows exactly; untouched files still answer from
-    metadata. Pre-feature manifests fall back to parquet footer reads
-    per file (still metadata, no data pages)."""
-    from pyspark.sql import functions as F
-
+    same file-scoping as the delete itself — and counts their visible
+    rows exactly through the shared DV filter; untouched files still
+    answer from metadata. Pre-feature manifests fall back to parquet
+    footer reads per file (still metadata, no data pages)."""
     v = current_version(path) if version is None else version
     if v < 0:
         raise FileNotFoundError(f"no committed version under {path}")
     man = _read_manifest(path, v)
-    total = 0
-    for f in man.get("files", []):
-        total += _file_row_count(path, man, f)
     referenced = _dv_live_refs(path, man)
-    if not referenced:
-        return total
-    dvs = man["dvs"]
-    dv = (
-        spark.read.parquet(*[os.path.join(path, "data", n) for n in dvs])
-        .select("file_name", man["dv_key"])
-        .dropDuplicates(["file_name", man["dv_key"]])
-        .filter(F.col("file_name").isin(list(referenced)))
+    total = sum(
+        _file_row_count(path, man, f)
+        for f in man.get("files", [])
+        if f not in referenced
     )
-    tagged = (
-        spark.read.schema(_physical_ddl(man))
-        .parquet(*[os.path.join(path, "data", n) for n in sorted(referenced)])
-        .withColumn(
-            "file_name",
-            F.element_at(F.split(F.input_file_name(), "/"), -1),
-        )
-    )
-    suppressed = tagged.join(
-        F.broadcast(dv), ["file_name", man["dv_key"]], "left_semi"
-    ).count()
-    return total - suppressed
+    if referenced:
+        total += _scan_files(spark, path, man, sorted(referenced)).count()
+    return total
 
 
 def count_where(
@@ -2673,12 +2626,10 @@ def count_where(
             continue
         boundary.append(f)
     if boundary:
-        scan = spark.read.schema(_physical_ddl(man)).parquet(
-            *[os.path.join(path, "data", n) for n in sorted(boundary)]
-        )
+        c = F.col(_logical_of(man, colname))
         total += (
-            _apply_dvs(spark, path, man, scan)
-            .filter((F.col(colname) >= lo) & (F.col(colname) <= hi))
+            _scan_files(spark, path, man, sorted(boundary))
+            .filter((c >= lo) & (c <= hi))
             .count()
         )
     if detail:
@@ -2713,15 +2664,7 @@ def snapshot_col_minmax(
         raise FileNotFoundError(f"no committed version under {path}")
     man = _read_manifest(path, v)
     phys = _phys(man, col)
-    dvs = man.get("dvs") or []
     referenced = _dv_live_refs(path, man)
-    if referenced:
-        dv = (
-            spark.read.parquet(*[os.path.join(path, "data", n) for n in dvs])
-            .select("file_name", man["dv_key"])
-            .dropDuplicates(["file_name", man["dv_key"]])
-            .filter(F.col("file_name").isin(list(referenced)))
-        )
     lo = hi = None
     # After a date→timestamp_ntz widening, pre-widening files carry
     # DATE stats while newer files carry datetimes; when the CURRENT
@@ -2754,18 +2697,8 @@ def snapshot_col_minmax(
             )
         _fold(_stat_from_json(s[0]), _stat_from_json(s[1]))
     if referenced:
-        tagged = (
-            spark.read.schema(_physical_ddl(man))
-            .parquet(*[os.path.join(path, "data", n) for n in sorted(referenced)])
-            .withColumn(
-                "file_name",
-                F.element_at(F.split(F.input_file_name(), "/"), -1),
-            )
-        )
-        visible = tagged.join(
-            F.broadcast(dv), ["file_name", man["dv_key"]], "left_anti"
-        )
-        row = visible.agg(F.min(phys), F.max(phys)).collect()[0]
+        visible = _scan_files(spark, path, man, sorted(referenced))
+        row = visible.agg(F.min(col), F.max(col)).collect()[0]
         _fold(row[0], row[1])
     return (lo, hi)
 
@@ -3061,7 +2994,7 @@ def commit_replace_where(
     files = [os.path.join(path, "data", n) for n in prev["files"]]
     if files:
         raw = spark.read.schema(_physical_ddl(prev)).parquet(*files).withColumn(
-            "__f", FF.element_at(FF.split(FF.input_file_name(), "/"), -1)
+            "__f", _input_file_name()
         )
         logical = raw.select(
             *[
@@ -3146,37 +3079,21 @@ def clone_table(
         raise FileExistsError(f"{path_dst} is already a committed table")
     man = _read_manifest(path_src, src_version)
     os.makedirs(os.path.join(path_dst, "data"), exist_ok=True)
-    os.makedirs(_txn_dir(path_dst), exist_ok=True)
     for name in man["files"] + man.get("dvs", []):
         dst = os.path.join(path_dst, "data", name)
         if not os.path.exists(dst):
             os.link(os.path.join(path_src, "data", name), dst)
     manifest = {
         **man,
-        "version": 0,
-        "parent": -1,
-        "committed_at": time.time(),
         "cloned_from": {"path": path_src, "version": src_version},
         # the clone's genesis change feed is its whole snapshot as
         # inserts (its data files; the source's CDC files are not
         # linked and must not be referenced)
         "cdc": {"mode": "append", "files": man["files"]},
-        # per-commit provenance: the **man spread above must not leak
-        # the SOURCE commit's operation label into the clone's genesis
-        "operation": "clone",
     }
-    stage_id = uuid.uuid4().hex
-    tmp = os.path.join(_txn_dir(path_dst), f".tmp-{stage_id}.json")
-    _write_manifest_json(manifest, tmp)
-    try:
-        os.link(tmp, _manifest_path(path_dst, 0))
-    except FileExistsError as e:
-        raise ConcurrentCommitError(
-            f"version 0 already committed under {path_dst}"
-        ) from e
-    finally:
-        os.unlink(tmp)
-    return 0
+    # base -1: the clone's genesis is version 0 of a new table; the
+    # publish replaces the SOURCE commit's operation label
+    return _publish(path_dst, manifest, -1, "clone")
 
 
 def restore_table(
@@ -3222,15 +3139,7 @@ def restore_table(
         return base  # restoring to head: nothing to publish
     head = _read_manifest(path, base)
     target = _read_manifest(path, version)
-    manifest = {
-        k: v
-        for k, v in target.items()
-        if k
-        not in ("version", "parent", "committed_at", "cdc", "restored_from")
-    }
-    manifest["version"] = base + 1
-    manifest["parent"] = base
-    manifest["committed_at"] = time.time()
+    manifest = {k: v for k, v in target.items() if k != "cdc"}
     manifest["restored_from"] = version
     for k in ("change_feed", "cdc_applied_version"):
         manifest.pop(k, None)
@@ -3254,7 +3163,7 @@ def restore_table(
         }
     else:
         manifest["cdc"] = {"mode": "unrecorded"}
-    return _publish_metadata_commit(path, manifest, base, op="restore")
+    return _publish(path, manifest, base, "restore")
 
 
 def _bound_sql(v, ltype: str) -> str:

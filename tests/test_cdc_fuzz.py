@@ -125,6 +125,25 @@ def _rows(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
+def _check_metadata_readers(spark, path, rng, zoned):
+    """The metadata-answered readers agree with a scan of the snapshot.
+    The histories mix MoR deletion vectors, compactions, renames and
+    drops, so each reader's DV-referenced files go through the shared
+    DV filter while the rest answer from the manifest. ``count_where``
+    needs the key zone map, so it runs on the zoned table only."""
+    ks = [r["k"] for r in txn.read_table(spark, path).select("k").collect()]
+    assert txn.snapshot_row_count(spark, path) == len(ks)
+    assert txn.snapshot_col_minmax(spark, path, "k") == (
+        (min(ks), max(ks)) if ks else (None, None)
+    )
+    if zoned:
+        lo = rng.randint(-5, 110)
+        hi = lo + rng.randint(0, 60)
+        assert txn.count_where(spark, path, lo, hi) == sum(
+            lo <= k <= hi for k in ks
+        )
+
+
 @pytest.mark.parametrize("seed", range(_N_FUZZ_SEEDS))
 def test_cdc_column_mapping_clone_fuzz(spark, tmp_path, seed):
     path, plain = str(tmp_path / "t"), str(tmp_path / "plain")
@@ -132,6 +151,10 @@ def test_cdc_column_mapping_clone_fuzz(spark, tmp_path, seed):
     _run_history(spark, plain, seed, zoned=False)
     head = txn.current_version(path)
     assert txn.current_version(plain) == head
+    # own rng: the checks below keep the history rng's draws
+    meta_rng = random.Random(2000 + seed)
+    _check_metadata_readers(spark, path, meta_rng, zoned=True)
+    _check_metadata_readers(spark, plain, meta_rng, zoned=False)
 
     # the file selection (zone-map pruned vs every file) changes neither
     # the snapshot nor the change feed

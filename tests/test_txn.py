@@ -3644,12 +3644,13 @@ def test_apply_changes_scd2_exactly_once_and_ordering(spark, tmp_path):
             txn.apply_changes_scd2(spark, path, one, "k", "seq", op_col="op")
 
 
-def test_scd2_watermark_survives_maintenance(spark, tmp_path):
+@pytest.mark.parametrize("maintenance", ["compact", "delete_mor"])
+def test_scd2_watermark_survives_maintenance(spark, tmp_path, maintenance):
     """The scd2_last_batch watermark must carry through maintenance
-    commits (review r11): a compaction between an apply and its
-    foreachBatch RETRY would otherwise drop the watermark, the retry
-    would trip the out-of-order guard, and the stream would crash-loop
-    on a batch it already applied."""
+    commits: a compaction or a merge-on-read delete
+    between an apply and its foreachBatch RETRY would otherwise drop
+    the watermark, the retry would trip the out-of-order guard, and the
+    stream would crash-loop on a batch it already applied."""
     path = str(tmp_path / "scd2")
     txn.apply_changes_scd2(
         spark, path, _scd2_batch1(spark), "k", "seq", op_col="op",
@@ -3659,9 +3660,14 @@ def test_scd2_watermark_survives_maintenance(spark, tmp_path):
         spark, path, _scd2_batch2(spark), "k", "seq", op_col="op",
         batch_id="b2",
     )
-    txn.commit_compact_files(spark, path, target_partitions=1)
+    if maintenance == "compact":
+        txn.commit_compact_files(spark, path, target_partitions=1)
+    else:
+        keys = spark.createDataFrame([(1,), (5,)], "k long")
+        txn.commit_delete_mor(spark, keys, path, key="k")
+        assert txn.dv_file_count(path) == 1
     head = txn.current_version(path)
-    # the retry of b2 after the compaction: still an exactly-once no-op
+    # the retry of b2 after the maintenance commit: still an exactly-once no-op
     assert txn.apply_changes_scd2(
         spark, path, _scd2_batch2(spark), "k", "seq", op_col="op",
         batch_id="b2",
