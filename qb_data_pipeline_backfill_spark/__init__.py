@@ -7,7 +7,7 @@ Postgres batch ETL/backfill pipeline), re-expressed Spark-first:
 - the *raw envelope* ingestion core (validate → dedup → idempotent
   load) as declarative DataFrame transforms (``operators.ingest``,
   ``operators.sink``), composed end-to-end by ``pipeline.run_backfill``
-  with a partition-pruned idempotence probe,
+  into a transactional table with a window-scoped idempotence probe,
 - the reference's verification-SQL surface (counts, distinct counts,
   filtered aggregates, group-by-having, union-all reports) as
   Catalyst-planned queries (``plans.queries``),

@@ -1,36 +1,43 @@
-"""Idempotent sinks — anti-join-then-append, Parquet first, JDBC second.
+"""Idempotent sinks — anti-join-then-append into the txn table, and JDBC.
 
 The reference's exporter does check-then-insert: query the target for
 already-present ids (an IN-list probe,
 save_to_raw_customers_py.py:49-53), drop those rows client-side
 (``df[~df['id'].isin(existing_ids)]``, :55), append the rest (:58),
 and — a bug we deliberately do NOT replicate — blind-appends the whole
-batch on any error (:63-65), risking duplicates.
+batch on any error (:63-65), risking duplicates. Its probe and insert
+also race: two writers can both find an id missing and both insert it.
 
-The Spark-native shape is a LEFT ANTI join against the target's key
-projection followed by an append. At 100 TB the decisive design point
-is the PROBE, not the join: an unpartitioned target would make the
-existing-key scan grow with the table's full history. The Parquet
-target is therefore always partitioned (``partition_col``) — the
-analog of the reference's B-tree index on ``ingested_at_utc``
-(init_qb_schema.sql:36-38): the target is laid out by (e.g.) window
-date, the batch's own partition values are collected (bounded — a
-backfill window touches a handful of dates), and the probe reads ONLY
-those directories via partition pruning.
+``write_idempotent`` makes rows visible only through the
+manifest-committed table of ``operators/txn.py``:
 
-True transactional exactly-once needs atomic commits. Those live in
-``operators/txn.py`` (keyed idempotent append, snapshot isolation,
-conflict detection); until backfill windows land through it,
-``write_idempotent`` keeps single-writer discipline.
+- Probe: the head snapshot's files are chosen by the manifest's zone
+  map on ``partition_col`` (per-file [min, max] recorded at commit —
+  the analog of the reference's B-tree index on ``ingested_at_utc``,
+  init_qb_schema.sql:36-38), so choosing costs no Spark job and only
+  the batch's window is read, however long the table lives. This is
+  Delta's dedup recipe: scope the key probe with a date predicate.
+- Commit: the rows the probe does not hold (a LEFT ANTI join) are
+  staged and published by a compare-and-swap on the probed version. A
+  writer that loses the swap re-probes the winner's snapshot, so two
+  writers on one window land each key once; a crash before the
+  publish leaves nothing visible.
+
+The scope is the window on purpose: a key that arrives again in a
+later window lands again there, as the reference's per-window load
+does.
 """
 
 from __future__ import annotations
 
+import os
 import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from qb_data_pipeline_backfill_spark.operators import txn
 
 
 def new_rows_only(batch: DataFrame, existing_keys: DataFrame, key: str = "id") -> DataFrame:
@@ -47,27 +54,44 @@ def write_idempotent(
     *,
     partition_col: str,
 ) -> int:
-    """Append only not-yet-loaded rows to a Parquet target partitioned
-    by ``partition_col``; returns the number of rows written.
+    """Append the rows of ``batch`` whose ``key`` is not yet landed in
+    their ``partition_col`` value(s) to the txn table at
+    ``target_path``; returns the number of rows written.
 
     Implements the reference's idempotent-load contract (ops #20-#23):
-    re-running the same batch inserts 0 rows. The existing-key probe
-    reads only the partitions the batch touches (op #40), so its cost
-    is bounded by the batch's window, not the target's lifetime size.
+    re-running the same batch inserts 0 rows. The first commit creates
+    the table with zone maps on ``key`` and ``partition_col``; every
+    later commit anti-joins the batch against ``existing_keys_probe``
+    and publishes on the version it probed, re-probing through
+    ``txn.commit_with_retry`` when another writer published first.
+    The target is a POSIX path (the publish is an ``os.link``); a
+    directory holding parquet data but no txn log is refused.
 
-    The source is read once: the batch is persisted before the
-    partition-value collect, which is its only pass over the source;
-    the anti-join and the append then run from that cache. A batch the
-    caller already cached is used as is and stays cached. Single-writer
-    discipline: concurrent writers can still race between the
-    anti-join read and the append (the reference has the same race).
+    The source is read once: on an existing table the batch is
+    persisted before the partition-value collect, which is its only
+    pass over the source; the anti-join and the staging write then run
+    from that cache. A batch the caller already cached is used as is
+    and stays cached.
     """
-
-    def append(df: DataFrame) -> None:
-        df.write.mode("append").partitionBy(partition_col).parquet(target_path)
-
-    if not _target_has_data(spark, target_path):
-        return _append_new(batch, append)
+    if txn.current_version(target_path) < 0:
+        _refuse_untracked_parquet(target_path)
+        # A new table: nothing to anti-join, and the staging write is
+        # the only pass over the source. A writer that loses the
+        # creation race lands as on an existing table, below.
+        try:
+            return _append_new(
+                batch,
+                lambda df: txn.commit_append_with_stats(
+                    spark,
+                    df,
+                    target_path,
+                    key,
+                    expected_base=-1,
+                    extra_cols=[partition_col],
+                ),
+            )
+        except txn.ConcurrentCommitError:
+            pass
     owned = not batch.is_cached
     if owned:
         batch = batch.persist()
@@ -75,8 +99,18 @@ def write_idempotent(
         # Bounded collect: a backfill batch spans few partition values
         # (window dates).
         values = [r[0] for r in batch.select(partition_col).distinct().collect()]
-        existing = existing_keys_probe(spark, target_path, key, partition_col, values)
-        return _append_new(new_rows_only(batch, existing, key), append)
+        if not values:
+            return 0
+
+        def attempt() -> int:
+            base = txn.current_version(target_path)
+            existing = existing_keys_probe(spark, target_path, key, partition_col, values)
+            return _append_new(
+                new_rows_only(batch, existing, key),
+                lambda df: txn.commit_append(spark, df, target_path, expected_base=base),
+            )
+
+        return txn.commit_with_retry(target_path, attempt)
     finally:
         if owned:
             batch.unpersist()
@@ -89,11 +123,29 @@ def existing_keys_probe(
     partition_col: str,
     values: list,
 ) -> DataFrame:
-    """Key projection of the target, partition-pruned to ``values`` of
-    ``partition_col`` — the probe reads only the directories the
-    batch's window touches (verify with ``input_file_name()``)."""
-    existing = spark.read.parquet(target_path)
+    """Key projection of the txn table's head snapshot, restricted to
+    ``values`` of ``partition_col``. The files come from the manifest's
+    zone map on ``partition_col``, so only the files committed for
+    those values are read (verify with ``input_file_name()``)."""
+    bounds = {partition_col: (min(values), max(values))}
+    existing = txn.read_table_within(spark, target_path, bounds)
     return existing.filter(F.col(partition_col).isin(values)).select(key)
+
+
+def _refuse_untracked_parquet(path: str) -> None:
+    """Raise if ``path``, which has no txn log, holds parquet data — e.g.
+    a hive-partitioned target landed by an older version of this sink.
+    The probe cannot see those rows, so landing beside them would
+    duplicate every key. A txn table's own ``data/`` and ``_staging/``
+    (a crash before the first publish) do not count."""
+    for root, dirs, files in os.walk(path):
+        if root == path:
+            dirs[:] = [d for d in dirs if d not in ("data", "_staging", "_txn")]
+        if any(f.endswith(".parquet") for f in files):
+            raise ValueError(
+                f"{path} holds parquet data but no txn log; land into a "
+                "new path or convert it to a txn table first"
+            )
 
 
 def _append_new(rows: DataFrame, append: Callable[[DataFrame], None]) -> int:
@@ -175,21 +227,4 @@ def write_jdbc_idempotent(
     existing = (_read_existing or default_read_existing)()
     return _append_new(
         new_rows_only(batch, existing, key), _append or default_append
-    )
-
-
-def _target_has_data(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem of the path —
-    scheme-less paths resolve against fs.defaultFS exactly as the
-    write will, so the probe and the append always agree on the
-    filesystem (a driver-local os.path check would not, on a cluster
-    whose defaultFS is HDFS/S3). A first append of zero rows leaves
-    only ``_SUCCESS``, which has no schema to read: still a new target."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    return fs.exists(p) and any(
-        not st.getPath().getName().startswith(("_", "."))
-        for st in fs.listStatus(p)
     )

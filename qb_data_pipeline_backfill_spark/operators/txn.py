@@ -3,11 +3,10 @@ snapshots with atomic append, optimistic concurrency, and time travel.
 
 The reference's sink is check-then-insert against Postgres
 (reference `data_exporters/save_to_raw_customers_py.py:49-65`), whose
-crash window can double-insert; the engine's anti-join parquet sink
-(operators/sink.py) closes the duplicate window but a reader racing a
-writer can still observe a half-written directory listing. This
-module closes that last gap with the core of what Delta/Iceberg
-provide — a MANIFEST as the single source of truth:
+crash window can double-insert and whose probe races a second writer.
+The engine's backfill sink (operators/sink.py) lands every window
+through this module, which closes both gaps with the core of what
+Delta/Iceberg provide — a MANIFEST as the single source of truth:
 
 - A snapshot is a JSON manifest ``_txn/v{N}.json`` listing exactly the
   data files of version N. Readers list NOTHING: they read the latest
@@ -63,11 +62,13 @@ columns prune through a per-file Bloom index
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import hashlib
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from decimal import Decimal
@@ -399,6 +400,20 @@ def _publish(path: str, manifest: dict, base: int, op: str | None) -> int:
     return base + 1
 
 
+@contextlib.contextmanager
+def _staging(path: str, name: str):
+    """A commit's private staging directory ``_staging/<name>``, removed
+    when its publish attempt ends, published or not. Staged files reach
+    ``data/`` as hard links, so the removal frees nothing a manifest
+    references; only a crashed writer's directory is left to
+    ``vacuum``."""
+    stage_dir = os.path.join(path, "_staging", name)
+    try:
+        yield stage_dir
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
+
+
 def _input_file_name():
     """The data file a scanned row came from, as the manifest names it
     — the one definition of "file" that deletion-vector rows, the
@@ -463,9 +478,11 @@ def _scan_files(
     """The named files of ``man`` under its logical schema, with the
     manifest's deletion vectors applied — the one read every snapshot,
     pruned, point and copy-on-write scan, and every metadata reader's
-    DV-referenced files, go through."""
+    DV-referenced files, go through. No files is a relation Spark
+    can see is empty (``limit(0)``), so a join against it is planned
+    away instead of run."""
     if not names:
-        return spark.createDataFrame([], man["schema_ddl"])
+        return spark.createDataFrame([], man["schema_ddl"]).limit(0)
     df = spark.read.schema(_physical_ddl(man)).parquet(
         *[os.path.join(path, "data", n) for n in names]
     )
@@ -784,8 +801,6 @@ def vacuum(path: str, retention_seconds: float = 24 * 3600.0) -> list[str]:
                 removed.append(name)
     stage_root = os.path.join(path, "_staging")
     if os.path.isdir(stage_root):
-        import shutil
-
         for d in os.listdir(stage_root):
             full = os.path.join(stage_root, d)
             if os.path.getmtime(full) <= cutoff:
@@ -1389,20 +1404,20 @@ def _stage_cdc_files(
     PHYSICAL column names and are invisible until the manifest
     publishes; they are retained/vacuumed by reference."""
     cols = [f.name for f in cdc_df.schema if f.name != "_change_type"]
-    stage_dir = os.path.join(path, "_staging", f"{stage_id}-cdc")
-    _to_physical_df(
-        cdc_df.select(*cols, "_change_type"), cmap or {}
-    ).coalesce(8).write.mode("overwrite").parquet(stage_dir)
-    names: list[str] = []
-    for name in sorted(os.listdir(stage_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        # an empty change set (idempotent replay) records zero files
-        if _parquet_num_rows(os.path.join(stage_dir, name)) == 0:
-            continue
-        unique = f"{stage_id}-cdc-{name}"
-        os.link(os.path.join(stage_dir, name), os.path.join(path, "data", unique))
-        names.append(unique)
+    with _staging(path, f"{stage_id}-cdc") as stage_dir:
+        _to_physical_df(
+            cdc_df.select(*cols, "_change_type"), cmap or {}
+        ).coalesce(8).write.mode("overwrite").parquet(stage_dir)
+        names: list[str] = []
+        for name in sorted(os.listdir(stage_dir)):
+            if not name.endswith(".parquet"):
+                continue
+            # an empty change set (idempotent replay) records zero files
+            if _parquet_num_rows(os.path.join(stage_dir, name)) == 0:
+                continue
+            unique = f"{stage_id}-cdc-{name}"
+            os.link(os.path.join(stage_dir, name), os.path.join(path, "data", unique))
+            names.append(unique)
     return names
 
 
@@ -1534,101 +1549,101 @@ def _commit_replace(
     cmap = (extra_meta or {}).get("column_map") or {}
     _guard_new_columns([f.name for f in merged.schema], extra_meta or {})
     stage_id = uuid.uuid4().hex
-    stage_dir = os.path.join(path, "_staging", stage_id)
-    _to_physical_df(merged, cmap).write.mode("overwrite").parquet(stage_dir)
-    new_files: list[str] = []
-    prev_man = _read_manifest(path, base) if base >= 0 else {}
-    index = _carry_index(
-        path, prev_man, carried, stats_col, stats_cols, bloom_spec
-    )
-    stats_col = index.get("stats_col")
-    stats_cols = index.get("stats_cols")
-    bloom_spec = index.get("bloom_spec")
-    null_cols = list(
-        dict.fromkeys(([stats_col] if stats_col else []) + list(stats_cols or []))
-    )
-    staged_blooms: dict[str, list] = (
-        _file_blooms(
-            spark, stage_dir, bloom_spec["col"], bloom_spec["m"], bloom_spec["k"]
+    with _staging(path, stage_id) as stage_dir:
+        _to_physical_df(merged, cmap).write.mode("overwrite").parquet(stage_dir)
+        new_files: list[str] = []
+        prev_man = _read_manifest(path, base) if base >= 0 else {}
+        index = _carry_index(
+            path, prev_man, carried, stats_col, stats_cols, bloom_spec
         )
-        if bloom_spec
-        else {}
-    )
-    import pyarrow.parquet as pq
+        stats_col = index.get("stats_col")
+        stats_cols = index.get("stats_cols")
+        bloom_spec = index.get("bloom_spec")
+        null_cols = list(
+            dict.fromkeys(([stats_col] if stats_col else []) + list(stats_cols or []))
+        )
+        staged_blooms: dict[str, list] = (
+            _file_blooms(
+                spark, stage_dir, bloom_spec["col"], bloom_spec["m"], bloom_spec["k"]
+            )
+            if bloom_spec
+            else {}
+        )
+        import pyarrow.parquet as pq
 
-    for name in sorted(os.listdir(stage_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        # ONE footer read serves the zero-row check, the row count,
-        # every zone-map [min,max], and the null counts — a commit
-        # staging thousands of files pays O(files) driver-side footer
-        # opens, so re-opening per statistic (4× before r10) is pure
-        # commit-latency waste
-        md = pq.ParquetFile(os.path.join(stage_dir, name)).metadata
-        # zero-row part files never enter the manifest (see
-        # commit_append: replay/empty-partition debris would otherwise
-        # accrete open-and-discard work for every future reader)
-        n_rows = md.num_rows
-        if n_rows == 0:
-            continue
-        unique = f"{stage_id}-{name}"
-        os.link(
-            os.path.join(stage_dir, name), os.path.join(path, "data", unique)
-        )
-        new_files.append(unique)
-        index["row_counts"][unique] = n_rows
-        if stats_col is not None:
-            s = _stats_from_md(md, stats_col)
-            if s is not None:
-                index["stats"][unique] = s
-        if stats_cols:
-            per_file = {}
-            for c in stats_cols:
-                s = _stats_from_md(md, c)
+        for name in sorted(os.listdir(stage_dir)):
+            if not name.endswith(".parquet"):
+                continue
+            # ONE footer read serves the zero-row check, the row count,
+            # every zone-map [min,max], and the null counts — a commit
+            # staging thousands of files pays O(files) driver-side footer
+            # opens, so re-opening per statistic (4× before r10) is pure
+            # commit-latency waste
+            md = pq.ParquetFile(os.path.join(stage_dir, name)).metadata
+            # zero-row part files never enter the manifest (see
+            # commit_append: replay/empty-partition debris would otherwise
+            # accrete open-and-discard work for every future reader)
+            n_rows = md.num_rows
+            if n_rows == 0:
+                continue
+            unique = f"{stage_id}-{name}"
+            os.link(
+                os.path.join(stage_dir, name), os.path.join(path, "data", unique)
+            )
+            new_files.append(unique)
+            index["row_counts"][unique] = n_rows
+            if stats_col is not None:
+                s = _stats_from_md(md, stats_col)
                 if s is not None:
-                    per_file[c] = s
-            index["col_stats"][unique] = per_file
-        if null_cols:
-            per_col = {
-                c: n
-                for c in null_cols
-                if (n := _null_count_from_md(md, c)) is not None
-            }
-            if per_col:
-                index.setdefault("null_counts", {})[unique] = per_col
-        if bloom_spec and name in staged_blooms:
-            index["blooms"][unique] = staged_blooms[name]
-    manifest = {
-        "files": list(carried) + new_files,
-        "schema_ddl": ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in merged.schema
-        ),
-        **index,
-    }
-    if _dvs_still_needed(path, prev_man, carried, bool(new_files)):
-        manifest["dvs"] = prev_man["dvs"]
-        manifest["dv_key"] = prev_man["dv_key"]
-    if extra_meta:
-        manifest.update(extra_meta)
-    if isinstance(cdc, str):
-        if cdc == "append":
-            manifest["cdc"] = {"mode": "append", "files": new_files}
-        elif cdc == "none":
-            manifest["cdc"] = {"mode": "none"}
-        elif cdc == "unrecorded":
-            # data changed but the table's change_feed property is off:
-            # no change rows were computed or staged. Log readers raise
-            # a typed error on this step; the snapshot-diff
-            # table_changes still covers it.
-            manifest["cdc"] = {"mode": "unrecorded"}
-        else:
-            raise ValueError(f"unknown cdc mode {cdc!r}")
-    elif cdc is not None:
-        manifest["cdc"] = {
-            "mode": "files",
-            "files": _stage_cdc_files(spark, cdc, path, stage_id, cmap),
+                    index["stats"][unique] = s
+            if stats_cols:
+                per_file = {}
+                for c in stats_cols:
+                    s = _stats_from_md(md, c)
+                    if s is not None:
+                        per_file[c] = s
+                index["col_stats"][unique] = per_file
+            if null_cols:
+                per_col = {
+                    c: n
+                    for c in null_cols
+                    if (n := _null_count_from_md(md, c)) is not None
+                }
+                if per_col:
+                    index.setdefault("null_counts", {})[unique] = per_col
+            if bloom_spec and name in staged_blooms:
+                index["blooms"][unique] = staged_blooms[name]
+        manifest = {
+            "files": list(carried) + new_files,
+            "schema_ddl": ", ".join(
+                f"{f.name} {f.dataType.simpleString()}" for f in merged.schema
+            ),
+            **index,
         }
-    return _publish(path, manifest, base, op)
+        if _dvs_still_needed(path, prev_man, carried, bool(new_files)):
+            manifest["dvs"] = prev_man["dvs"]
+            manifest["dv_key"] = prev_man["dv_key"]
+        if extra_meta:
+            manifest.update(extra_meta)
+        if isinstance(cdc, str):
+            if cdc == "append":
+                manifest["cdc"] = {"mode": "append", "files": new_files}
+            elif cdc == "none":
+                manifest["cdc"] = {"mode": "none"}
+            elif cdc == "unrecorded":
+                # data changed but the table's change_feed property is off:
+                # no change rows were computed or staged. Log readers raise
+                # a typed error on this step; the snapshot-diff
+                # table_changes still covers it.
+                manifest["cdc"] = {"mode": "unrecorded"}
+            else:
+                raise ValueError(f"unknown cdc mode {cdc!r}")
+        elif cdc is not None:
+            manifest["cdc"] = {
+                "mode": "files",
+                "files": _stage_cdc_files(spark, cdc, path, stage_id, cmap),
+            }
+        return _publish(path, manifest, base, op)
 
 
 def commit_delete(
@@ -1964,76 +1979,76 @@ def commit_delete_mor(
 
     os.makedirs(os.path.join(path, "data"), exist_ok=True)
     stage_id = uuid.uuid4().hex
-    stage_dir = os.path.join(path, "_staging", stage_id)
-    files = [os.path.join(path, "data", n) for n in man["files"]]
-    pkeys = keys.select(FF.col(key).alias(pkey)).dropDuplicates([pkey])
-    if files:
-        # probe only rows still VISIBLE: a replayed delete of
-        # already-deleted keys finds no visible match and stages NO new
-        # DV rows — without this, every replay re-recorded the same
-        # (file, key) suppressions and a delete-heavy table accreted
-        # duplicate DV files that every read's broadcast anti-join must
-        # re-load
-        visible = _apply_dvs(
-            spark,
-            path,
-            man,
-            spark.read.schema(_physical_ddl(man)).parquet(*files),
-            keep_file=True,
-        )
-        hits = (
-            visible.join(FF.broadcast(pkeys), pkey, "inner")
-            .select(FF.col("__dv_file").alias("file_name"), pkey)
-            .dropDuplicates(["file_name", pkey])
-        )
-    else:
-        hits = pkeys.select(
-            FF.lit("").alias("file_name"), FF.col(pkey)
-        ).limit(0)
-    hits.coalesce(1).write.mode("overwrite").parquet(stage_dir)
-    dv_files = []
-    for name in sorted(os.listdir(stage_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        if _parquet_num_rows(os.path.join(stage_dir, name)) == 0:
-            continue  # no newly-suppressed rows: DV set unchanged
-        unique = f"{stage_id}-dv-{name}"
-        os.link(os.path.join(stage_dir, name), os.path.join(path, "data", unique))
-        dv_files.append(unique)
-    # CDC: the rows this commit makes invisible, with pre-delete values
-    # — computed DV-aware (read_version) so re-deleting an already
-    # deleted key records an empty change set. The pre-image read is
-    # a second pass over the snapshot, so it runs ONLY for
-    # feed-enabled tables. A delete that suppressed NOTHING (replay,
-    # or keys absent) is a provable no-op — mode "none" regardless of
-    # the feed setting, so it can never poison a later-enabled feed's
-    # history (and skips the pre-image read).
-    if not dv_files:
-        cdc_rec = {"mode": "none"}
-    elif man.get("change_feed"):
-        cdc_rows = read_version(spark, path, base).join(
-            FF.broadcast(keys.select(key).dropDuplicates([key])),
-            key,
-            "left_semi",
-        ).withColumn("_change_type", FF.lit("delete"))
-        cdc_rec = {
-            "mode": "files",
-            "files": _stage_cdc_files(spark, cdc_rows, path, stage_id, _col_map(man)),
+    with _staging(path, stage_id) as stage_dir:
+        files = [os.path.join(path, "data", n) for n in man["files"]]
+        pkeys = keys.select(FF.col(key).alias(pkey)).dropDuplicates([pkey])
+        if files:
+            # probe only rows still VISIBLE: a replayed delete of
+            # already-deleted keys finds no visible match and stages NO new
+            # DV rows — without this, every replay re-recorded the same
+            # (file, key) suppressions and a delete-heavy table accreted
+            # duplicate DV files that every read's broadcast anti-join must
+            # re-load
+            visible = _apply_dvs(
+                spark,
+                path,
+                man,
+                spark.read.schema(_physical_ddl(man)).parquet(*files),
+                keep_file=True,
+            )
+            hits = (
+                visible.join(FF.broadcast(pkeys), pkey, "inner")
+                .select(FF.col("__dv_file").alias("file_name"), pkey)
+                .dropDuplicates(["file_name", pkey])
+            )
+        else:
+            hits = pkeys.select(
+                FF.lit("").alias("file_name"), FF.col(pkey)
+            ).limit(0)
+        hits.coalesce(1).write.mode("overwrite").parquet(stage_dir)
+        dv_files = []
+        for name in sorted(os.listdir(stage_dir)):
+            if not name.endswith(".parquet"):
+                continue
+            if _parquet_num_rows(os.path.join(stage_dir, name)) == 0:
+                continue  # no newly-suppressed rows: DV set unchanged
+            unique = f"{stage_id}-dv-{name}"
+            os.link(os.path.join(stage_dir, name), os.path.join(path, "data", unique))
+            dv_files.append(unique)
+        # CDC: the rows this commit makes invisible, with pre-delete values
+        # — computed DV-aware (read_version) so re-deleting an already
+        # deleted key records an empty change set. The pre-image read is
+        # a second pass over the snapshot, so it runs ONLY for
+        # feed-enabled tables. A delete that suppressed NOTHING (replay,
+        # or keys absent) is a provable no-op — mode "none" regardless of
+        # the feed setting, so it can never poison a later-enabled feed's
+        # history (and skips the pre-image read).
+        if not dv_files:
+            cdc_rec = {"mode": "none"}
+        elif man.get("change_feed"):
+            cdc_rows = read_version(spark, path, base).join(
+                FF.broadcast(keys.select(key).dropDuplicates([key])),
+                key,
+                "left_semi",
+            ).withColumn("_change_type", FF.lit("delete"))
+            cdc_rec = {
+                "mode": "files",
+                "files": _stage_cdc_files(spark, cdc_rows, path, stage_id, _col_map(man)),
+            }
+        else:
+            cdc_rec = {"mode": "unrecorded"}
+        manifest = {
+            "files": man["files"],
+            "schema_ddl": man["schema_ddl"],
+            # data files are untouched by a MoR delete, so every per-file
+            # fact stays valid (DV suppression is subtracted at read time)
+            **_carry_index(path, man, man["files"]),
+            "dvs": man.get("dvs", []) + dv_files,
+            "dv_key": pkey,
+            "cdc": cdc_rec,
+            **_carry_meta(man),
         }
-    else:
-        cdc_rec = {"mode": "unrecorded"}
-    manifest = {
-        "files": man["files"],
-        "schema_ddl": man["schema_ddl"],
-        # data files are untouched by a MoR delete, so every per-file
-        # fact stays valid (DV suppression is subtracted at read time)
-        **_carry_index(path, man, man["files"]),
-        "dvs": man.get("dvs", []) + dv_files,
-        "dv_key": pkey,
-        "cdc": cdc_rec,
-        **_carry_meta(man),
-    }
-    return _publish(path, manifest, base, "delete_mor")
+        return _publish(path, manifest, base, "delete_mor")
 
 
 def _expectation_mentions(man: dict, name: str) -> list[str]:

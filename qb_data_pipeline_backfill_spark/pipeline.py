@@ -6,10 +6,10 @@ validate/dedup/idempotent-load — parameterized by a backfill window
 metadata.yaml:1-33, runtime variables fecha_inicio/fecha_fin at
 :56-58). Here the whole DAG is ONE lazy Spark plan: source scan →
 window filter → envelope projection → validation → anti-join →
-partitioned append. Catalyst fuses extract/validate into the scan
+txn-table commit. Catalyst fuses extract/validate into the scan
 stage; the only shuffles are the dedup and the idempotence anti-join,
-and the sink's existing-key probe is partition-pruned to the batch's
-extract-window date (op #40).
+and the sink's existing-key probe reads only the files committed for
+the batch's extract-window date (op #40).
 
 Also here: the CSV-over-HTTP template loader (op #24) feeding the
 median-imputation transformer — the reference's example_pipeline
@@ -54,15 +54,18 @@ def run_backfill(
     Returns the reference's own per-run metrics (logged by its
     exporter: "Total extracted / after filter / new records inserted",
     …/.logs/…/save_to_raw_customers_py.log). Re-running the same
-    window inserts 0 rows.
+    window inserts 0 rows. ``target_path`` is a txn table
+    (``operators/txn.py``; read it with ``txn.read_table``): each
+    window's new rows land in one atomic commit, so a crash lands
+    nothing and two runs of one window land each Id once.
 
     Metrics come from ``DataFrame.observe`` accumulators riding the
     sink's single pass over the source — NOT separate ``count()`` jobs,
     which would re-scan the source (and for the REST source, re-fetch
     every page) per metric. On an existing target that pass is the
     sink's partition-value collect, which fills its cache for the
-    anti-join and the append; on a new target it is the append itself.
-    The inserted count is observed on the append too.
+    anti-join and the staging write. The inserted count is observed on
+    the staging write.
     """
     from pyspark.sql import Observation
 
@@ -72,13 +75,12 @@ def run_backfill(
     windowed = window_filter(source, date_col, window_start, window_end).observe(
         obs_filtered, F.count(F.lit(1)).alias("n")
     )
-    # Validate on the source shape (order_cols are source columns),
-    # then project into the envelope — Catalyst still fuses both into
-    # the scan stage around the single dedup shuffle.
-    clean = validate_batch(windowed, key=id_col, order_cols=order_cols)
-    env = to_envelope(
-        clean,
+    n_inserted = _land(
+        spark,
+        windowed,
+        target_path,
         id_col=id_col,
+        order_cols=order_cols,
         payload_cols=payload_cols,
         entity_type=entity_type,
         window_start=window_start,
@@ -86,22 +88,41 @@ def run_backfill(
         ingested_at=ingested_at,
         page_number_col=page_number_col,
     )
-    # Partition layout key (op #40 — the Spark analog of the
-    # reference's time index): the EXTRACT-WINDOW date, not the load
-    # date — it is identical when the same window is re-run later, so
-    # the pruned probe always sees the partition a rerun would collide
-    # with. (Load-time ingest_date would change on rerun and the probe
-    # would miss the original rows.) Cross-window global dedup needs
-    # the keyed append of the txn table (operators/txn.py).
-    env = env.withColumn("window_date", F.to_date("extract_window_start_utc"))
-    n_inserted = write_idempotent(
-        spark, env, target_path, key="id", partition_col="window_date"
-    )
     return {
         "extracted": obs_extracted.get["n"],
         "after_filter": obs_filtered.get["n"],
         "inserted": n_inserted,
     }
+
+
+def _land(
+    spark: SparkSession,
+    rows: DataFrame,
+    target_path: str,
+    *,
+    id_col: str,
+    order_cols: list[str] | None = None,
+    **envelope,
+) -> int:
+    """Validate → envelope → ``window_date`` → idempotent load of one
+    window's rows; returns the rows inserted. The one landing step of
+    ``run_backfill`` and ``streaming.stream_backfill``.
+
+    Validation runs on the source shape (``order_cols`` are source
+    columns), then the envelope projection; Catalyst fuses both into
+    the scan stage around the single dedup shuffle. ``window_date`` is
+    the EXTRACT-WINDOW date, not the load date: it is identical when
+    the same window is re-run later, so the sink's zone-map-scoped
+    probe always reads the files a rerun would collide with (op #40 —
+    the Spark analog of the reference's time index).
+    """
+    clean = validate_batch(rows, key=id_col, order_cols=order_cols)
+    env = to_envelope(clean, id_col=id_col, **envelope).withColumn(
+        "window_date", F.to_date("extract_window_start_utc")
+    )
+    return write_idempotent(
+        spark, env, target_path, key="id", partition_col="window_date"
+    )
 
 
 def load_csv_http(

@@ -291,32 +291,28 @@ def stream_backfill(
     driven by a stream, with the idempotent sink applied per
     micro-batch via foreachBatch.
 
-    Exactly-once story: the streaming checkpoint deduplicates
-    micro-batch REPLAYS (a restarted query re-offers the same batch id)
-    and the anti-join probe deduplicates re-EXTRACTED keys — the same
-    two failure modes the reference's check-then-insert covers, minus
-    its blind-append-on-error bug. Returns the started StreamingQuery.
+    Each micro-batch runs ``run_backfill``'s landing step (validate →
+    envelope → idempotent txn-table commit), so null and duplicate Ids
+    are dropped before the load. Exactly-once story: the streaming
+    checkpoint deduplicates micro-batch REPLAYS (a restarted query
+    re-offers the same batch id) and the sink's anti-join probe
+    deduplicates re-EXTRACTED keys — the same two failure modes the
+    reference's check-then-insert covers, minus its blind-append-on-error
+    bug and its check-then-insert race. Returns the started
+    StreamingQuery.
     """
-    from pyspark.sql import functions as FF
-
-    from qb_data_pipeline_backfill_spark.operators.ingest import to_envelope
-    from qb_data_pipeline_backfill_spark.operators.sink import write_idempotent
+    from qb_data_pipeline_backfill_spark.pipeline import _land
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        env = to_envelope(
+        _land(
+            batch_df.sparkSession,
             batch_df,
+            target_path,
             id_col=id_col,
             payload_cols=payload_cols,
             entity_type=entity_type,
             window_start=window_start,
             window_end=window_end,
-        ).withColumn("window_date", FF.to_date("extract_window_start_utc"))
-        write_idempotent(
-            batch_df.sparkSession,
-            env,
-            target_path,
-            key="id",
-            partition_col="window_date",
         )
 
     return (

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from qb_data_pipeline_backfill_spark.operators import txn
 from qb_data_pipeline_backfill_spark.operators.impute import median_impute, upper_median
 from qb_data_pipeline_backfill_spark.operators.ingest import (
     ENVELOPE_SCHEMA,
@@ -77,7 +78,7 @@ def test_write_idempotent_rerun_inserts_zero(spark, tmp_path, batch):
     # reference invariant: second identical run inserts 0 rows
     n2 = write_idempotent(spark, clean, target, key="id", partition_col="window_date")
     assert n2 == 0
-    loaded = spark.read.parquet(target)
+    loaded = txn.read_table(spark, target)
     assert loaded.count() == loaded.select("id").distinct().count() == 3
 
 
@@ -88,7 +89,7 @@ def test_write_idempotent_incremental(spark, tmp_path):
     assert write_idempotent(spark, b1, target, partition_col="window_date") == 2
     # only "3" is new
     assert write_idempotent(spark, b2, target, partition_col="window_date") == 1
-    assert {r.id for r in spark.read.parquet(target).collect()} == {"1", "2", "3"}
+    assert {r.id for r in txn.read_table(spark, target).collect()} == {"1", "2", "3"}
 
 
 def test_write_idempotent_keeps_caller_cache(spark, tmp_path):
@@ -112,7 +113,9 @@ def test_write_idempotent_empty_first_window(spark, tmp_path):
     assert write_idempotent(spark, rows.limit(0), target, partition_col="window_date") == 0
     assert write_idempotent(spark, rows, target, partition_col="window_date") == 1
     assert write_idempotent(spark, rows, target, partition_col="window_date") == 0
-    assert spark.read.parquet(target).count() == 1
+    # an empty batch on an existing table lands nothing
+    assert write_idempotent(spark, rows.limit(0), target, partition_col="window_date") == 0
+    assert txn.read_table(spark, target).count() == 1
 
 
 def test_new_rows_only_anti_join(spark):

@@ -4,6 +4,8 @@ and the injectable JDBC sink (op #22)."""
 
 from __future__ import annotations
 
+import os
+import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -11,6 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from qb_data_pipeline_backfill_spark.operators import txn
 from qb_data_pipeline_backfill_spark.operators.sink import (
     existing_keys_probe,
     write_idempotent,
@@ -59,9 +62,9 @@ def test_run_backfill_end_to_end_and_rerun_inserts_zero(spark, tmp_path, source)
     # reference invariant: re-running the same window inserts 0
     m2 = _january(spark, source, target)
     assert m2["inserted"] == 0
-    loaded = spark.read.parquet(target)
+    loaded = txn.read_table(spark, target)
     assert loaded.count() == loaded.select("id").distinct().count() == 3
-    # partitioned layout by extract-window date (op #40)
+    # landed with its extract-window date (op #40)
     assert loaded.select("window_date").distinct().collect()[0][0].isoformat() == "2024-01-01"
 
 
@@ -81,7 +84,7 @@ def test_run_backfill_second_window_appends(spark, tmp_path, source):
         ingested_at=_as_of(),
     )
     assert m["inserted"] == 1  # row 3 only
-    assert spark.read.parquet(target).count() == 4
+    assert txn.read_table(spark, target).count() == 4
 
 
 def test_run_backfill_fetches_each_page_once_per_window(spark, tmp_path, sf_dir):
@@ -133,7 +136,7 @@ def test_run_backfill_fetches_each_page_once_per_window(spark, tmp_path, sf_dir)
         assert srv.n_page_requests - before == 4
     finally:
         srv.close()
-    assert spark.read.parquet(target).count() == 150
+    assert txn.read_table(spark, target).count() == 150
 
 
 def test_probe_is_partition_pruned(spark, tmp_path):
@@ -145,13 +148,90 @@ def test_probe_is_partition_pruned(spark, tmp_path):
     probe = existing_keys_probe(
         spark, target, "id", "window_date", ["2024-02-01"]
     )
-    # input_file_name() reflects the files ACTUALLY read after
-    # partition pruning (inputFiles() lists pre-filter candidates).
-    files = [
-        r[0]
+    # input_file_name() reflects the files ACTUALLY read: only those
+    # committed for the probed window, chosen by its zone map.
+    files = {
+        r[0].rsplit("/", 1)[-1]
         for r in probe.select(F.input_file_name()).distinct().collect()
-    ]
-    assert files and all("window_date=2024-02-01" in f for f in files)
+    }
+    first = set(txn._read_manifest(target, 0)["files"])
+    second = set(txn._read_manifest(target, 1)["files"]) - first
+    assert files and files == second
+    assert [r.id for r in probe.collect()] == ["2"]
+
+
+def _window(spark, ids, day="2024-03-01"):
+    return spark.createDataFrame(
+        [(str(i), day) for i in ids], "id string, window_date string"
+    )
+
+
+@pytest.mark.parametrize("existing", [False, True], ids=["new", "existing"])
+def test_two_writers_on_one_window_land_each_id_once(
+    spark, tmp_path, monkeypatch, existing
+):
+    """A second writer of the same batch runs inside the first writer's
+    publish: the first loses the compare-and-swap, re-probes the
+    winner's snapshot and inserts nothing."""
+    target = str(tmp_path / "raw_race")
+    if existing:
+        write_idempotent(
+            spark, _window(spark, [0], "2024-02-01"), target,
+            partition_col="window_date",
+        )
+    batch = _window(spark, range(1, 6))
+    publish = txn._publish
+    rival: list[int] = []
+
+    def publish_after_rival(*args):
+        monkeypatch.setattr(txn, "_publish", publish)
+        rival.append(
+            write_idempotent(spark, batch, target, partition_col="window_date")
+        )
+        return publish(*args)
+
+    monkeypatch.setattr(txn, "_publish", publish_after_rival)
+    first = write_idempotent(spark, batch, target, partition_col="window_date")
+    assert rival == [5] and first == 0
+    landed = txn.read_table(spark, target).filter("window_date = '2024-03-01'")
+    assert landed.count() == landed.select("id").distinct().count() == 5
+
+
+def test_crash_between_staging_and_publish_lands_nothing(
+    spark, tmp_path, monkeypatch
+):
+    target = str(tmp_path / "raw_crash")
+    write_idempotent(
+        spark, _window(spark, [0], "2024-02-01"), target,
+        partition_col="window_date",
+    )
+    batch = _window(spark, range(1, 4))
+
+    def crash(*args):
+        raise OSError("writer died before its publish")
+
+    monkeypatch.setattr(txn, "_publish", crash)
+    with pytest.raises(OSError, match="before its publish"):
+        write_idempotent(spark, batch, target, partition_col="window_date")
+    monkeypatch.undo()
+    assert txn.current_version(target) == 0
+    assert [r.id for r in txn.read_table(spark, target).collect()] == ["0"]
+    assert os.listdir(os.path.join(target, "_staging")) == []
+    # the replay lands every row of the window
+    assert write_idempotent(spark, batch, target, partition_col="window_date") == 3
+    assert txn.read_table(spark, target).count() == 4
+
+
+def test_write_idempotent_refuses_untracked_parquet_target(spark, tmp_path):
+    """A target landed as plain hive-partitioned parquet (no txn log)
+    is refused: the probe cannot see its rows, so landing beside them
+    would duplicate every Id."""
+    target = str(tmp_path / "raw_legacy")
+    batch = _window(spark, [1, 2])
+    batch.write.partitionBy("window_date").parquet(target)
+    with pytest.raises(ValueError, match=re.escape(target)):
+        write_idempotent(spark, batch, target, partition_col="window_date")
+    assert txn.current_version(target) == -1
 
 
 def test_jdbc_idempotent_logic_with_injection(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from qb_data_pipeline_backfill_spark.operators import txn
 from qb_data_pipeline_backfill_spark.streaming import (
     events_stream,
     run_available_now,
@@ -141,7 +142,7 @@ def test_stateful_counts_match_batch_aggregate(spark):
 
 
 def test_stream_backfill_is_idempotent(spark, tmp_path):
-    """Streaming ingest into the partitioned idempotent sink: two
+    """Streaming ingest into the txn-table idempotent sink: two
     micro-batches land disjoint keys; a RE-RUN of the same source (new
     checkpoint — a re-extraction, not a replay) inserts nothing."""
     from qb_data_pipeline_backfill_spark.streaming import stream_backfill
@@ -172,12 +173,36 @@ def test_stream_backfill_is_idempotent(spark, tmp_path):
         q.awaitTermination()
 
     run("ckpt1")
-    loaded = spark.read.parquet(target)
+    loaded = txn.read_table(spark, target)
     assert loaded.count() == loaded.select("id").distinct().count() == 3
     run("ckpt2")  # fresh checkpoint = full re-extraction
-    loaded = spark.read.parquet(target)
+    loaded = txn.read_table(spark, target)
     assert loaded.count() == loaded.select("id").distinct().count() == 3
 
+
+
+def test_stream_backfill_validates_each_micro_batch(spark, tmp_path):
+    """A micro-batch goes through validate_batch like a batch window:
+    duplicate and NULL Ids never land."""
+    from qb_data_pipeline_backfill_spark.streaming import stream_backfill
+
+    src = str(tmp_path / "src")
+    target = str(tmp_path / "raw_stream")
+    rows = spark.createDataFrame(
+        [(1, "a"), (1, "b"), (None, "c")], "k int, v string"
+    )
+    rows.write.parquet(src + "/f1.parquet")
+    stream = spark.readStream.schema(rows.schema).parquet(src + "/*")
+    stream_backfill(
+        stream,
+        target,
+        id_col="k",
+        entity_type="things",
+        window_start="2024-01-01",
+        window_end="2024-12-31",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    ).awaitTermination()
+    assert [r.id for r in txn.read_table(spark, target).collect()] == ["1"]
 
 def test_stateful_state_carries_across_batches(spark, tmp_path):
     """Two micro-batches (maxFilesPerTrigger=1 over two files): the

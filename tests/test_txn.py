@@ -56,6 +56,25 @@ def test_staged_but_unpublished_files_are_invisible(spark, tmp_path):
     assert txn.read_table(spark, path).count() == 10
 
 
+
+def test_commit_removes_its_staging_dir(spark, tmp_path):
+    """Every commit kind that stages files (append, CDC-recording
+    merge, MoR delete) removes its own _staging/<id> directory once its
+    publish attempt ends, published or lost; only a crashed writer's
+    directory is left to vacuum."""
+    path = str(tmp_path / "t")
+    staging = os.path.join(path, "_staging")
+    txn.commit_append_with_stats(
+        spark, _df(spark, 0, 10), path, key="k", change_feed=True
+    )
+    txn.commit_upsert(spark, _df(spark, 5, 15), path, key="k")
+    txn.commit_delete_mor(spark, _df(spark, 0, 2).select("k"), path, key="k")
+    assert os.listdir(staging) == []
+    with pytest.raises(txn.ConcurrentCommitError):
+        txn.commit_append(spark, _df(spark, 20, 30), path, expected_base=0)
+    assert os.listdir(staging) == []
+    assert txn.read_table(spark, path).count() == 13
+
 def test_time_travel_pins_old_snapshot(spark, tmp_path):
     path = str(tmp_path / "t")
     txn.commit_append(spark, _df(spark, 0, 10), path)
