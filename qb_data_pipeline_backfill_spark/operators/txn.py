@@ -20,6 +20,11 @@ Delta/Iceberg provide — a MANIFEST as the single source of truth:
   orphans (``vacuum`` reclaims them).
 - ``read_version`` pins any historical snapshot (time travel), since
   manifests are immutable and data files are never rewritten.
+- One scan: ``_scan_files`` is the only Spark reader over data files
+  (snapshot, pruned, point, copy-on-write, touch, delete-probe and
+  diff reads), and ``_to_logical`` the only physical-to-logical
+  projection. Every Spark read here names its schema — the manifest's,
+  the DV key's, or the staged frame's — so none pays an inference job.
 
 Commit kinds: ``commit_append`` (optionally keyed-idempotent),
 ``commit_append_with_stats`` (records per-file key zone maps from the
@@ -204,15 +209,21 @@ def _physical_ddl(man: dict) -> str:
     )
 
 
-def _to_logical(df: DataFrame, man: dict) -> DataFrame:
-    """Physical-named scan → the manifest's logical column names."""
-    cmap = _col_map(man)
-    if not cmap:
-        return df
+def _to_logical(df: DataFrame, man: dict, keep=()) -> DataFrame:
+    """Physical-named scan → ``man``'s logical columns, then the
+    ``keep`` columns as they are — the one physical-to-logical
+    projection. A logical column whose physical name ``df`` lacks (the
+    scanned files predate it) surfaces as a typed NULL."""
     from pyspark.sql import functions as FF
 
+    have = set(df.columns)
     return df.select(
-        *[FF.col(cmap.get(n, n)).alias(n) for n, _ in _logical_fields(man)]
+        *[
+            FF.col(p).alias(n) if (p := _phys(man, n)) in have
+            else FF.lit(None).cast(t).alias(n)
+            for n, t in _logical_fields(man)
+        ],
+        *keep,
     )
 
 
@@ -440,7 +451,9 @@ def _apply_dvs(
     a direct parquet scan of the manifest's files under physical names
     — the file identity comes from ``_input_file_name``. With
     ``keep_file`` the visible rows keep that identity in a
-    ``__dv_file`` column (DVs or not). DV sets are delete batches, so
+    ``__dv_file`` column (DVs or not). DV files read under a fixed
+    schema, ``file_name`` plus the key's physical column, so no read
+    infers one. DV sets are delete batches, so
     the anti-join broadcasts them and the table side never shuffles; a
     table whose DVs have grown large should compact (which
     materializes the deletes and clears the vectors)."""
@@ -452,7 +465,12 @@ def _apply_dvs(
     tagged = df.withColumn("__dv_file", _input_file_name())
     if dvs:
         key = man["dv_key"]
-        dv = spark.read.parquet(*[os.path.join(path, "data", n) for n in dvs])
+        # the key's type is the snapshot's, as for the data files — DV
+        # files written before a widening still read under it
+        ktype = next(t for n, t in _logical_fields(man) if _phys(man, n) == key)
+        dv = spark.read.schema(f"file_name string, {key} {ktype}").parquet(
+            *[os.path.join(path, "data", n) for n in dvs]
+        )
         dvr = dv.select(FF.col("file_name").alias("__dv_file"), FF.col(key))
         tagged = tagged.join(
             FF.broadcast(dvr.dropDuplicates(["__dv_file", key])),
@@ -473,20 +491,33 @@ def read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
 
 
 def _scan_files(
-    spark: SparkSession, path: str, man: dict, names: list[str]
+    spark: SparkSession,
+    path: str,
+    man: dict,
+    names: list[str],
+    under: dict | None = None,
+    keep_file: bool = False,
 ) -> DataFrame:
-    """The named files of ``man`` under its logical schema, with the
-    manifest's deletion vectors applied — the one read every snapshot,
-    pruned, point and copy-on-write scan, and every metadata reader's
-    DV-referenced files, go through. No files is a relation Spark
-    can see is empty (``limit(0)``), so a join against it is planned
-    away instead of run."""
+    """The named data files of ``man`` — the only Spark reader over a
+    table's data files. Every snapshot, pruned, point, copy-on-write,
+    touch and delete-probe scan, and every metadata reader's
+    DV-referenced files, go through it: the files scan under ``man``'s
+    physical schema, ``man``'s deletion vectors apply, and the rows
+    surface under ``under``'s logical schema (default ``man``; another
+    version's manifest is how a diff reads one snapshot under the
+    other's names). ``keep_file`` keeps each row's file name in a
+    ``__dv_file`` column. No files is a relation Spark can see is empty
+    (``limit(0)``), so a join against it is planned away instead of
+    run."""
+    under = under or man
+    extra = ["__dv_file"] if keep_file else []
     if not names:
-        return spark.createDataFrame([], man["schema_ddl"]).limit(0)
+        ddl = under["schema_ddl"] + "".join(f", {c} string" for c in extra)
+        return spark.createDataFrame([], ddl).limit(0)
     df = spark.read.schema(_physical_ddl(man)).parquet(
         *[os.path.join(path, "data", n) for n in names]
     )
-    return _to_logical(_apply_dvs(spark, path, man, df), man)
+    return _to_logical(_apply_dvs(spark, path, man, df, keep_file), under, extra)
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -1275,18 +1306,19 @@ def _bloom_positions_py(value, m: int, k: int) -> list[int]:
 
 
 def _file_blooms(
-    spark: SparkSession, stage_dir: str, col: str, m: int, k: int
+    spark: SparkSession, stage_dir: str, schema, col: str, m: int, k: int
 ) -> dict[str, list[list[int]]]:
     """Per staged file: sparse [word_index, or'd 64-bit word] pairs over
     the k sha256-derived bit positions of every value of ``col``.
 
     One distributed pass over the staged data (the rows were just
-    written, so they are page-cache-hot): explode each row into its k
+    written, so they are page-cache-hot; ``schema`` is the staged
+    frame's, so the read infers none): explode each row into its k
     positions, bit_or per (file, word) — two map-side-combinable
     aggregates, collect size ≤ files × m/64 longs by construction."""
     from pyspark.sql import functions as FF
 
-    df = spark.read.parquet(stage_dir)
+    df = spark.read.schema(schema).parquet(stage_dir)
     pos = [
         (
             FF.conv(
@@ -1550,7 +1582,8 @@ def _commit_replace(
     _guard_new_columns([f.name for f in merged.schema], extra_meta or {})
     stage_id = uuid.uuid4().hex
     with _staging(path, stage_id) as stage_dir:
-        _to_physical_df(merged, cmap).write.mode("overwrite").parquet(stage_dir)
+        staged = _to_physical_df(merged, cmap)
+        staged.write.mode("overwrite").parquet(stage_dir)
         new_files: list[str] = []
         prev_man = _read_manifest(path, base) if base >= 0 else {}
         index = _carry_index(
@@ -1564,7 +1597,12 @@ def _commit_replace(
         )
         staged_blooms: dict[str, list] = (
             _file_blooms(
-                spark, stage_dir, bloom_spec["col"], bloom_spec["m"], bloom_spec["k"]
+                spark,
+                stage_dir,
+                staged.schema,
+                bloom_spec["col"],
+                bloom_spec["m"],
+                bloom_spec["k"],
             )
             if bloom_spec
             else {}
@@ -1954,9 +1992,10 @@ def commit_delete_mor(
     petabytes to remove a few keys.
 
     The DV rows come from one probe of every live file: its visible
-    rows (existing DVs applied), tagged with their file name, meet the
-    delete batch in a broadcast join, so only the files holding a
-    matching row gain DV rows. They are staged as parquet and
+    rows (``_scan_files`` with the file name kept, existing DVs
+    applied) meet the delete batch in a broadcast join on the logical
+    key, so only the files holding a matching row gain DV rows, stored
+    under the key's physical name. They are staged as parquet and
     published in the same atomic manifest CAS as every other commit;
     every file carries forward with its per-file index
     (``_carry_index``) and the table metadata (``_carry_meta``).
@@ -1980,31 +2019,18 @@ def commit_delete_mor(
     os.makedirs(os.path.join(path, "data"), exist_ok=True)
     stage_id = uuid.uuid4().hex
     with _staging(path, stage_id) as stage_dir:
-        files = [os.path.join(path, "data", n) for n in man["files"]]
-        pkeys = keys.select(FF.col(key).alias(pkey)).dropDuplicates([pkey])
-        if files:
-            # probe only rows still VISIBLE: a replayed delete of
-            # already-deleted keys finds no visible match and stages NO new
-            # DV rows — without this, every replay re-recorded the same
-            # (file, key) suppressions and a delete-heavy table accreted
-            # duplicate DV files that every read's broadcast anti-join must
-            # re-load
-            visible = _apply_dvs(
-                spark,
-                path,
-                man,
-                spark.read.schema(_physical_ddl(man)).parquet(*files),
-                keep_file=True,
-            )
-            hits = (
-                visible.join(FF.broadcast(pkeys), pkey, "inner")
-                .select(FF.col("__dv_file").alias("file_name"), pkey)
-                .dropDuplicates(["file_name", pkey])
-            )
-        else:
-            hits = pkeys.select(
-                FF.lit("").alias("file_name"), FF.col(pkey)
-            ).limit(0)
+        # probe only rows still VISIBLE: a replayed delete of
+        # already-deleted keys finds no visible match and stages NO new
+        # DV rows — without this, every replay re-recorded the same
+        # (file, key) suppressions and a delete-heavy table accreted
+        # duplicate DV files that every read's broadcast anti-join must
+        # re-load
+        hits = (
+            _scan_files(spark, path, man, man["files"], keep_file=True)
+            .join(FF.broadcast(keys.select(key).dropDuplicates([key])), key)
+            .select(FF.col("__dv_file").alias("file_name"), FF.col(key).alias(pkey))
+            .dropDuplicates(["file_name", pkey])
+        )
         hits.coalesce(1).write.mode("overwrite").parquet(stage_dir)
         dv_files = []
         for name in sorted(os.listdir(stage_dir)):
@@ -2338,35 +2364,6 @@ def dv_file_count(path: str, version: int | None = None) -> int:
     return len(_read_manifest(path, v).get("dvs", []))
 
 
-def _read_version_under(
-    spark: SparkSession, path: str, version: int, head_man: dict
-) -> DataFrame:
-    """Snapshot read of ``version`` surfaced under ANOTHER manifest's
-    logical schema: files scan under their stable physical names, the
-    version's own deletion vectors apply, then each of ``head_man``'s
-    logical columns resolves through its column map (NULL for columns
-    the old files predate)."""
-    from pyspark.sql import functions as FF
-
-    man = _read_manifest(path, version)
-    cmap = _col_map(head_man)
-    fields = _logical_fields(head_man)
-    files = [os.path.join(path, "data", n) for n in man["files"]]
-    if not files:
-        return spark.createDataFrame([], head_man["schema_ddl"])
-    df = _apply_dvs(
-        spark, path, man, spark.read.schema(_physical_ddl(man)).parquet(*files)
-    )
-    return df.select(
-        *[
-            FF.col(cmap.get(n, n)).alias(n)
-            if cmap.get(n, n) in df.columns
-            else FF.lit(None).cast(t).alias(n)
-            for n, t in fields
-        ]
-    )
-
-
 def table_changes(
     spark: SparkSession,
     path: str,
@@ -2402,7 +2399,8 @@ def table_changes(
     # the range resolve through their stable physical names, columns
     # added in the range surface NULL, columns dropped are omitted —
     # so a rename mid-range diffs values, not names
-    old = _read_version_under(spark, path, from_version, man)
+    old_man = _read_manifest(path, from_version)
+    old = _scan_files(spark, path, old_man, old_man["files"], under=man)
     new = read_version(spark, path, to_v)
     o = old.select(FF.col(k).alias("__k"), FF.struct(*cols).alias("__old"))
     n = new.select(FF.col(k).alias("__k"), FF.struct(*cols).alias("__new"))
@@ -2741,12 +2739,13 @@ def table_files(
       file (the compaction-priority signal).
 
     Metadata-only: O(#files) driver work off the manifest plus one
-    pyarrow read of the (small) DV files; emitted as a VALUES literal,
-    so no Spark job runs until the caller aggregates. Each per-column
-    call re-derives the inventory (including the DV read) — surface
-    several stats columns by joining calls on ``file_name``, or keep
-    it to the hot column. This is the table an operator dashboard
-    joins for small-file pressure, skew of file sizes, and DV debt."""
+    pyarrow read of the (small) DV files; emitted as a local relation
+    (``createDataFrame`` over an Arrow table), so no Spark job runs
+    until the caller aggregates. Each per-column call re-derives the
+    inventory (including the DV read) — surface several stats columns
+    by joining calls on ``file_name``, or keep it to the hot column.
+    This is the table an operator dashboard joins for small-file
+    pressure, skew of file sizes, and DV debt."""
     v = current_version(path) if version is None else version
     if v < 0:
         raise FileNotFoundError(f"no committed version under {path}")
@@ -2767,67 +2766,31 @@ def table_files(
     null_counts = man.get("null_counts", {})
     referenced = _dv_live_refs(path, man)
 
-    _SCHEMA = (
+    import pyarrow as pa
+
+    files = man["files"]
+    bounds = [stats.get(f) or (col_stats.get(f, {}) or {}).get(phys) for f in files]
+    data = os.path.join(path, "data")
+    inv = pa.table(
+        {
+            "file_name": files,
+            "size_bytes": [os.path.getsize(os.path.join(data, f)) for f in files],
+            "n_rows": [_file_row_count(path, man, f) for f in files],
+            "min_stat": [str(b[0]) if b else None for b in bounds],
+            "max_stat": [str(b[1]) if b else None for b in bounds],
+            "null_count": [
+                (null_counts.get(f) or {}).get(phys) if phys else None for f in files
+            ],
+            "dv_referenced": [f in referenced for f in files],
+        }
+    )
+    # an Arrow table becomes a local relation; a list of rows would
+    # become an RDD that starts Python workers on every action
+    return spark.createDataFrame(
+        inv,
         "file_name string, size_bytes bigint, n_rows bigint, "
         "min_stat string, max_stat string, null_count bigint, "
-        "dv_referenced boolean"
-    )
-    if not man.get("files"):
-        # a committed-but-empty snapshot (e.g. CoW-deleted everything)
-        # is a supported state everywhere else; VALUES with zero rows
-        # is not parseable SQL, so return the empty inventory directly
-        return spark.createDataFrame([], _SCHEMA)
-
-    def _sql_cell(val) -> str:
-        if val is None:
-            return "NULL"
-        if isinstance(val, bool):
-            return "true" if val else "false"
-        if isinstance(val, int):
-            return str(val)
-        # Spark's default parser processes BACKSLASH escapes inside
-        # string literals, so backslashes must double before quotes
-        # are escaped — a stats min like "C:\temp" or one ending in a
-        # backslash would otherwise decode wrong or break the parse
-        return (
-            "'"
-            + str(val).replace("\\", "\\\\").replace("'", "\\'")
-            + "'"
-        )
-
-    rows = []
-    for f in man.get("files", []):
-        full = os.path.join(path, "data", f)
-        s = stats.get(f) or (col_stats.get(f, {}) or {}).get(phys)
-        nc = (null_counts.get(f) or {}).get(phys) if phys else None
-        rows.append(
-            "("
-            + ", ".join(
-                _sql_cell(x)
-                for x in (
-                    f,
-                    os.path.getsize(full),
-                    _file_row_count(path, man, f),
-                    str(s[0]) if s else None,
-                    str(s[1]) if s else None,
-                    nc,
-                    f in referenced,
-                )
-            )
-            + ")"
-        )
-    return spark.sql(
-        "SELECT CAST(file_name AS STRING) AS file_name, "
-        "CAST(size_bytes AS BIGINT) AS size_bytes, "
-        "CAST(n_rows AS BIGINT) AS n_rows, "
-        "CAST(min_stat AS STRING) AS min_stat, "
-        "CAST(max_stat AS STRING) AS max_stat, "
-        "CAST(null_count AS BIGINT) AS null_count, "
-        "CAST(dv_referenced AS BOOLEAN) AS dv_referenced "
-        "FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(file_name, size_bytes, n_rows, min_stat, max_stat, "
-        "null_count, dv_referenced)"
+        "dv_referenced boolean",
     )
 
 
@@ -2858,7 +2821,7 @@ def table_health(
       predates null-count recording (an unknown is not a zero).
 
     Same cost profile as ``table_files`` itself: O(#files) driver
-    work, one Spark aggregate over a VALUES literal — metadata-only,
+    work, one Spark aggregate over a local relation — metadata-only,
     no data read at any scale."""
     from pyspark.sql import functions as F
 
@@ -2978,10 +2941,10 @@ def commit_replace_where(
     predicate pushed to the parquet reader — row groups whose footer
     stats exclude it are never decoded — so the commit's WRITE cost is
     O(touched files + replacement), not O(table): at 100 TB, swapping
-    one day's slice rewrites that day's files, not the table. (A file
-    whose only matching rows are DV-suppressed is rewritten
-    conservatively — the rewrite drops those rows via the DV-applied
-    read, so it is correct, just not minimal.)
+    one day's slice rewrites that day's files, not the table. Touch
+    detection sees deletion vectors: a file whose only matching rows
+    are DV-suppressed is carried, and its vectors keep suppressing
+    them.
     """
     from pyspark.sql import functions as FF
 
@@ -3001,33 +2964,24 @@ def commit_replace_where(
         )
     enforce_expectations(df, {**stored, _RESERVED_EXPECTATION: predicate})
     pred = FF.coalesce(FF.expr(predicate).cast("boolean"), FF.lit(False))
-    # touch detection: which files hold a row matching the predicate?
-    # One distinct-aggregate over the logical projection of the scan —
-    # Catalyst prunes the read to the predicate's columns and pushes
-    # the filter into the parquet reader, so untouched row groups are
-    # skipped by their own footer stats. O(#files) driver traffic.
-    files = [os.path.join(path, "data", n) for n in prev["files"]]
-    if files:
-        raw = spark.read.schema(_physical_ddl(prev)).parquet(*files).withColumn(
-            "__f", _input_file_name()
-        )
-        logical = raw.select(
-            *[
-                FF.col(_phys(prev, n)).alias(n)
-                for n, _ in _logical_fields(prev)
-            ],
-            "__f",
-        )
-        touched = [
-            r["__f"]
-            for r in logical.filter(pred).select("__f").distinct().collect()
-        ]
-    else:
-        touched = []
+    # touch detection: which files hold a VISIBLE row matching the
+    # predicate? One distinct-aggregate over the scan — Catalyst prunes
+    # the read to the predicate's columns and pushes the filter through
+    # the DV anti-join into the parquet reader, so untouched row groups
+    # are skipped by their own footer stats. O(#files) driver traffic.
+    touched = [
+        r["__dv_file"]
+        for r in _scan_files(spark, path, prev, prev["files"], keep_file=True)
+        .filter(pred)
+        .select("__dv_file")
+        .distinct()
+        .collect()
+    ]
     target = _scan_files(spark, path, prev, touched)
-    # every predicate-matching row lives in a touched file by
-    # construction, so survivors-of-touched ∪ carried = the exact
-    # post-replace state, and the CDC below is complete on this scope
+    # every visible predicate-matching row lives in a touched file by
+    # construction (a carried file's matching rows stay DV-suppressed),
+    # so survivors-of-touched ∪ carried = the exact post-replace state,
+    # and the CDC below is complete on this scope
     survivors = target.filter(~pred)
     merged = survivors.unionByName(df)
     # CDC = net change of the replaced slice (computed only for
@@ -3164,7 +3118,7 @@ def restore_table(
         cols = [f.split(" ")[0] for f in target["schema_ddl"].split(", ")]
         # head rows surfaced under the TARGET's logical schema, so the
         # diff compares values even across renames/drops in the range
-        old = _read_version_under(spark, path, base, target)
+        old = _scan_files(spark, path, head, head["files"], under=target)
         new = read_version(spark, path, version)
         key = _logical_of(
             target, target.get("stats_col") or target.get("dv_key")

@@ -504,35 +504,14 @@ def read_cdf_log(
 
     from qb_data_pipeline_backfill_spark.operators.txn import (
         _apply_dvs,
-        _col_map,
-        _logical_fields,
         _physical_ddl,
+        _to_logical,
     )
 
     if from_timestamp is not None:
         from_version = start_version_for_timestamp(path, from_timestamp)
     to_v = current_version(path) if to_version is None else to_version
     head = _manifest_or_retention_error(path, to_v)
-    head_fields = _logical_fields(head)
-    cmap = _col_map(head)
-    out_cols = [n for n, _ in head_fields]
-
-    def to_head_logical(df, with_fixed_insert: bool):
-        cols = []
-        for n, t in head_fields:
-            p = cmap.get(n, n)
-            cols.append(
-                F.col(p).alias(n)
-                if p in df.columns
-                else F.lit(None).cast(t).alias(n)
-            )
-        ct = (
-            F.lit("insert")
-            if with_fixed_insert
-            else F.col("_change_type")
-        )
-        return df.select(*cols, ct.alias("_change_type"))
-
     pieces = []
     for v in range(from_version + 1, to_v + 1):
         step = _step_cdc(path, v)
@@ -546,12 +525,12 @@ def read_cdf_log(
             # (or a legacy-inferred step); fresh appends skip the join
             if step.get("dv_covered"):
                 df = _apply_dvs(spark, path, man, df)
-            df = to_head_logical(df, True)
+            df = _to_logical(df, head).withColumn("_change_type", F.lit("insert"))
         else:
             df = spark.read.schema(
                 _physical_ddl(man) + ", _change_type string"
             ).parquet(*files)
-            df = to_head_logical(df, False)
+            df = _to_logical(df, head, keep=("_change_type",))
         pieces.append(df.withColumn("_commit_version", F.lit(v)))
     if not pieces:
         return spark.createDataFrame(
@@ -567,7 +546,7 @@ def read_cdf_log(
             else pieces[i]
             for i in range(0, len(pieces), 2)
         ]
-    return pieces[0].select(*out_cols, "_change_type", "_commit_version")
+    return pieces[0]
 
 
 def net_changes_from_log(

@@ -687,6 +687,19 @@ def test_delete_mor_zone_map_reader_and_cow_upsert(spark, tmp_path):
     assert got.count() == 198
 
 
+def test_delete_mor_on_empty_snapshot_stages_no_dv_file(spark, tmp_path):
+    """A MoR delete over a snapshot with no live files finds nothing to
+    suppress: it stages no DV file and the table stays empty."""
+    path = str(tmp_path / "mor_empty")
+    txn.commit_append_with_stats(spark, _df(spark, 0, 5), path, key="k")
+    txn.commit_delete(spark, _df(spark, 0, 5).select("k"), path, key="k")
+    v = txn.commit_delete_mor(spark, _keys(spark, 1, 2), path, key="k")
+    man = txn._read_manifest(path, v)
+    assert man["files"] == [] and man["dvs"] == []
+    assert not any("-dv-" in n for n in os.listdir(os.path.join(path, "data")))
+    assert txn.read_table(spark, path).count() == 0
+
+
 # --------------------------------------------------------------------------
 # change data feed
 # --------------------------------------------------------------------------
@@ -739,6 +752,38 @@ def test_table_changes_null_field_transition_is_update(spark, tmp_path):
 
 # --------------------------------------------------------------------------
 # streaming CDC source (txn_cdf)
+def test_table_changes_across_rename_surfaces_values_under_new_name(
+    spark, tmp_path
+):
+    """The from-side reads under the to-version's names: a rename in
+    the range diffs values, so only the changed row surfaces, under
+    the new name."""
+    path = str(tmp_path / "cdf_rename")
+    txn.commit_append_with_stats(spark, _df(spark, 0, 5), path, key="k")
+    txn.alter_rename_column(path, "v", "amount")
+    txn.commit_upsert(
+        spark, spark.createDataFrame([(2, -2)], "k long, amount long"), path, key="k"
+    )
+    feed = txn.table_changes(spark, path, 0)
+    assert feed.columns == ["k", "amount", "_change_type"]
+    assert [tuple(r) for r in feed.collect()] == [(2, -2, "update")]
+
+
+def test_table_changes_across_added_column_reads_null_on_from_side(
+    spark, tmp_path
+):
+    """A column added in the range surfaces NULL on the from-side, so
+    rows the commit left alone (NULL on both sides) do not surface."""
+    path = str(tmp_path / "cdf_added")
+    txn.commit_append_with_stats(spark, _df(spark, 0, 3), path, key="k")
+    txn.commit_append(
+        spark, spark.createDataFrame([(3, 30, 7)], "k long, v long, w long"), path
+    )
+    feed = txn.table_changes(spark, path, 0, key="k")
+    assert feed.columns == ["k", "v", "w", "_change_type"]
+    assert [tuple(r) for r in feed.collect()] == [(3, 30, 7, "insert")]
+
+
 # --------------------------------------------------------------------------
 def _drain_cdf(spark, path, tmp_path, name, start_version=-1):
     from qb_data_pipeline_backfill_spark.sources.txn_cdf import read_cdf_stream
@@ -1030,6 +1075,38 @@ def test_restore_records_net_diff_in_change_feed(spark, tmp_path):
         (3, 30, "update_postimage", 3),
         (20, 200, "delete", 3),
         (5, 50, "insert", 3),
+    }
+
+
+def test_restore_across_rename_records_diff_under_target_names(
+    spark, tmp_path
+):
+    """Head rows are read under the restore target's logical schema, so
+    the recorded CDC files hold the net diff under the target's names
+    even when a rename lies between them."""
+    from qb_data_pipeline_backfill_spark.sources.txn_cdf import read_cdf_log
+
+    path = str(tmp_path / "rst_rename")
+    txn.commit_append_with_stats(
+        spark, _df(spark, 0, 5), path, key="k", change_feed=True
+    )
+    txn.alter_rename_column(path, "v", "amount")
+    txn.commit_upsert(
+        spark,
+        spark.createDataFrame([(2, -2), (9, 90)], "k long, amount long"),
+        path,
+        key="k",
+    )
+    v = txn.restore_table(spark, path, 0)
+    cdc = read_cdf_log(spark, path, from_version=v - 1)
+    assert cdc.columns == ["k", "v", "_change_type", "_commit_version"]
+    assert {tuple(r) for r in cdc.collect()} == {
+        (2, -2, "update_preimage", v),
+        (2, 20, "update_postimage", v),
+        (9, 90, "delete", v),
+    }
+    assert {tuple(r) for r in txn.read_table(spark, path).collect()} == {
+        (k, k * 10) for k in range(5)
     }
 
 
@@ -2229,6 +2306,30 @@ def test_merge_probe_costs_no_extra_spark_job(spark, tmp_path):
     assert zoned_merge <= plain_merge
 
 
+def test_dv_point_lookup_runs_no_schema_inference_job(spark, tmp_path):
+    """Every read of a table with deletion vectors names its schema, the
+    DV files' included: a point lookup on a table Bloom-indexed on its
+    DV key (the lake shape) runs two Spark jobs (the DV broadcast and
+    the scan) and no schema-inference job."""
+    import uuid
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "t")
+    for lo in (0, 100):
+        txn.commit_append_with_bloom(
+            spark, _df(spark, lo, lo + 100), path, key="k", bloom_col="k"
+        )
+    txn.commit_delete_mor(spark, _keys(spark, 5, 150), path, key="k")
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "job count")
+    try:
+        rows = txn.read_table_point(spark, path, 10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [(r["k"], r["v"]) for r in rows] == [(10, 100)]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
 def test_merge_drops_dvs_only_when_every_referenced_file_rewrites(
     spark, tmp_path
 ):
@@ -2684,6 +2785,34 @@ def test_replace_where_is_copy_on_write(spark, tmp_path):
     assert got.filter("k = 105").collect()[0]["v"] == 105000
     assert got.filter("k = 150").collect()[0]["v"] == 1500  # rewritten survivor
     assert got.filter("k = 350").collect()[0]["v"] == 3500  # carried
+
+
+def test_replace_where_carries_file_whose_matches_are_dv_suppressed(
+    spark, tmp_path
+):
+    """Touch detection sees deletion vectors: a file whose only
+    predicate-matching rows are DV-suppressed is carried by reference,
+    its vectors keep suppressing those rows, and the snapshot equals a
+    plain filter over the parent's rows plus the replacement."""
+    path = str(tmp_path / "t")
+    for lo in (0, 10):
+        txn.commit_append_with_stats(
+            spark, _df(spark, lo, lo + 10).coalesce(1), path, key="k"
+        )
+    txn.commit_delete_mor(spark, _keys(spark, 2, 3), path, key="k")
+    before = txn._read_manifest(path, txn.current_version(path))
+    pred = "k >= 2 AND k < 4"
+    parent = {
+        tuple(r)
+        for r in txn.read_table(spark, path).filter(f"NOT ({pred})").collect()
+    }
+    repl = spark.createDataFrame([(3, -3)], "k long, v long")
+    v = txn.commit_replace_where(spark, repl, path, pred)
+    after = txn._read_manifest(path, v)
+    assert set(before["files"]) < set(after["files"])  # nothing rewritten
+    assert after["dvs"] == before["dvs"]
+    got = {tuple(r) for r in txn.read_table(spark, path).collect()}
+    assert got == parent | {(3, -3)}
 
 
 def test_delete_cow_prunes_files_and_carries_dvs(spark, tmp_path):
@@ -3217,6 +3346,28 @@ def test_append_narrow_batch_does_not_regress_schema(spark, tmp_path):
         )
 
 
+def test_dv_key_widened_after_mor_delete_keeps_suppressing(spark, tmp_path):
+    """DV files read under the snapshot's key type: int-keyed DV rows
+    written before a widening still suppress their rows under bigint,
+    beside DV rows a later delete writes as bigint."""
+    path = str(tmp_path / "t")
+    txn.commit_append_with_stats(
+        spark,
+        spark.range(10).select(F.col("id").cast("int").alias("k")),
+        path,
+        key="k",
+    )
+    txn.commit_delete_mor(
+        spark, spark.createDataFrame([(3,), (7,)], "k int"), path, key="k"
+    )
+    txn.widen_column_type(path, "k", "bigint")
+    got = txn.read_table(spark, path)
+    assert sorted(r["k"] for r in got.collect()) == [0, 1, 2, 4, 5, 6, 8, 9]
+    txn.commit_delete_mor(spark, _keys(spark, 5), path, key="k")
+    got = txn.read_table(spark, path)
+    assert sorted(r["k"] for r in got.collect()) == [0, 1, 2, 4, 6, 8, 9]
+
+
 def test_snapshot_row_count_metadata_and_dv_paths(spark, tmp_path):
     path = str(tmp_path / "t")
     txn.commit_append_with_stats(
@@ -3578,6 +3729,18 @@ def test_table_files_empty_snapshot_and_bad_col(spark, tmp_path):
     assert "min_stat" in empty.columns
     with pytest.raises(ValueError, match="no zone-map stats"):
         txn.table_files(spark, path, version=0, col="nope")
+
+
+def test_table_files_renders_string_stats_verbatim(spark, tmp_path):
+    """String zone-map bounds holding a backslash or a quote come back
+    exactly as stored."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [("C:\\temp\\", 1), ("O'Brien", 2)], "name string, n long"
+    )
+    txn.commit_append_with_stats(spark, df.coalesce(1), path, key="name")
+    [r] = txn.table_files(spark, path).collect()
+    assert (r["min_stat"], r["max_stat"]) == ("C:\\temp\\", "O'Brien")
 
 
 def _scd2_batch1(spark):
