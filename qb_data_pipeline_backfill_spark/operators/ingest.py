@@ -35,17 +35,6 @@ ENVELOPE_SCHEMA = T.StructType(
 )
 
 
-def filter_key(primary: Column, fallback_ts: Column) -> Column:
-    """The reference's backfill filter key: TxnDate if non-empty, else
-    the first 10 chars (date part) of LastUpdatedTime.
-
-    Reference: data_loaders/extract_qb_invoices.py:63-66 (ops #9/#10).
-    """
-    return F.coalesce(
-        F.nullif(primary, F.lit("")), F.substring(fallback_ts, 1, 10)
-    )
-
-
 def window_filter(df: DataFrame, date_col: Column, start: str, end: str) -> DataFrame:
     """Inclusive [start, end] backfill-window predicate (op #11).
 

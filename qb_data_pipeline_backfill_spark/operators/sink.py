@@ -41,9 +41,10 @@ from qb_data_pipeline_backfill_spark.operators import txn
 
 
 def new_rows_only(batch: DataFrame, existing_keys: DataFrame, key: str = "id") -> DataFrame:
-    """Rows of ``batch`` whose key is not in ``existing_keys`` (op #21)."""
-    probe = existing_keys.select(F.col(key)).distinct()
-    return batch.join(probe, key, "left_anti")
+    """Rows of ``batch`` whose key is not in ``existing_keys`` (op #21).
+    A left-anti join ignores duplicates on its right side, so the keys
+    are not deduplicated first (that would only add a shuffle)."""
+    return batch.join(existing_keys.select(F.col(key)), key, "left_anti")
 
 
 def write_idempotent(

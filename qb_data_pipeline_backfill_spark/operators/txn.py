@@ -472,11 +472,8 @@ def _apply_dvs(
             *[os.path.join(path, "data", n) for n in dvs]
         )
         dvr = dv.select(FF.col("file_name").alias("__dv_file"), FF.col(key))
-        tagged = tagged.join(
-            FF.broadcast(dvr.dropDuplicates(["__dv_file", key])),
-            ["__dv_file", key],
-            "left_anti",
-        )
+        # a left-anti join ignores duplicate DV rows: no dedup needed
+        tagged = tagged.join(FF.broadcast(dvr), ["__dv_file", key], "left_anti")
     return tagged if keep_file else tagged.drop("__dv_file")
 
 
@@ -2053,9 +2050,7 @@ def commit_delete_mor(
             cdc_rec = {"mode": "none"}
         elif man.get("change_feed"):
             cdc_rows = read_version(spark, path, base).join(
-                FF.broadcast(keys.select(key).dropDuplicates([key])),
-                key,
-                "left_semi",
+                FF.broadcast(keys.select(key)), key, "left_semi"
             ).withColumn("_change_type", FF.lit("delete"))
             cdc_rec = {
                 "mode": "files",
@@ -2877,7 +2872,10 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
     Metadata-only and O(#retained manifests) on the driver — the same
     cost profile as Delta's history reader, which also scans the log,
     and bounded by ``expire_manifests``. Versions below the expire
-    floor are absent (their history is gone by design)."""
+    floor are absent (their history is gone by design). Emitted as a
+    local relation over an Arrow table, like ``table_files``."""
+    import pyarrow as pa
+
     rows = []
     prev_files: set[str] = set()
     have_parent = False
@@ -2899,14 +2897,14 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
             )
         )
         prev_files, have_parent = files, True
-    return spark.createDataFrame(
-        rows,
-        schema=(
-            "version long, committed_at double, operation string, "
-            "n_files long, n_files_added long, n_files_removed long, "
-            "n_dv_files long, cdc_mode string"
-        ),
+    ddl = (
+        "version long, committed_at double, operation string, "
+        "n_files long, n_files_added long, n_files_removed long, "
+        "n_dv_files long, cdc_mode string"
     )
+    names = [f.split(" ")[0] for f in ddl.split(", ")]
+    cols = list(zip(*rows)) or [()] * len(names)
+    return spark.createDataFrame(pa.table(dict(zip(names, map(list, cols)))), ddl)
 
 
 def commit_replace_where(
@@ -3086,8 +3084,9 @@ def restore_table(
     read — the same contract as time travel. Properties owned by the
     OPERATOR carry from HEAD, not the target: the ``change_feed``
     opt-in (a feed enabled after the bad commits must not silently
-    revert) and the IVM watermark ``cdc_applied_version`` (a regressed
-    watermark would reopen the rollup's exactly-once replay window).
+    revert) and every replay watermark — ``cdc_applied_version``,
+    ``app_versions`` and ``scd2_last_batch`` (a regressed watermark
+    would re-apply a replayed batch, bringing restored-away rows back).
 
     Change recording (feed on): the net diff head→target — keyed
     snapshot diff with update pre/post-image pairs, multiset
@@ -3110,7 +3109,10 @@ def restore_table(
     target = _read_manifest(path, version)
     manifest = {k: v for k, v in target.items() if k != "cdc"}
     manifest["restored_from"] = version
-    for k in ("change_feed", "cdc_applied_version"):
+    operator_keys = (
+        "change_feed", "cdc_applied_version", "app_versions", "scd2_last_batch"
+    )
+    for k in operator_keys:
         manifest.pop(k, None)
         if k in head:
             manifest[k] = head[k]

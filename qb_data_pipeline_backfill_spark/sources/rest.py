@@ -18,9 +18,10 @@ ops #1-#7) Spark-natively:
   translated into its WHERE clause (``pushFilters``) — fixing the
   reference's known miss of filtering client-side after a full scan
   (SURVEY.md §4).
-- **Stop conditions** (op #5): count-planned partitions end exactly at
-  the last page; the no-count fallback pages serially and stops on an
-  empty or short page (extract_qb_customers_py.py:50-57).
+- **Stop conditions** (op #5): every partition stops at an empty or
+  short page; count-planned partitions also stop after their planned
+  pages, and the no-count fallback is one partition that pages until
+  the short page (extract_qb_customers_py.py:50-57).
 - **Rate limiting + 429 retry** (op #6): 0.5 s pacing between page
   fetches and sleep-then-retry on HTTP 429 honoring ``Retry-After``
   (extract_qb_items_py.py:44-69, README.md:95-97).
@@ -32,6 +33,7 @@ ops #1-#7) Spark-natively:
 
 from __future__ import annotations
 
+import itertools
 import json
 import time
 import urllib.error
@@ -123,8 +125,8 @@ class OAuth2TokenClient:
 
 @dataclass
 class _Page(InputPartition):
-    page_number: int  # 1-based first page; -1 = sequential fallback (all pages)
-    n_pages: int = 1  # contiguous pages this partition fetches serially
+    first: int  # 1-based first page
+    n_pages: int | None = 1  # pages fetched serially; None: until a short page
 
 
 class _QboRestReader(DataSourceReader):
@@ -148,7 +150,7 @@ class _QboRestReader(DataSourceReader):
         refresh_token = options.get("refresh_token", "")
         # Token exchanged once on the driver at plan time; executors
         # reuse the bearer (pickled with the reader). Long jobs would
-        # refresh inside _fetch on 401 — out of scope here.
+        # refresh inside _query on 401 — out of scope here.
         self._token = OAuth2TokenClient(
             self.base_url + OAUTH_TOKEN_PATH, client_id, client_secret
         ).access_token(refresh_token)
@@ -179,27 +181,28 @@ class _QboRestReader(DataSourceReader):
                 continue
             yield f  # unsupported → Spark evaluates it post-scan
 
-    # --- HTTP plumbing ----------------------------------------------------
-    def _query_url(self, query: str) -> str:
-        qs = urllib.parse.urlencode(
-            {"query": query, "minorversion": "65"}
+    # --- HTTP (ops #4, #6, #7) --------------------------------------------
+    def _query(self, select: str, **paging) -> dict:
+        """Send one entity query (``SELECT {select} FROM entity`` plus
+        the WHERE) — the only request this reader makes. HTTP 429
+        sleeps for ``Retry-After`` and retries (op #6); a dropped
+        connection retries with bounded backoff (op #7)."""
+        query = f"SELECT {select} FROM {self.entity}"
+        if self.where:
+            query += f" WHERE {self.where}"
+        params = {"query": query, **paging, "minorversion": "65"}
+        qs = urllib.parse.urlencode({k: str(v) for k, v in params.items()})
+        req = urllib.request.Request(
+            f"{self.base_url}/v3/company/{self.realm_id}/query?{qs}",
+            headers={
+                "Authorization": f"Bearer {self._token}",
+                "Accept": "application/json",
+            },
         )
-        return f"{self.base_url}/v3/company/{self.realm_id}/query?{qs}"
-
-    def _get(self, url: str) -> dict:
-        """GET with 429 sleep-and-retry (op #6) and bounded transient
-        retries (op #7)."""
         attempts = 0
         while True:
             attempts += 1
             try:
-                req = urllib.request.Request(
-                    url,
-                    headers={
-                        "Authorization": f"Bearer {self._token}",
-                        "Accept": "application/json",
-                    },
-                )
                 with urllib.request.urlopen(req, timeout=30) as resp:
                     return json.loads(resp.read().decode())
             except urllib.error.HTTPError as e:
@@ -214,33 +217,13 @@ class _QboRestReader(DataSourceReader):
                     continue
                 raise
 
-    def _entity_query(self, select: str) -> str:
-        q = f"SELECT {select} FROM {self.entity}"
-        if self.where:
-            q += f" WHERE {self.where}"
-        return q
-
-    def _fetch_page(self, page_number: int) -> list[dict]:
-        start = (page_number - 1) * self.page_size + 1
-        qs = urllib.parse.urlencode(
-            {
-                "query": self._entity_query("*"),
-                "startPosition": str(start),
-                "maxResults": str(self.page_size),
-                "minorversion": "65",
-            }
-        )
-        url = f"{self.base_url}/v3/company/{self.realm_id}/query?{qs}"
-        data = self._get(url)
-        return data.get("QueryResponse", {}).get(self.entity, [])
-
     # --- planning (ops #1, #5) -------------------------------------------
     def partitions(self):
         try:
-            data = self._get(self._query_url(self._entity_query("COUNT(*)")))
-            total = data["QueryResponse"]["totalCount"]
+            total = self._query("COUNT(*)")["QueryResponse"]["totalCount"]
         except (urllib.error.HTTPError, KeyError):
-            return [_Page(-1)]  # remote dialect lacks COUNT → sequential fallback
+            # remote dialect lacks COUNT: one partition pages until short
+            return [_Page(1, None)]
         n_pages = max((total + self.page_size - 1) // self.page_size, 1)
         step = max(self.pages_per_partition, 1)
         return [
@@ -249,34 +232,26 @@ class _QboRestReader(DataSourceReader):
 
     # --- execution --------------------------------------------------------
     def read(self, partition: _Page):
-        def rows(page_number: int, records: list[dict]):
+        """Fetch the partition's pages in order. The pause before every
+        page, the first included, paces concurrent tasks. The loop ends
+        after ``n_pages`` pages or at an empty or short page (op #5)."""
+        pages = itertools.count(partition.first)
+        for page in itertools.islice(pages, partition.n_pages):
+            time.sleep(self.page_pause_s)
+            records = self._query(
+                "*",
+                startPosition=(page - 1) * self.page_size + 1,
+                maxResults=self.page_size,
+            ).get("QueryResponse", {}).get(self.entity, [])
             for rec in records:
                 yield (
                     str(rec.get("Id")) if rec.get("Id") is not None else None,
                     json.dumps(rec, separators=(",", ":"), sort_keys=True),
-                    page_number,
+                    page,
                     self.page_size,
                 )
-
-        if partition.page_number > 0:
-            for p in range(
-                partition.page_number, partition.page_number + partition.n_pages
-            ):
-                time.sleep(self.page_pause_s)
-                yield from rows(p, self._fetch_page(p))
-            return
-        # Sequential fallback: page until empty or short page (op #5).
-        page = 1
-        while True:
-            if page > 1:
-                time.sleep(self.page_pause_s)
-            records = self._fetch_page(page)
-            if not records:
-                break
-            yield from rows(page, records)
             if len(records) < self.page_size:
-                break
-            page += 1
+                return
 
 
 class QboRestDataSource(DataSource):

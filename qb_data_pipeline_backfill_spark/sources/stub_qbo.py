@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import base64
 import json
+import operator
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -24,26 +25,116 @@ STUB_CLIENT_SECRET = "stub-secret"
 STUB_REFRESH_TOKEN = "stub-refresh"
 STUB_ACCESS_TOKEN = "stub-access-token"
 
-_WHERE_RE = re.compile(
-    r"^SELECT \* FROM (\w+)(?: WHERE (\w+) (>=|<=|=|>|<) '([^']*)')?$"
+# ``SELECT *`` (a page) or ``SELECT COUNT(*)`` with one optional predicate
+_QUERY_RE = re.compile(
+    r"^SELECT (\*|COUNT\(\*\)) FROM (\w+)"
+    r"(?: WHERE (\w+) (>=|<=|=|>|<) '([^']*)')?$"
 )
-_COUNT_RE = re.compile(r"^SELECT COUNT\(\*\) FROM (\w+)(?: WHERE (\w+) (>=|<=|=|>|<) '([^']*)')?$")
+_BASIC_AUTH = "Basic " + base64.b64encode(
+    f"{STUB_CLIENT_ID}:{STUB_CLIENT_SECRET}".encode()
+).decode()
+_OPS = {
+    "=": operator.eq, ">": operator.gt, "<": operator.lt,
+    ">=": operator.ge, "<=": operator.le,
+}
 
 
-def _cmp(op: str, lhs: str, rhs: str) -> bool:
-    return {
-        "=": lhs == rhs,
-        ">": lhs > rhs,
-        "<": lhs < rhs,
-        ">=": lhs >= rhs,
-        "<=": lhs <= rhs,
-    }[op]
+class _Handler(BaseHTTPRequestHandler):
+    """Request handler base: silent, with one reply writer. A handler
+    reaches its ``_StubServer`` as ``self.server.stub``."""
+
+    def log_message(self, *a):  # silence
+        pass
+
+    def _reply(self, code: int, body: bytes, content_type: str, headers=None):
+        self.send_response(code)
+        self.send_header("Content-Type", content_type)
+        for k, v in (headers or {}).items():
+            self.send_header(k, v)
+        self.send_header("Content-Length", str(len(body)))
+        self.end_headers()
+        self.wfile.write(body)
+
+    def _json(self, code: int, obj, headers=None):
+        self._reply(code, json.dumps(obj).encode(), "application/json", headers)
 
 
-class StubQboServer:
+class _StubServer:
+    """A ``ThreadingHTTPServer`` on 127.0.0.1 (free port) serving
+    ``handler`` from a daemon thread. Subclasses set their state before
+    calling ``__init__``, which starts serving."""
+
+    handler: type[_Handler]
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._httpd = ThreadingHTTPServer(("127.0.0.1", 0), self.handler)
+        self._httpd.stub = self
+        self.port = self._httpd.server_address[1]
+        self.base_url = f"http://127.0.0.1:{self.port}"
+        threading.Thread(target=self._httpd.serve_forever, daemon=True).start()
+
+    def close(self):
+        self._httpd.shutdown()
+        self._httpd.server_close()
+
+
+class _QboHandler(_Handler):
+    def do_POST(self):
+        if urlparse(self.path).path != "/oauth2/v1/tokens/bearer":
+            return self._json(404, {"error": "not found"})
+        length = int(self.headers.get("Content-Length", 0))
+        form = parse_qs(self.rfile.read(length).decode())
+        stub = self.server.stub
+        with stub._lock:
+            stub.n_token_requests += 1
+        if self.headers.get("Authorization", "") != _BASIC_AUTH:
+            return self._json(401, {"error": "invalid_client"})
+        if form.get("grant_type") != ["refresh_token"] or form.get(
+            "refresh_token"
+        ) != [STUB_REFRESH_TOKEN]:
+            return self._json(400, {"error": "invalid_grant"})
+        return self._json(
+            200, {"access_token": STUB_ACCESS_TOKEN, "expires_in": 3600}
+        )
+
+    def do_GET(self):
+        stub = self.server.stub
+        parsed = urlparse(self.path)
+        if not re.match(r"^/v3/company/[^/]+/query$", parsed.path):
+            return self._json(404, {"error": "not found"})
+        if self.headers.get("Authorization") != f"Bearer {STUB_ACCESS_TOKEN}":
+            return self._json(401, {"error": "unauthorized"})
+        qs = parse_qs(parsed.query)
+        query = qs.get("query", [""])[0]
+        m = _QUERY_RE.match(query)
+        if not m:
+            return self._json(400, {"error": f"bad query: {query}"})
+        select, entity, field, op, value = m.groups()
+        if select != "*":
+            if stub.reject_count:
+                return self._json(400, {"error": "COUNT not supported"})
+            recs = stub._filtered(field, op, value)
+            return self._json(200, {"QueryResponse": {"totalCount": len(recs)}})
+        with stub._lock:
+            stub.n_page_requests += 1
+            if stub.n_429_sent < stub.fail_first_n:
+                stub.n_429_sent += 1
+                return self._json(429, {"error": "throttled"}, {"Retry-After": "0"})
+        recs = stub._filtered(field, op, value)
+        start = int(qs.get("startPosition", ["1"])[0])
+        maxr = int(qs.get("maxResults", ["100"])[0])
+        page = recs[start - 1 : start - 1 + maxr]
+        reply = {entity: page, "startPosition": start, "maxResults": maxr}
+        return self._json(200, {"QueryResponse": reply})
+
+
+class StubQboServer(_StubServer):
     """Threaded HTTP server emulating the QBO query API over a
     customer parquet file. Rows are served in ``c_custkey`` order, so
     page contents are deterministic."""
+
+    handler = _QboHandler
 
     def __init__(self, parquet_path: str, fail_first_n: int = 0):
         import duckdb
@@ -69,216 +160,89 @@ class StubQboServer:
         self.n_429_sent = 0
         self.n_page_requests = 0
         self.n_token_requests = 0
-        self._lock = threading.Lock()
-        server_self = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):  # silence
-                pass
-
-            def _json(self, code: int, obj, headers=None):
-                body = json.dumps(obj).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                for k, v in (headers or {}).items():
-                    self.send_header(k, v)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            def do_POST(self):
-                if urlparse(self.path).path != "/oauth2/v1/tokens/bearer":
-                    return self._json(404, {"error": "not found"})
-                auth = self.headers.get("Authorization", "")
-                expected = base64.b64encode(
-                    f"{STUB_CLIENT_ID}:{STUB_CLIENT_SECRET}".encode()
-                ).decode()
-                length = int(self.headers.get("Content-Length", 0))
-                form = parse_qs(self.rfile.read(length).decode())
-                with server_self._lock:
-                    server_self.n_token_requests += 1
-                if auth != f"Basic {expected}":
-                    return self._json(401, {"error": "invalid_client"})
-                if form.get("grant_type") != ["refresh_token"] or form.get(
-                    "refresh_token"
-                ) != [STUB_REFRESH_TOKEN]:
-                    return self._json(400, {"error": "invalid_grant"})
-                return self._json(
-                    200, {"access_token": STUB_ACCESS_TOKEN, "expires_in": 3600}
-                )
-
-            def do_GET(self):
-                parsed = urlparse(self.path)
-                if not re.match(r"^/v3/company/[^/]+/query$", parsed.path):
-                    return self._json(404, {"error": "not found"})
-                if self.headers.get("Authorization") != f"Bearer {STUB_ACCESS_TOKEN}":
-                    return self._json(401, {"error": "unauthorized"})
-                qs = parse_qs(parsed.query)
-                query = qs.get("query", [""])[0]
-
-                m = _COUNT_RE.match(query)
-                if m and server_self.reject_count:
-                    return self._json(400, {"error": "COUNT not supported"})
-                if m:
-                    recs = server_self._filtered(m.group(2), m.group(3), m.group(4))
-                    return self._json(
-                        200, {"QueryResponse": {"totalCount": len(recs)}}
-                    )
-
-                m = _WHERE_RE.match(query)
-                if not m:
-                    return self._json(400, {"error": f"bad query: {query}"})
-                entity = m.group(1)
-                with server_self._lock:
-                    server_self.n_page_requests += 1
-                    if server_self.n_429_sent < server_self.fail_first_n:
-                        server_self.n_429_sent += 1
-                        return self._json(
-                            429, {"error": "throttled"}, {"Retry-After": "0"}
-                        )
-                recs = server_self._filtered(m.group(2), m.group(3), m.group(4))
-                start = int(qs.get("startPosition", ["1"])[0])
-                maxr = int(qs.get("maxResults", ["100"])[0])
-                page = recs[start - 1 : start - 1 + maxr]
-                return self._json(
-                    200,
-                    {
-                        "QueryResponse": {
-                            entity: page,
-                            "startPosition": start,
-                            "maxResults": maxr,
-                        }
-                    },
-                )
-
-        self._httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.port = self._httpd.server_address[1]
-        self.base_url = f"http://127.0.0.1:{self.port}"
-        self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
-        self._thread.start()
+        super().__init__()
 
     def _filtered(self, field, op, value):
         if not field:
             return self.records
-        return [
-            r for r in self.records if _cmp(op, str(r.get(field, "")), value)
-        ]
-
-    def close(self):
-        self._httpd.shutdown()
-        self._httpd.server_close()
+        return [r for r in self.records if _OPS[op](str(r.get(field, "")), value)]
 
 
-class StubFileServer:
+class _FileHandler(_Handler):
+    def do_GET(self):
+        stub = self.server.stub
+        body = stub.files.get(urlparse(self.path).path)
+        if body is None:
+            return self._json(404, {"error": "not found"})
+        self._reply(200, body, stub.content_type)
+
+
+class StubFileServer(_StubServer):
     """Minimal HTTP server for byte payloads at fixed paths — the
     CSV-over-HTTP fixture (op #24). Like the QBO stub, this is test
     infrastructure: the engine only sees the HTTP contract."""
 
+    handler = _FileHandler
+
     def __init__(self, files: dict[str, bytes], content_type: str = "text/csv"):
-        server_self = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):  # silence
-                pass
-
-            def do_GET(self):
-                body = server_self.files.get(urlparse(self.path).path)
-                if body is None:
-                    self.send_response(404)
-                    self.end_headers()
-                    return
-                self.send_response(200)
-                self.send_header("Content-Type", content_type)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
         self.files = dict(files)
-        self._httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.port = self._httpd.server_address[1]
-        self.base_url = f"http://127.0.0.1:{self.port}"
-        self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
-        self._thread.start()
-
-    def close(self):
-        self._httpd.shutdown()
-        self._httpd.server_close()
+        self.content_type = content_type
+        super().__init__()
 
 
-_SERVERS: dict[str, StubQboServer] = {}
-_FILE_SERVERS: dict[str, StubFileServer] = {}
-_SERVERS_LOCK = threading.Lock()
+_SHARED: dict[tuple[str, str], _StubServer] = {}
+_SHARED_LOCK = threading.Lock()
+
+
+def _shared(key: tuple[str, str], make) -> _StubServer:
+    with _SHARED_LOCK:
+        if key not in _SHARED:
+            _SHARED[key] = make()
+        return _SHARED[key]
 
 
 def shared_file_server(key: str, files: dict[str, bytes]) -> StubFileServer:
     """Process-wide file server per key (daemon thread, lives until
     process exit) — used by the registered csv_http_scan query."""
-    with _SERVERS_LOCK:
-        srv = _FILE_SERVERS.get(key)
-        if srv is None:
-            srv = StubFileServer(files)
-            _FILE_SERVERS[key] = srv
-        return srv
+    return _shared(("file", key), lambda: StubFileServer(files))
 
 
 def shared_stub_server(parquet_path: str) -> StubQboServer:
     """Process-wide stub server per parquet file (daemon thread — lives
     until process exit). Used by the registered rest_source queries so
     the server stays up while the driver lazily consumes the scan."""
-    with _SERVERS_LOCK:
-        srv = _SERVERS.get(parquet_path)
-        if srv is None:
-            srv = StubQboServer(parquet_path)
-            _SERVERS[parquet_path] = srv
-        return srv
+    return _shared(("qbo", parquet_path), lambda: StubQboServer(parquet_path))
 
 
-class StubIngestServer:
+class _IngestHandler(_Handler):
+    def do_POST(self):
+        stub = self.server.stub
+        if urlparse(self.path).path != "/v1/ingest":
+            return self._json(404, {"error": "not found"})
+        length = int(self.headers.get("Content-Length", 0))
+        payload = json.loads(self.rfile.read(length).decode())
+        created = 0
+        with stub._lock:
+            stub.n_requests += 1
+            for rec in payload.get("records", []):
+                key = str(rec[stub.id_field])
+                if key not in stub.records:
+                    created += 1
+                stub.records[key] = rec
+            total = len(stub.records)
+        return self._json(200, {"created": created, "total": total})
+
+
+class StubIngestServer(_StubServer):
     """HTTP ingest endpoint for the REST batch sink: POST /v1/ingest
     with ``{"records": [{...}, ...]}`` upserts by ``Id`` and reports
     how many were newly created — the server half of the sink's
     idempotency contract (replayed batches create 0)."""
 
+    handler = _IngestHandler
+
     def __init__(self, id_field: str = "Id"):
-        server_self = self
+        self.id_field = id_field
         self.records: dict[str, dict] = {}
         self.n_requests = 0
-        self._lock = threading.Lock()
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):  # silence
-                pass
-
-            def do_POST(self):
-                if urlparse(self.path).path != "/v1/ingest":
-                    self.send_response(404)
-                    self.end_headers()
-                    return
-                length = int(self.headers.get("Content-Length", 0))
-                payload = json.loads(self.rfile.read(length).decode())
-                created = 0
-                with server_self._lock:
-                    server_self.n_requests += 1
-                    for rec in payload.get("records", []):
-                        key = str(rec[id_field])
-                        if key not in server_self.records:
-                            created += 1
-                        server_self.records[key] = rec
-                body = json.dumps(
-                    {"created": created, "total": len(server_self.records)}
-                ).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-        self._httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.port = self._httpd.server_address[1]
-        self.base_url = f"http://127.0.0.1:{self.port}"
-        self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
-        self._thread.start()
-
-    def close(self):
-        self._httpd.shutdown()
-        self._httpd.server_close()
+        super().__init__()

@@ -118,6 +118,28 @@ def test_write_idempotent_empty_first_window(spark, tmp_path):
     assert txn.read_table(spark, target).count() == 1
 
 
+def test_write_idempotent_replay_runs_five_jobs(spark, tmp_path):
+    """A replay of a landed window runs five Spark jobs and inserts 0:
+    the anti-join takes the probed keys as they are, with no dedup
+    job in front of it."""
+    import uuid
+
+    sc = spark.sparkContext
+    target = str(tmp_path / "raw_replay")
+    rows = _one_window(
+        spark.createDataFrame([(str(i), "a") for i in range(20)], ["id", "v"])
+    )
+    assert write_idempotent(spark, rows, target, partition_col="window_date") == 20
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "job count")
+    try:
+        n = write_idempotent(spark, rows, target, partition_col="window_date")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+
+
 def test_new_rows_only_anti_join(spark):
     batch = spark.createDataFrame([("1",), ("2",), ("3",)], ["id"])
     existing = spark.createDataFrame([("2",), ("2",)], ["id"])  # dup-safe

@@ -39,11 +39,16 @@ def srv():
     s.close()
 
 
-def test_partition_per_page_and_complete_scan(spark, srv):
-    df = read_qbo(spark, **_opts(srv, page_size="40"))
-    # 150 rows / 40 per page → 4 planned partitions
-    assert df.rdd.getNumPartitions() == 4
+@pytest.mark.parametrize("per_partition", [1, 3])
+def test_partition_per_page_and_complete_scan(spark, srv, per_partition):
+    df = read_qbo(
+        spark,
+        **_opts(srv, page_size="40", pages_per_partition=str(per_partition)),
+    )
+    # 150 rows / 40 per page → 4 pages, per_partition pages a partition
+    assert df.rdd.getNumPartitions() == {1: 4, 3: 2}[per_partition]
     rows = df.collect()
+    assert srv.n_page_requests == 4  # every page fetched exactly once
     assert len(rows) == 150
     assert {r["id"] for r in rows} == {str(i) for i in range(150)}
     # page numbering follows the server's c_custkey order

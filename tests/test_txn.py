@@ -1058,6 +1058,20 @@ def test_restore_table_rolls_back_preserving_history(spark, tmp_path):
         txn.restore_table(spark, path, 9)
 
 
+def test_restore_carries_app_watermarks_from_head(spark, tmp_path):
+    """A restore keeps HEAD's per-application watermarks: a replay of a
+    transaction the restore rolled back stays fenced, so the
+    restored-away rows do not come back."""
+    path = str(tmp_path / "t")
+    txn.commit_append(spark, _df(spark, 0, 5), path, txn_app="loader", txn_version=0)
+    b1 = _df(spark, 5, 10)
+    txn.commit_append(spark, b1, path, txn_app="loader", txn_version=1)
+    head = txn.restore_table(spark, path, 0)
+    assert txn.read_table(spark, path).count() == 5
+    assert txn.commit_append(spark, b1, path, txn_app="loader", txn_version=1) == head
+    assert txn.read_table(spark, path).count() == 5
+
+
 def test_restore_records_net_diff_in_change_feed(spark, tmp_path):
     """A feed-enabled restore records the head→target net diff as
     ordinary CDC rows, so replicas converge by applying the rollback
@@ -2310,7 +2324,9 @@ def test_dv_point_lookup_runs_no_schema_inference_job(spark, tmp_path):
     """Every read of a table with deletion vectors names its schema, the
     DV files' included: a point lookup on a table Bloom-indexed on its
     DV key (the lake shape) runs two Spark jobs (the DV broadcast and
-    the scan) and no schema-inference job."""
+    the scan) and no schema-inference job. The DV rows are not
+    deduplicated before the anti-join, so a deleted key costs the
+    same."""
     import uuid
 
     sc = spark.sparkContext
@@ -2320,14 +2336,15 @@ def test_dv_point_lookup_runs_no_schema_inference_job(spark, tmp_path):
             spark, _df(spark, lo, lo + 100), path, key="k", bloom_col="k"
         )
     txn.commit_delete_mor(spark, _keys(spark, 5, 150), path, key="k")
-    group = uuid.uuid4().hex
-    sc.setJobGroup(group, "job count")
-    try:
-        rows = txn.read_table_point(spark, path, 10).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert [(r["k"], r["v"]) for r in rows] == [(10, 100)]
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    for k, want in ((10, [(10, 100)]), (5, [])):
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, "job count")
+        try:
+            rows = txn.read_table_point(spark, path, k).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert [(r["k"], r["v"]) for r in rows] == want
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2, k
 
 
 def test_merge_drops_dvs_only_when_every_referenced_file_rewrites(
@@ -3187,6 +3204,22 @@ def test_table_history_labels_and_diffs(spark, tmp_path):
     assert h[5]["n_files"] == h[0]["n_files"]
     # versions stay readable underneath the history
     assert txn.read_version(spark, path, 1).count() == 90
+
+
+def test_table_history_is_a_local_relation(spark, tmp_path):
+    """The history is built from an Arrow table, a local relation; a
+    frame over a list of rows is an RDD whose every action starts
+    Python workers."""
+    path = str(tmp_path / "t")
+    txn.commit_append(spark, _df(spark, 0, 10), path)
+    txn.commit_append(spark, _df(spark, 10, 20), path)
+    h = txn.table_history(spark, path)
+    plan = h._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
+    assert [(r["version"], r["operation"]) for r in h.collect()] == [
+        (0, "append"),
+        (1, "append"),
+    ]
 
 
 def test_history_label_is_not_inherited_by_clone(spark, tmp_path):
