@@ -54,7 +54,6 @@ def to_envelope(
     window_start: str,
     window_end: str,
     environment: str = "production",
-    page_size: int = 100,
     page_number_col: Column | None = None,
     ingested_at: Column | None = None,
 ) -> DataFrame:
@@ -66,9 +65,22 @@ def to_envelope(
     save_to_raw_customers_py.py:25-44) as one narrow projection —
     Catalyst keeps it inside the scan stage's WholeStageCodegen span.
 
+    A source that already carries the envelope's ``payload``,
+    ``page_number`` or ``page_size`` column (the REST source does) lands
+    it as it is. Otherwise the payload is ``to_json`` of
+    ``payload_cols`` (default: every column but ``id_col``), the page
+    number 1 and the page size 100; ``page_number_col`` overrides the
+    page number either way. Both payload producers on the core path
+    emit JSON through an encoder (``json.dumps`` in the REST reader,
+    ``to_json`` here), so the payload is not re-checked downstream.
+
     ``ingested_at`` defaults to ``current_timestamp()``; tests pass a
     literal so output is deterministic.
     """
+
+    def own(name: str, default: Column) -> Column:
+        return F.col(name) if name in df.columns else default
+
     cols = payload_cols or [c for c in df.columns if c != id_col]
     request_payload = F.to_json(
         F.struct(
@@ -80,7 +92,9 @@ def to_envelope(
     )
     return df.select(
         F.col(id_col).cast("string").alias("id"),
-        F.to_json(F.struct(*[F.col(c) for c in cols])).alias("payload"),
+        own("payload", F.to_json(F.struct(*[F.col(c) for c in cols]))).alias(
+            "payload"
+        ),
         (ingested_at if ingested_at is not None else F.current_timestamp())
         .cast("timestamp")
         .alias("ingested_at_utc"),
@@ -89,11 +103,11 @@ def to_envelope(
         (
             page_number_col
             if page_number_col is not None
-            else F.lit(1)
+            else own("page_number", F.lit(1))
         )
         .cast("int")
         .alias("page_number"),
-        F.lit(page_size).cast("int").alias("page_size"),
+        own("page_size", F.lit(100)).cast("int").alias("page_size"),
         request_payload.alias("request_payload"),
     )
 

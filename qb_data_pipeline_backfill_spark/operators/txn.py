@@ -310,19 +310,22 @@ def _read_manifest(path: str, version: int) -> dict:
             "never committed or it was retired by expire_manifests() — time "
             "travel only reaches versions at or after the last checkpoint"
         ) from None
-    if "stats" in man:
-        man["stats"] = {
-            name: [_stat_from_json(v) for v in pair]
-            for name, pair in man["stats"].items()
+    col_stats = {
+        name: {
+            col: [_stat_from_json(v) for v in pair]
+            for col, pair in per_file.items()
         }
-    if "col_stats" in man:
-        man["col_stats"] = {
-            name: {
-                col: [_stat_from_json(v) for v in pair]
-                for col, pair in per_file.items()
-            }
-            for name, per_file in man["col_stats"].items()
-        }
+        for name, per_file in man.get("col_stats", {}).items()
+    }
+    # legacy manifests kept the key's zone map apart, in "stats"; fold
+    # it in under the key's column, so any later publish of this
+    # manifest writes the one-store shape
+    for name, pair in man.pop("stats", {}).items():
+        col_stats.setdefault(name, {})[man["stats_col"]] = [
+            _stat_from_json(v) for v in pair
+        ]
+    if col_stats:
+        man["col_stats"] = col_stats
     return man
 
 
@@ -365,11 +368,6 @@ def _stat_from_json(v):
 
 def _write_manifest_json(manifest: dict, tmp: str) -> None:
     enc = dict(manifest)
-    if "stats" in enc:
-        enc["stats"] = {
-            name: [_stat_to_json(v) for v in pair]
-            for name, pair in enc["stats"].items()
-        }
     if "col_stats" in enc:
         enc["col_stats"] = {
             name: {
@@ -1501,8 +1499,8 @@ def _carry_index(
     ``bloom_spec`` default to ``prev``'s and are recorded with the
     index. A carried file keeps:
 
-    - its zone map, only under the same stats column;
-    - its ``col_stats``;
+    - its ``col_stats`` zone maps, for the columns still zoned
+      (``_zoned_cols``);
     - its Bloom bits, only under the same spec (bits are meaningful
       only for the column and hash family they were built with);
     - its row count (Delta numRecords analog — footer fallback for
@@ -1527,10 +1525,13 @@ def _carry_index(
     }
     if stats_col is not None:
         index["stats_col"] = stats_col
-        index["stats"] = keep("stats", prev.get("stats_col") == stats_col)
     if stats_cols:
         index["stats_cols"] = list(stats_cols)
-        index["col_stats"] = keep("col_stats")
+    if zoned := _zoned_cols(index):
+        index["col_stats"] = {
+            f: {c: lohi[c] for c in zoned if c in lohi}
+            for f, lohi in keep("col_stats").items()
+        }
     if null_counts := keep("null_counts"):
         index["null_counts"] = null_counts
     if bloom_spec:
@@ -1556,12 +1557,13 @@ def _commit_replace(
     """Publish ``merged``'s rewrite as version base+1: the manifest
     references the newly staged files plus the ``carried`` files of
     the base manifest (copy-on-write: untouched files move forward by
-    reference). With ``stats_col``, per-file [min, max] of that column
-    is read from each staged parquet footer and stored in the manifest
-    for file skipping; ``stats_cols`` records the same for additional
-    columns (``col_stats`` in the manifest) so ``read_table_where(
-    col=...)`` can prune on non-key predicates. ``stats_col``,
-    ``stats_cols`` and ``bloom_spec`` default to the base manifest's.
+    reference). For every zoned column (``_zoned_cols``: the key's
+    ``stats_col``, then ``stats_cols``) each staged file's [min, max]
+    and null count are read from its parquet footer — one footer loop —
+    and stored in the manifest's ``col_stats`` / ``null_counts``, so
+    ``read_table_where`` prunes on the key or on ``col=...``.
+    ``stats_col``, ``stats_cols`` and ``bloom_spec`` default to the
+    base manifest's.
 
     Each carried file keeps its per-file facts through
     ``_carry_index``, and the base's deletion vectors carry while some
@@ -1586,12 +1588,8 @@ def _commit_replace(
         index = _carry_index(
             path, prev_man, carried, stats_col, stats_cols, bloom_spec
         )
-        stats_col = index.get("stats_col")
-        stats_cols = index.get("stats_cols")
+        zoned = _zoned_cols(index)
         bloom_spec = index.get("bloom_spec")
-        null_cols = list(
-            dict.fromkeys(([stats_col] if stats_col else []) + list(stats_cols or []))
-        )
         staged_blooms: dict[str, list] = (
             _file_blooms(
                 spark,
@@ -1627,25 +1625,15 @@ def _commit_replace(
             )
             new_files.append(unique)
             index["row_counts"][unique] = n_rows
-            if stats_col is not None:
-                s = _stats_from_md(md, stats_col)
-                if s is not None:
-                    index["stats"][unique] = s
-            if stats_cols:
-                per_file = {}
-                for c in stats_cols:
-                    s = _stats_from_md(md, c)
-                    if s is not None:
-                        per_file[c] = s
-                index["col_stats"][unique] = per_file
-            if null_cols:
+            for field, read in (
+                ("col_stats", _stats_from_md),
+                ("null_counts", _null_count_from_md),
+            ):
                 per_col = {
-                    c: n
-                    for c in null_cols
-                    if (n := _null_count_from_md(md, c)) is not None
+                    c: v for c in zoned if (v := read(md, c)) is not None
                 }
                 if per_col:
-                    index.setdefault("null_counts", {})[unique] = per_col
+                    index.setdefault(field, {})[unique] = per_col
             if bloom_spec and name in staged_blooms:
                 index["blooms"][unique] = staged_blooms[name]
         manifest = {
@@ -1750,20 +1738,25 @@ def commit_append_with_stats(
     )
 
 
+def _zoned_cols(man: dict) -> list[str]:
+    """The physical columns ``man`` (a manifest or a carry index)
+    records zone maps and null counts for: the key's ``stats_col``
+    first, then ``stats_cols``."""
+    key = [man["stats_col"]] if man.get("stats_col") else []
+    return list(dict.fromkeys(key + list(man.get("stats_cols") or [])))
+
+
 def _zone_map(man: dict, col: str | None) -> tuple[str, "callable"]:
     """``(physical column, file -> [min, max] or None)`` for the zone
-    map on physical ``col``. None (or the key's own column) is the
-    primary key zone map; any other column must be in the manifest's
-    ``stats_cols`` set."""
-    primary = man.get("stats_col")
-    if col is None or col == primary:
-        if primary is None:
-            raise ValueError("table has no zone-map stats")
-        return primary, man.get("stats", {}).get
-    if col not in (man.get("stats_cols") or []):
+    map on physical ``col`` (None: the key's ``stats_col``) — the one
+    lookup into the manifest's ``col_stats``. ``col`` must be zoned
+    (``_zoned_cols``)."""
+    col = col or man.get("stats_col")
+    if col is None:
+        raise ValueError("table has no zone-map stats")
+    if col not in _zoned_cols(man):
         raise ValueError(
-            f"no zone-map stats for column {col!r}; recorded: "
-            f"{[primary] + (man.get('stats_cols') or [])}"
+            f"no zone-map stats for column {col!r}; recorded: {_zoned_cols(man)}"
         )
     col_stats = man.get("col_stats", {})
     return col, lambda n: col_stats.get(n, {}).get(col)
@@ -2564,8 +2557,9 @@ def count_where(
     predicate-aware extension of ``snapshot_row_count``. Per file,
     three cases:
 
-    - FULL PRUNE — the file's [min, max] is disjoint from [lo, hi]:
-      contributes zero rows, zero bytes read;
+    - FULL PRUNE — the file's [min, max] is disjoint from [lo, hi]
+      (``_choose_files`` leaves it out): contributes zero rows, zero
+      bytes read — deletion vectors can only shrink zero matches;
     - FULL KEEP — the file's range is contained in [lo, hi], no
       deletion vector references the file, and the column is provably
       NULL-FREE in the file (min/max stats ignore NULLs, so
@@ -2582,8 +2576,8 @@ def count_where(
 
     At 100 TB a clustered predicate prunes or metadata-answers almost
     every file and the scan cost is O(boundary files), not O(table).
-    ``col=None`` counts on the primary key zone map; otherwise ``col``
-    must have a secondary zone map (``stats_cols``). With
+    ``col=None`` counts on the key's zone map; otherwise ``col`` must
+    be zoned (``stats_cols``). With
     ``detail=True`` returns ``(count, {"files_pruned": n,
     "files_metadata": n, "files_scanned": n})`` so callers (and tests)
     can assert HOW the answer was produced, not just its value."""
@@ -2593,8 +2587,9 @@ def count_where(
     if v < 0:
         raise FileNotFoundError(f"no committed version under {path}")
     man = _read_manifest(path, v)
-    lo, hi = _norm_stat(lo), _norm_stat(hi)
-    colname, lookup = _zone_map(man, _phys(man, col) if col is not None else None)
+    ((colname, (lo, hi)),) = _physical_bounds(man, {col: (lo, hi)}).items()
+    chosen = _choose_files(man, {colname: (lo, hi)})
+    lookup = _zone_map(man, colname)[1]
     referenced = _dv_live_refs(path, man)
     null_counts = man.get("null_counts", {})
 
@@ -2604,19 +2599,13 @@ def count_where(
             return per_col[colname]  # recorded at commit: zero I/O
         return _parquet_null_count(os.path.join(path, "data", f), colname)
 
-    total = 0
-    n_pruned = n_meta = 0
+    total = n_meta = 0
     boundary: list[str] = []
     # _cmp_stat keys: a date-widened column mixes date (pre-widening
     # files) and datetime (post-widening files / bounds) in its stats
     clo, chi = _cmp_stat(lo), _cmp_stat(hi)
-    for f in man.get("files", []):
+    for f in chosen:
         s = lookup(f)
-        if s is not None and (
-            _cmp_stat(s[1]) < clo or _cmp_stat(s[0]) > chi
-        ):
-            n_pruned += 1  # disjoint: DVs can only shrink 0 matches
-            continue
         if (
             s is not None
             and clo <= _cmp_stat(s[0])
@@ -2642,7 +2631,7 @@ def count_where(
         )
     if detail:
         return total, {
-            "files_pruned": n_pruned,
+            "files_pruned": len(man["files"]) - len(chosen),
             "files_metadata": n_meta,
             "files_scanned": len(boundary),
         }
@@ -2691,12 +2680,12 @@ def snapshot_col_minmax(
         if b is not None and (hi is None or b > hi):
             hi = b
 
-    stats = man.get("stats", {}) if man.get("stats_col") == phys else {}
-    col_stats = man.get("col_stats", {})
+    # a column without a zone map answers from the footers alone
+    lookup = _zone_map(man, phys)[1] if phys in _zoned_cols(man) else lambda n: None
     for f in man.get("files", []):
         if f in referenced:
             continue
-        s = stats.get(f) or (col_stats.get(f, {}) or {}).get(phys)
+        s = lookup(f)
         if s is None:
             s = _file_stats(os.path.join(path, "data", f), phys)
         if s is None:
@@ -2728,7 +2717,7 @@ def table_files(
       ``snapshot_row_count`` for the visible cardinality).
     - ``min_stat`` / ``max_stat`` / ``null_count`` — the zone-map
       range and commit-recorded null count of ``col`` (default: the
-      primary stats column), rendered as strings so one schema serves
+      key's zone-map column), rendered as strings so one schema serves
       int/date/decimal keys; NULL when the file has no recorded stats.
     - ``dv_referenced`` — whether any deletion-vector row targets the
       file (the compaction-priority signal).
@@ -2745,26 +2734,18 @@ def table_files(
     if v < 0:
         raise FileNotFoundError(f"no committed version under {path}")
     man = _read_manifest(path, v)
-    primary = man.get("stats_col")
-    phys = _phys(man, col) if col is not None else primary
-    if col is not None and phys != primary and phys not in (
-        man.get("stats_cols") or []
-    ):
-        # all-NULL stats for a typo'd column would read as "no stats
-        # recorded" — fail like count_where/read_table_where instead
-        raise ValueError(
-            f"no zone-map stats for column {col!r}; recorded: "
-            f"{[primary] + (man.get('stats_cols') or [])}"
-        )
-    stats = man.get("stats", {}) if primary == phys else {}
-    col_stats = man.get("col_stats", {})
+    phys, lookup = None, lambda n: None
+    if col is not None or man.get("stats_col"):
+        # a typo'd column fails like count_where/read_table_where
+        # rather than reading as "no stats recorded"
+        phys, lookup = _zone_map(man, _phys(man, col) if col is not None else None)
     null_counts = man.get("null_counts", {})
     referenced = _dv_live_refs(path, man)
 
     import pyarrow as pa
 
     files = man["files"]
-    bounds = [stats.get(f) or (col_stats.get(f, {}) or {}).get(phys) for f in files]
+    bounds = [lookup(f) for f in files]
     data = os.path.join(path, "data")
     inv = pa.table(
         {
@@ -2812,7 +2793,7 @@ def table_health(
       vector debt and their fraction; high density means MoR reads
       pay the anti-join on most files and a REWRITE is due.
     - ``null_count`` / ``null_fraction`` — recorded NULLs of the
-      stats column (``col``, default primary); NULL when any file
+      stats column (``col``, default: the key's); NULL when any file
       predates null-count recording (an unknown is not a zero).
 
     Same cost profile as ``table_files`` itself: O(#files) driver
@@ -3161,21 +3142,21 @@ def _probe_source(
     ONE aggregate — the duplicate-key check MERGE runs anyway, with the
     touched-file probe riding along (same shuffle, same Spark jobs).
 
-    The touched set comes from the manifest: on a table whose zone-map
-    stats are keyed on ``key``, a file is touched when its [min, max]
-    holds at least one source key (per-file interval membership, not
-    the batch's [min, max] envelope, which degrades to every file when
-    a batch mixes low and high keys) or when it has no stats; on any
-    other table every file is touched. The O(#files) bounds travel as
+    The touched set comes from the manifest: on a table with a zone
+    map on ``key`` (``_zoned_cols``), a file is touched when its [min,
+    max] holds at least one source key (per-file interval membership,
+    not the batch's [min, max] envelope, which degrades to every file
+    when a batch mixes low and high keys) or when it has no stats; on
+    any other table every file is touched. The O(#files) bounds travel as
     a literal array in the aggregate's expression, so the probe adds no
     join and no job; the driver collects at most two rows. An empty
     source touches nothing."""
     from pyspark.sql import functions as FF
 
-    files = man["files"]
-    zoned = man.get("stats_col") == _phys(man, key)
-    stats = man.get("stats", {}) if zoned else {}
-    ltype = dict(_logical_fields(man)).get(key) if zoned else None
+    files, phys = man["files"], _phys(man, key)
+    lookup = _zone_map(man, phys)[1] if phys in _zoned_cols(man) else lambda n: None
+    stats = {n: s for n in files if (s := lookup(n)) is not None}
+    ltype = dict(_logical_fields(man)).get(key)
     # ONE SQL expression, not O(#files) Column objects: each Column
     # call is a driver-JVM round trip
     bounds = ", ".join(
@@ -3208,8 +3189,6 @@ def _probe_source(
     if not rows:
         return 0, [], []
     n_rows, dup = rows[0]["__n"], [r[key] for r in rows[1:]]
-    if not zoned:
-        return n_rows, dup, list(files)
     hit = {files[i] for i in (rows[0]["__h"] if bounds else [])}
     return n_rows, dup, [n for n in files if n in hit or n not in stats]
 

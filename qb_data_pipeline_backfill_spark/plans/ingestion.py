@@ -69,7 +69,6 @@ def envelope_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_end="1996-12-31",
         ingested_at=F.to_timestamp(F.lit(_AS_OF)),
         page_number_col=(F.col("o_orderkey") / 100 + 1).cast("int"),
-        page_size=100,
     )
 
 

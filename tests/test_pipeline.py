@@ -87,41 +87,49 @@ def test_run_backfill_second_window_appends(spark, tmp_path, source):
     assert txn.read_table(spark, target).count() == 4
 
 
+def _stub_backfill(spark, srv, target, start, end, **kw):
+    """``run_backfill`` of one window over the stub at 40 rows per
+    page; ids 0-74 fall in January, 75-149 in February."""
+    from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
+    from qb_data_pipeline_backfill_spark.sources.rest import read_qbo
+
+    source = read_qbo(
+        spark,
+        base_url=srv.base_url,
+        client_id=SQ.STUB_CLIENT_ID,
+        client_secret=SQ.STUB_CLIENT_SECRET,
+        refresh_token=SQ.STUB_REFRESH_TOKEN,
+        page_pause_s="0.0",
+        page_size="40",
+    )
+    return run_backfill(
+        spark,
+        source,
+        target,
+        id_col="id",
+        date_col=F.when(F.col("id").cast("int") < 75, "2024-01-10").otherwise(
+            "2024-02-10"
+        ),
+        window_start=start,
+        window_end=end,
+        entity_type="customers",
+        ingested_at=_as_of(),
+        **kw,
+    )
+
+
 def test_run_backfill_fetches_each_page_once_per_window(spark, tmp_path, sf_dir):
     """One pass over the REST source per window: landing a window on an
     existing target and replaying it each fetch every page once (150
     stub customers at 40 per page = 4 pages), not once per sink job."""
     from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
-    from qb_data_pipeline_backfill_spark.sources.rest import read_qbo
 
     srv = SQ.StubQboServer(f"{sf_dir}/customer.parquet")
     target = str(tmp_path / "raw_customers")
 
     def land(start, end):
-        source = read_qbo(
-            spark,
-            base_url=srv.base_url,
-            client_id=SQ.STUB_CLIENT_ID,
-            client_secret=SQ.STUB_CLIENT_SECRET,
-            refresh_token=SQ.STUB_REFRESH_TOKEN,
-            page_pause_s="0.0",
-            page_size="40",
-        )
-        return run_backfill(
-            spark,
-            source,
-            target,
-            id_col="id",
-            # ids 0-74 fall in January, 75-149 in February
-            date_col=F.when(F.col("id").cast("int") < 75, "2024-01-10").otherwise(
-                "2024-02-10"
-            ),
-            window_start=start,
-            window_end=end,
-            entity_type="customers",
-            payload_cols=["payload"],
-            order_cols=["payload"],
-            ingested_at=_as_of(),
+        return _stub_backfill(
+            spark, srv, target, start, end, order_cols=["payload"]
         )
 
     try:
@@ -137,6 +145,65 @@ def test_run_backfill_fetches_each_page_once_per_window(spark, tmp_path, sf_dir)
     finally:
         srv.close()
     assert txn.read_table(spark, target).count() == 150
+
+
+def test_stub_window_lands_the_source_payload_and_pages(spark, tmp_path, sf_dir):
+    """The raw table holds what the REST source row carries: the
+    record's own JSON as ``payload`` (not wrapped a second time), and
+    the source's page number and page size."""
+    import json
+
+    from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
+
+    srv = SQ.StubQboServer(f"{sf_dir}/customer.parquet")
+    target = str(tmp_path / "raw_customers")
+    try:
+        _stub_backfill(spark, srv, target, "2024-01-01", "2024-12-31")
+    finally:
+        srv.close()
+    landed = txn.read_table(spark, target).select(
+        "id",
+        "payload",
+        "page_number",
+        "page_size",
+        F.get_json_object("payload", "$.DisplayName").alias("name"),
+    )
+    rows = landed.collect()
+    assert len(rows) == len(srv.records) == 150
+    by_id = {r["Id"]: (i, r) for i, r in enumerate(srv.records)}
+    for row in rows:
+        i, record = by_id[row["id"]]
+        assert json.loads(row["payload"]) == record
+        assert row["name"] is not None
+        assert (row["page_number"], row["page_size"]) == (i // 40 + 1, 40)
+
+
+def test_backfill_window_spark_jobs(spark, tmp_path, sf_dir):
+    """Spark jobs per backfill window on the txn-table sink: the first
+    window 2, a later landing on the existing target 5, its replay 6."""
+    from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    srv = SQ.StubQboServer(f"{sf_dir}/customer.parquet")
+    target = str(tmp_path / "raw_customers")
+    jobs = []
+    try:
+        for i, (start, end) in enumerate(
+            [("2024-01-01", "2024-01-31"), ("2024-02-01", "2024-02-29")] * 2
+        ):
+            group = f"backfill-window-{i}-{tmp_path.name}"
+            sc.setJobGroup(group, group)
+            try:
+                _stub_backfill(spark, srv, target, start, end)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(tracker.getJobIdsForGroup(group)))
+    finally:
+        srv.close()
+    # January lands first, February lands on the existing target, then
+    # both replay
+    assert jobs == [2, 5, 6, 6]
 
 
 def test_probe_is_partition_pruned(spark, tmp_path):

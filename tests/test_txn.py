@@ -3,6 +3,7 @@ time travel, conflict detection, vacuum safety."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -472,6 +473,106 @@ def test_secondary_column_zone_maps(spark, tmp_path):
     assert man["stats_cols"] == ["v"]
     assert all(man["col_stats"].get(n) for n in man["files"])
     assert txn.read_table_where(spark, path, -1, -1, col="v").count() == 5
+
+
+def _kv_table(spark, path):
+    """Three key-zoned files with a secondary zone map on ``v``: k
+    ascends across files, v descends."""
+    for lo in (0, 100, 200):
+        batch = spark.range(lo, lo + 100).select(
+            F.col("id").alias("k"), (F.lit(5000) - F.col("id")).alias("v")
+        )
+        txn.commit_append_with_stats(
+            spark, batch.coalesce(1), path, key="k", extra_cols=["v"]
+        )
+
+
+def _raw_manifest(path, version):
+    with open(txn._manifest_path(path, version)) as f:
+        return json.load(f)
+
+
+def test_key_zone_map_lives_in_col_stats(spark, tmp_path):
+    """The manifest has one per-file zone-map store: the key's [min,
+    max] sits in ``col_stats`` next to the secondary columns', and no
+    separate key store is written."""
+    path = str(tmp_path / "t")
+    _kv_table(spark, path)
+    raw = _raw_manifest(path, txn.current_version(path))
+    assert "stats" not in raw
+    assert raw["stats_col"] == "k" and raw["stats_cols"] == ["v"]
+    bounds = sorted(tuple(raw["col_stats"][f]["k"]) for f in raw["files"])
+    assert bounds == [(0, 99), (100, 199), (200, 299)]
+    assert all(set(raw["col_stats"][f]) == {"k", "v"} for f in raw["files"])
+
+
+def _to_legacy_shape(path):
+    """Rewrite every manifest of ``path`` into the older two-store
+    shape: the key's per-file [min, max] under ``stats``, only the
+    secondary columns under ``col_stats``."""
+    d = txn._txn_dir(path)
+    for name in os.listdir(d):
+        if not (name.startswith("v") and name.endswith(".json")):
+            continue
+        with open(os.path.join(d, name)) as f:
+            man = json.load(f)
+        key = man["stats_col"]
+        man["stats"] = {
+            f: per.pop(key) for f, per in man["col_stats"].items() if key in per
+        }
+        with open(os.path.join(d, name), "w") as f:
+            json.dump(man, f)
+
+
+def test_legacy_key_stats_answer_like_one_store(spark, tmp_path):
+    """A table whose manifests keep the key's zone map apart, in the
+    older ``stats`` store, answers every zone-map question exactly as
+    the one-store table it was rewritten from, and its next commit
+    writes the one-store shape."""
+    import shutil
+
+    new, old = str(tmp_path / "new"), str(tmp_path / "old")
+    _kv_table(spark, new)
+    txn.commit_delete_mor(
+        spark, spark.createDataFrame([(150,)], "k long"), new, key="k"
+    )
+    shutil.copytree(new, old)
+    _to_legacy_shape(old)
+    assert "stats" in _raw_manifest(old, txn.current_version(old))
+
+    def answers(path):
+        rows = sorted(
+            tuple(r) for r in txn.read_table_where(spark, path, 50, 160).collect()
+        )
+        counts = [
+            txn.count_where(spark, path, lo, hi, col=col, detail=True)
+            for lo, hi, col in ((50, 160, None), (0, 299, "k"), (4800, 4950, "v"))
+        ]
+        files = {
+            c: sorted(
+                tuple(r)
+                for r in txn.table_files(spark, path, col=c)
+                .select("file_name", "min_stat", "max_stat", "null_count")
+                .collect()
+            )
+            for c in (None, "v")
+        }
+        return rows, counts, files
+
+    assert answers(old) == answers(new)
+    src = spark.createDataFrame([(120, -1), (130, -2)], "k long, v long")
+    carried = {}
+    for path in (new, old):
+        before = set(txn._read_manifest(path, txn.current_version(path))["files"])
+        txn.commit_merge(spark, src, path, key="k")
+        after = _raw_manifest(path, txn.current_version(path))
+        assert "stats" not in after
+        assert all("k" in after["col_stats"][f] for f in after["files"])
+        carried[path] = before & set(after["files"])
+    assert carried[old] == carried[new] and len(carried[new]) == 2
+    # the rewritten file's staged name differs per table; rows and
+    # counts do not
+    assert answers(old)[:2] == answers(new)[:2]
 
 
 def test_zorder_clustered_table_prunes_multiplicatively(spark, tmp_path):
@@ -2794,7 +2895,7 @@ def test_replace_where_is_copy_on_write(spark, tmp_path):
     carried = set(man_before["files"]) & set(man_after["files"])
     assert len(carried) == 3  # only the [100,200) file was rewritten
     # carried stats survive for the untouched files
-    assert all(n in man_after.get("stats", {}) for n in carried)
+    assert all("k" in man_after["col_stats"].get(n, {}) for n in carried)
     # DVs carried: k=250 stays deleted; the swapped slice reads back
     got = txn.read_table(spark, path)
     assert got.count() == 399  # 400 - 1 MoR-deleted; slice swapped 20-for-20
@@ -3039,7 +3140,7 @@ def test_partial_compaction_carries_healthy_files(spark, tmp_path):
     txn.commit_compact_files(spark, path, small, target_partitions=1)
     head = txn._read_manifest(path, txn.current_version(path))
     assert big in head["files"] and len(head["files"]) == 2
-    assert big in head.get("stats", {})  # carried stats intact
+    assert "k" in head["col_stats"].get(big, {})  # carried stats intact
     assert head.get("dvs")  # DV references the carried big file
     got = txn.read_table(spark, path)
     assert got.count() == 509  # 500 + 10 - 1 deleted
