@@ -1746,11 +1746,10 @@ def _zoned_cols(man: dict) -> list[str]:
     return list(dict.fromkeys(key + list(man.get("stats_cols") or [])))
 
 
-def _zone_map(man: dict, col: str | None) -> tuple[str, "callable"]:
-    """``(physical column, file -> [min, max] or None)`` for the zone
-    map on physical ``col`` (None: the key's ``stats_col``) — the one
-    lookup into the manifest's ``col_stats``. ``col`` must be zoned
-    (``_zoned_cols``)."""
+def _zoned_col(man: dict, col: str | None) -> str:
+    """Physical ``col`` (None: the key's ``stats_col``), checked to
+    carry a zone map, so a typo'd column fails rather than reading as
+    "no stats recorded"."""
     col = col or man.get("stats_col")
     if col is None:
         raise ValueError("table has no zone-map stats")
@@ -1758,8 +1757,15 @@ def _zone_map(man: dict, col: str | None) -> tuple[str, "callable"]:
         raise ValueError(
             f"no zone-map stats for column {col!r}; recorded: {_zoned_cols(man)}"
         )
+    return col
+
+
+def _zone_map(man: dict, col: str | None) -> "callable":
+    """file -> [min, max] or None for physical ``col`` — the one lookup
+    into the manifest's ``col_stats``. A column without a zone map
+    answers None for every file."""
     col_stats = man.get("col_stats", {})
-    return col, lambda n: col_stats.get(n, {}).get(col)
+    return lambda n: col_stats.get(n, {}).get(col)
 
 
 def _physical_bounds(man: dict, bounds: dict) -> dict[str, tuple]:
@@ -1767,7 +1773,7 @@ def _physical_bounds(man: dict, bounds: dict) -> dict[str, tuple]:
     on their zone-mapped physical columns instead, with tz-aware
     timestamp bounds normalized to naive UTC like the stats."""
     return {
-        _zone_map(man, None if c is None else _phys(man, c))[0]: (
+        _zoned_col(man, None if c is None else _phys(man, c)): (
             _norm_stat(lo),
             _norm_stat(hi),
         )
@@ -1783,7 +1789,7 @@ def _choose_files(man: dict, bounds: dict[str, tuple]) -> list[str]:
     so a date-widened column's mixed date/datetime stats stay
     comparable."""
     checks = [
-        (_zone_map(man, c)[1], _cmp_stat(lo), _cmp_stat(hi))
+        (_zone_map(man, c), _cmp_stat(lo), _cmp_stat(hi))
         for c, (lo, hi) in bounds.items()
     ]
 
@@ -2589,7 +2595,7 @@ def count_where(
     man = _read_manifest(path, v)
     ((colname, (lo, hi)),) = _physical_bounds(man, {col: (lo, hi)}).items()
     chosen = _choose_files(man, {colname: (lo, hi)})
-    lookup = _zone_map(man, colname)[1]
+    lookup = _zone_map(man, colname)
     referenced = _dv_live_refs(path, man)
     null_counts = man.get("null_counts", {})
 
@@ -2681,7 +2687,7 @@ def snapshot_col_minmax(
             hi = b
 
     # a column without a zone map answers from the footers alone
-    lookup = _zone_map(man, phys)[1] if phys in _zoned_cols(man) else lambda n: None
+    lookup = _zone_map(man, phys)
     for f in man.get("files", []):
         if f in referenced:
             continue
@@ -2734,18 +2740,14 @@ def table_files(
     if v < 0:
         raise FileNotFoundError(f"no committed version under {path}")
     man = _read_manifest(path, v)
-    phys, lookup = None, lambda n: None
-    if col is not None or man.get("stats_col"):
-        # a typo'd column fails like count_where/read_table_where
-        # rather than reading as "no stats recorded"
-        phys, lookup = _zone_map(man, _phys(man, col) if col is not None else None)
+    phys = man.get("stats_col") if col is None else _zoned_col(man, _phys(man, col))
     null_counts = man.get("null_counts", {})
     referenced = _dv_live_refs(path, man)
 
     import pyarrow as pa
 
     files = man["files"]
-    bounds = [lookup(f) for f in files]
+    bounds = list(map(_zone_map(man, phys), files))
     data = os.path.join(path, "data")
     inv = pa.table(
         {
@@ -2754,9 +2756,7 @@ def table_files(
             "n_rows": [_file_row_count(path, man, f) for f in files],
             "min_stat": [str(b[0]) if b else None for b in bounds],
             "max_stat": [str(b[1]) if b else None for b in bounds],
-            "null_count": [
-                (null_counts.get(f) or {}).get(phys) if phys else None for f in files
-            ],
+            "null_count": [(null_counts.get(f) or {}).get(phys) for f in files],
             "dv_referenced": [f in referenced for f in files],
         }
     )
@@ -3153,10 +3153,10 @@ def _probe_source(
     source touches nothing."""
     from pyspark.sql import functions as FF
 
-    files, phys = man["files"], _phys(man, key)
-    lookup = _zone_map(man, phys)[1] if phys in _zoned_cols(man) else lambda n: None
+    files, lookup = man["files"], _zone_map(man, _phys(man, key))
     stats = {n: s for n in files if (s := lookup(n)) is not None}
-    ltype = dict(_logical_fields(man)).get(key)
+    # a table created by this merge has no schema and no stats yet
+    ltype = dict(_logical_fields(man)).get(key) if stats else None
     # ONE SQL expression, not O(#files) Column objects: each Column
     # call is a driver-JVM round trip
     bounds = ", ".join(

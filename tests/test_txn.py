@@ -575,6 +575,53 @@ def test_legacy_key_stats_answer_like_one_store(spark, tmp_path):
     assert answers(old)[:2] == answers(new)[:2]
 
 
+def test_merge_prunes_on_a_secondary_zone_map(spark, tmp_path):
+    """A MERGE keyed on a column zoned only through ``stats_cols``
+    rewrites just the files whose range of that column holds a source
+    key, and lands the same rows as the same merge on a table without
+    that zone map, which touches every file."""
+    zoned, plain = str(tmp_path / "zoned"), str(tmp_path / "plain")
+    _kv_table(spark, zoned)
+    for lo in (0, 100, 200):
+        txn.commit_append_with_stats(
+            spark,
+            spark.range(lo, lo + 100)
+            .select(F.col("id").alias("k"), (5000 - F.col("id")).alias("v"))
+            .coalesce(1),
+            plain,
+            key="k",
+        )
+    # v spans [4901, 5000], [4801, 4900] and [4701, 4800] by file;
+    # both source keys fall in the middle file's range
+    src = spark.createDataFrame([(-1, 4850), (-2, 4860)], "k long, v long")
+    carried, rows = {}, {}
+    for path in (zoned, plain):
+        man = txn._read_manifest(path, txn.current_version(path))
+        v_range = {
+            f: tuple(man["col_stats"].get(f, {}).get("v") or ()) for f in man["files"]
+        }
+        txn.commit_merge(spark, src, path, key="v")
+        after = set(txn._read_manifest(path, txn.current_version(path))["files"])
+        carried[path] = {v_range[f] for f in set(man["files"]) & after}
+        rows[path] = sorted(
+            tuple(r) for r in txn.read_table(spark, path).select("k", "v").collect()
+        )
+    assert carried[zoned] == {(4901, 5000), (4701, 4800)}
+    assert carried[plain] == set()
+    assert rows[zoned] == rows[plain]
+    assert len(rows[zoned]) == 300 and (-1, 4850) in rows[zoned]
+
+
+def test_upsert_creates_a_missing_table(spark, tmp_path):
+    """``commit_upsert`` on a path with no version yet publishes the
+    source as version 0."""
+    path = str(tmp_path / "t")
+    src = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    assert txn.commit_upsert(spark, src, path, key="k") == 0
+    got = sorted(tuple(r) for r in txn.read_version(spark, path, 0).collect())
+    assert got == [(1, "a"), (2, "b")]
+
+
 def test_zorder_clustered_table_prunes_multiplicatively(spark, tmp_path):
     """The layout + txn layers compose: a Morton-clustered commit gives
     every file a tight bounding box on BOTH dimensions, so a 2-D range
