@@ -54,6 +54,7 @@ def write_idempotent(
     key: str = "id",
     *,
     partition_col: str,
+    values: list | None = None,
 ) -> int:
     """Append the rows of ``batch`` whose ``key`` is not yet landed in
     their ``partition_col`` value(s) to the txn table at
@@ -68,11 +69,19 @@ def write_idempotent(
     The target is a POSIX path (the publish is an ``os.link``); a
     directory holding parquet data but no txn log is refused.
 
-    The source is read once: on an existing table the batch is
-    persisted before the partition-value collect, which is its only
-    pass over the source; the anti-join and the staging write then run
-    from that cache. A batch the caller already cached is used as is
-    and stays cached.
+    ``values`` are the batch's ``partition_col`` values when the caller
+    knows them; they must cover every row, or a row outside them lands
+    beside its key. ``pipeline._land`` passes its window's date, so a
+    window is one Spark action: the probe, the anti-join and the
+    staging write, which reads the source once. A writer that loses
+    the compare-and-swap then re-runs that action and extracts the
+    source again; correctness rests on ``(partition value, key)``, not
+    on reading the same rows twice. Without ``values`` the batch is
+    persisted and its distinct values collected first (a second
+    action), and the anti-join and the staging write run from that
+    cache; batches spanning several values (the tests' multi-date
+    batches, callers that land an arbitrary frame) need this path. A
+    batch the caller already cached is used as is and stays cached.
     """
     if txn.current_version(target_path) < 0:
         _refuse_untracked_parquet(target_path)
@@ -93,15 +102,16 @@ def write_idempotent(
             )
         except txn.ConcurrentCommitError:
             pass
-    owned = not batch.is_cached
+    owned = values is None and not batch.is_cached
     if owned:
         batch = batch.persist()
     try:
-        # Bounded collect: a backfill batch spans few partition values
-        # (window dates).
-        values = [r[0] for r in batch.select(partition_col).distinct().collect()]
-        if not values:
-            return 0
+        if values is None:
+            # Bounded collect: a backfill batch spans few partition
+            # values (window dates).
+            values = [r[0] for r in batch.select(partition_col).distinct().collect()]
+            if not values:
+                return 0
 
         def attempt() -> int:
             base = txn.current_version(target_path)

@@ -62,10 +62,8 @@ def run_backfill(
     Metrics come from ``DataFrame.observe`` accumulators riding the
     sink's single pass over the source — NOT separate ``count()`` jobs,
     which would re-scan the source (and for the REST source, re-fetch
-    every page) per metric. On an existing target that pass is the
-    sink's partition-value collect, which fills its cache for the
-    anti-join and the staging write. The inserted count is observed on
-    the staging write.
+    every page) per metric. That pass is the sink's staging write,
+    which also observes the inserted count.
     """
     from pyspark.sql import Observation
 
@@ -115,13 +113,23 @@ def _land(
     the same window is re-run later, so the sink's zone-map-scoped
     probe always reads the files a rerun would collide with (op #40 —
     the Spark analog of the reference's time index).
+
+    Every row carries the one ``window_date``, so it is handed to the
+    sink as its ``values`` and the sink runs no partition-value
+    collect. The value comes from the column's own expression, folded
+    on a local relation (no Spark job), so the probe value equals the
+    landed column by construction.
     """
     clean = validate_batch(rows, key=id_col, order_cols=order_cols)
-    env = to_envelope(clean, id_col=id_col, **envelope).withColumn(
-        "window_date", F.to_date("extract_window_start_utc")
-    )
+    day = F.to_date(F.to_timestamp(F.lit(envelope["window_start"])))
+    env = to_envelope(clean, id_col=id_col, **envelope).withColumn("window_date", day)
     return write_idempotent(
-        spark, env, target_path, key="id", partition_col="window_date"
+        spark,
+        env,
+        target_path,
+        key="id",
+        partition_col="window_date",
+        values=[spark.sql("VALUES (0)").select(day).first()[0]],
     )
 
 

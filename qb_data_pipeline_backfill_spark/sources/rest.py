@@ -25,14 +25,19 @@ ops #1-#7) Spark-natively:
 - **Rate limiting + 429 retry** (op #6): 0.5 s pacing between page
   fetches and sleep-then-retry on HTTP 429 honoring ``Retry-After``
   (extract_qb_items_py.py:44-69, README.md:95-97).
-- **Error handling** (op #7): transient failures retry with backoff,
-  then FAIL the task (Spark re-schedules it). The reference instead
+- **Error handling** (op #7): transient failures (HTTP 502, 503 and
+  504, dropped connections) retry in the same loop with bounded
+  backoff, honoring ``Retry-After``; past ``max_retries`` the task
+  FAILS, and so does the job, loudly. Spark re-runs a failed task
+  only up to ``spark.task.maxFailures``, which is 1 under
+  ``local[N]``, so the retry must happen here. The reference instead
   swallowed the exception and returned partial data — a silent-loss
   bug deliberately not replicated.
 """
 
 from __future__ import annotations
 
+import http.client
 import itertools
 import json
 import time
@@ -62,6 +67,8 @@ from pyspark.sql.types import (
 PROD_BASE_URL = "https://quickbooks.api.intuit.com"
 SANDBOX_BASE_URL = "https://sandbox-quickbooks.api.intuit.com"
 OAUTH_TOKEN_PATH = "/oauth2/v1/tokens/bearer"
+# HTTP statuses _query retries: throttled, and the transient gateway errors
+_RETRIED = (429, 502, 503, 504)
 
 SCHEMA = StructType(
     [
@@ -184,9 +191,10 @@ class _QboRestReader(DataSourceReader):
     # --- HTTP (ops #4, #6, #7) --------------------------------------------
     def _query(self, select: str, **paging) -> dict:
         """Send one entity query (``SELECT {select} FROM entity`` plus
-        the WHERE) — the only request this reader makes. HTTP 429
-        sleeps for ``Retry-After`` and retries (op #6); a dropped
-        connection retries with bounded backoff (op #7)."""
+        the WHERE) — the only request this reader makes. HTTP 429 sleeps
+        for ``Retry-After`` (else ``retry_wait_s``) and retries (op #6);
+        HTTP 502, 503 and 504 sleep for ``Retry-After`` (else the bounded
+        backoff) and retry, as a dropped connection does (op #7)."""
         query = f"SELECT {select} FROM {self.entity}"
         if self.where:
             query += f" WHERE {self.where}"
@@ -202,20 +210,22 @@ class _QboRestReader(DataSourceReader):
         attempts = 0
         while True:
             attempts += 1
+            backoff = min(2.0 ** attempts * 0.1, self.retry_wait_s)
             try:
                 with urllib.request.urlopen(req, timeout=30) as resp:
                     return json.loads(resp.read().decode())
             except urllib.error.HTTPError as e:
-                if e.code == 429 and attempts <= self.max_retries:
-                    wait = float(e.headers.get("Retry-After") or self.retry_wait_s)
-                    time.sleep(wait)
-                    continue
-                raise
-            except urllib.error.URLError:
-                if attempts <= self.max_retries:
-                    time.sleep(min(2.0 ** attempts * 0.1, self.retry_wait_s))
-                    continue
-                raise
+                if e.code not in _RETRIED or attempts > self.max_retries:
+                    raise
+                default = self.retry_wait_s if e.code == 429 else backoff
+                time.sleep(float(e.headers.get("Retry-After") or default))
+            except (OSError, http.client.HTTPException):
+                # a dropped connection: URLError while sending, or
+                # RemoteDisconnected / IncompleteRead / a reset while
+                # reading the reply, which urllib does not wrap
+                if attempts > self.max_retries:
+                    raise
+                time.sleep(backoff)
 
     # --- planning (ops #1, #5) -------------------------------------------
     def partitions(self):

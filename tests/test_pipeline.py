@@ -87,9 +87,10 @@ def test_run_backfill_second_window_appends(spark, tmp_path, source):
     assert txn.read_table(spark, target).count() == 4
 
 
-def _stub_backfill(spark, srv, target, start, end, **kw):
+def _stub_backfill(spark, srv, target, start, end, keep=None, **kw):
     """``run_backfill`` of one window over the stub at 40 rows per
-    page; ids 0-74 fall in January, 75-149 in February."""
+    page; ids 0-74 fall in January, 75-149 in February. ``keep``
+    filters the source in Spark, after the full scan."""
     from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
     from qb_data_pipeline_backfill_spark.sources.rest import read_qbo
 
@@ -102,6 +103,8 @@ def _stub_backfill(spark, srv, target, start, end, **kw):
         page_pause_s="0.0",
         page_size="40",
     )
+    if keep is not None:
+        source = source.filter(keep)
     return run_backfill(
         spark,
         source,
@@ -180,7 +183,9 @@ def test_stub_window_lands_the_source_payload_and_pages(spark, tmp_path, sf_dir)
 
 def test_backfill_window_spark_jobs(spark, tmp_path, sf_dir):
     """Spark jobs per backfill window on the txn-table sink: the first
-    window 2, a later landing on the existing target 5, its replay 6."""
+    window 2, a later landing on the existing target 2, a replay 3.
+    ``_land`` hands the sink the window's date, so no landing runs a
+    partition-value collect."""
     from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
 
     sc = spark.sparkContext
@@ -203,7 +208,66 @@ def test_backfill_window_spark_jobs(spark, tmp_path, sf_dir):
         srv.close()
     # January lands first, February lands on the existing target, then
     # both replay
-    assert jobs == [2, 5, 6, 6]
+    assert jobs == [2, 2, 3, 3]
+
+
+def test_lost_cas_on_a_window_re_extracts_and_lands_each_id_once(
+    spark, tmp_path, sf_dir, monkeypatch
+):
+    """Two writers land February through ``_land``. The rival lands Ids
+    75-79 inside the first writer's publish, so the first loses the
+    compare-and-swap, extracts the source again, re-probes and inserts
+    exactly the other 70 Ids."""
+    from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
+
+    srv = SQ.StubQboServer(f"{sf_dir}/customer.parquet")
+    target = str(tmp_path / "raw_customers")
+    publish = txn._publish
+    rival: list[dict] = []
+
+    def publish_after_rival(*args):
+        monkeypatch.setattr(txn, "_publish", publish)
+        rival.append(
+            _stub_backfill(
+                spark, srv, target, "2024-02-01", "2024-02-29",
+                keep=F.col("id").cast("int") < 80,
+            )
+        )
+        return publish(*args)
+
+    try:
+        _stub_backfill(spark, srv, target, "2024-01-01", "2024-01-31")
+        monkeypatch.setattr(txn, "_publish", publish_after_rival)
+        before = srv.n_page_requests
+        first = _stub_backfill(spark, srv, target, "2024-02-01", "2024-02-29")
+        pages = srv.n_page_requests - before
+    finally:
+        srv.close()
+    assert rival == [{"extracted": 80, "after_filter": 5, "inserted": 5}]
+    assert first == {"extracted": 150, "after_filter": 75, "inserted": 70}
+    # 4 pages each: the first attempt, the rival, the re-extract
+    assert pages == 3 * 4
+    landed = txn.read_table(spark, target).filter("window_date = '2024-02-01'")
+    assert landed.count() == landed.select("id").distinct().count() == 75
+
+
+def test_a_503_page_still_lands_the_exact_window(spark, tmp_path, sf_dir):
+    """A 503 on one page is retried inside the REST task: the window on
+    the existing target lands every Id once."""
+    from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
+
+    srv = SQ.StubQboServer(f"{sf_dir}/customer.parquet")
+    target = str(tmp_path / "raw_customers")
+    try:
+        _stub_backfill(spark, srv, target, "2024-01-01", "2024-01-31")
+        srv.fail_first_n, srv.fail_status = srv.n_429_sent + 1, 503
+        got = _stub_backfill(spark, srv, target, "2024-02-01", "2024-02-29")
+    finally:
+        srv.close()
+    assert srv.n_429_sent == 1
+    assert got == {"extracted": 150, "after_filter": 75, "inserted": 75}
+    landed = txn.read_table(spark, target)
+    assert landed.count() == landed.select("id").distinct().count() == 150
 
 
 def test_probe_is_partition_pruned(spark, tmp_path):

@@ -76,6 +76,24 @@ def test_429_sleep_and_retry(spark, srv):
     assert srv.n_429_sent == 3
 
 
+@pytest.mark.parametrize("status", [502, 503, 504, None], ids=str)
+def test_transient_failures_retry(spark, srv, status):
+    """Gateway errors and connections dropped before the reply (status
+    None) retry inside the task."""
+    srv.fail_first_n, srv.fail_status = 2, status
+    df = read_qbo(spark, **_opts(srv, page_size="100"))
+    assert df.count() == 150  # all rows despite the transient failures
+    assert srv.n_429_sent == 2
+    assert srv.n_page_requests == 2 + 2
+
+
+def test_gateway_errors_past_max_retries_fail_loudly(spark, srv):
+    srv.fail_first_n, srv.fail_status = 10, 503
+    df = read_qbo(spark, **_opts(srv, page_size="100", max_retries="1"))
+    with pytest.raises(Exception, match="503"):
+        df.count()
+
+
 def test_oauth_rejects_bad_credentials(spark, srv):
     # surfaces as urllib HTTPError or a PySpark wrapper depending on
     # where plan-time reader init happens — either way it must fail
