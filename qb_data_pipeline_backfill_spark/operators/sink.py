@@ -66,8 +66,17 @@ def write_idempotent(
     later commit anti-joins the batch against ``existing_keys_probe``
     and publishes on the version it probed, re-probing through
     ``txn.commit_with_retry`` when another writer published first.
-    The target is a POSIX path (the publish is an ``os.link``); a
-    directory holding parquet data but no txn log is refused.
+    Two cases skip the anti-join, because no committed key can collide:
+    a new table, and a base whose zone map on ``partition_col`` puts no
+    file inside the batch's values (a window landing for the first
+    time). The manifest answers that on the driver, so such a landing
+    plans no probe scan and no join. Its publish is still the
+    compare-and-swap on that base, so a writer that lands the window
+    first makes the swap fail, and the retry probes the winner's
+    files. A replay that inserts nothing publishes no version (see
+    ``txn.commit_append``). The target is a POSIX path (the publish is
+    an ``os.link``); a directory holding parquet data but no txn log
+    is refused.
 
     ``values`` are the batch's ``partition_col`` values when the caller
     knows them; they must cover every row, or a row outside them lands
@@ -113,11 +122,19 @@ def write_idempotent(
             if not values:
                 return 0
 
+        bounds = {partition_col: (min(values), max(values))}
+
         def attempt() -> int:
             base = txn.current_version(target_path)
-            existing = existing_keys_probe(spark, target_path, key, partition_col, values)
+            rows = batch
+            # a window no committed file can hold has no keys to probe
+            if txn.pruned_file_count_within(target_path, bounds, base)[0]:
+                existing = existing_keys_probe(
+                    spark, target_path, key, partition_col, values
+                )
+                rows = new_rows_only(batch, existing, key)
             return _append_new(
-                new_rows_only(batch, existing, key),
+                rows,
                 lambda df: txn.commit_append(spark, df, target_path, expected_base=base),
             )
 

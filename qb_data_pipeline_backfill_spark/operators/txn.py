@@ -606,6 +606,13 @@ def commit_append(
     been committed since, the publish fails instead of silently
     basing on state the caller never saw.
 
+    A keyless append that stages no row and changes no table metadata
+    (no new column, expectation, change-feed property or ``txn_app``
+    watermark) publishes nothing and returns the base version, so a
+    sink's replay leaves the log as it was. The table's first commit
+    always publishes, and a keyed append publishes one version per
+    call, empty or not.
+
     With ``checkpoint_every=K``, every K-th published version also
     advances the checkpoint floor (see ``checkpoint``) so long-lived
     append streams can cap their manifest population with periodic
@@ -724,6 +731,7 @@ def _append(
         extra_meta=extra,
         cdc="append",
         op="append",
+        skip_noop=key is None,
     )
 
 
@@ -1553,6 +1561,7 @@ def _commit_replace(
     extra_meta: dict | None = None,
     cdc: "str | DataFrame | None" = None,
     op: str | None = None,
+    skip_noop: bool = False,
 ) -> int:
     """Publish ``merged``'s rewrite as version base+1: the manifest
     references the newly staged files plus the ``carried`` files of
@@ -1575,7 +1584,11 @@ def _commit_replace(
     optimization for append commits); ``"none"`` declares a
     row-preserving rewrite (compaction: dataChange=false, the feed
     skips it); a DataFrame is the commit's net change rows, staged as
-    CDC files alongside the data."""
+    CDC files alongside the data.
+
+    With ``skip_noop``, a commit on an existing table that stages no
+    row and leaves every table-level fact of the base manifest as it
+    was publishes nothing and returns ``base``."""
     os.makedirs(os.path.join(path, "data"), exist_ok=True)
     cmap = (extra_meta or {}).get("column_map") or {}
     _guard_new_columns([f.name for f in merged.schema], extra_meta or {})
@@ -1666,7 +1679,24 @@ def _commit_replace(
                 "mode": "files",
                 "files": _stage_cdc_files(spark, cdc, path, stage_id, cmap),
             }
+        if (
+            skip_noop
+            and base >= 0
+            and not new_files
+            and _table_facts(manifest) == _table_facts(prev_man)
+        ):
+            return base
         return _publish(path, manifest, base, op)
+
+
+# manifest keys that describe one commit, not the table it leaves
+_PER_COMMIT_KEYS = ("version", "parent", "committed_at", "operation", "cdc")
+
+
+def _table_facts(man: dict) -> dict:
+    """``man`` without its per-commit keys: two manifests with equal
+    facts describe the same table."""
+    return {k: v for k, v in man.items() if k not in _PER_COMMIT_KEYS}
 
 
 def commit_delete(

@@ -1,11 +1,12 @@
 """REST-source queries: the paginated QBO-style scan, oracle-checked.
 
 The stub server (sources/stub_qbo.py) serves the sf_dir's own
-``customer`` parquet through the QBO HTTP contract, so the DataSource
-scan — OAuth, count-planned page partitions, pagination, JSON payload
-— can be hash-compared against DuckDB reading the same parquet
-directly. This gives the REST front end (ops #1-#7) a full correctness
-gate, not just a rows-only check.
+``customer`` parquet through the QBO HTTP contract, so the REST scan
+(``read_qbo``: OAuth and the COUNT plan on the driver, then one Spark
+partition per group of pages, pagination, JSON payload) can be
+hash-compared against DuckDB reading the same parquet directly. This
+gives the REST front end (ops #1-#7) a full correctness gate, not just
+a rows-only check.
 
 ``page_pause_s`` is 0 here (pacing against a local stub only burns
 wall-clock); the pacing/429 code paths are exercised by

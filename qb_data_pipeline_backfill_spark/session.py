@@ -59,10 +59,6 @@ def get_spark(
         # which vanilla Spark rejects; read it as long and convert in
         # tables.load_table (DuckDB truncates ns→us the same way).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Python DataSource filter pushdown (the qbo_rest source
-        # implements pushFilters); runtime-settable, also pinned at
-        # read time for driver-supplied sessions.
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Runtime join pruning (spark.sql.optimizer.runtime.bloomFilter
         # .enabled / runtimeFilter.semiJoinReduction.enabled) was tried
         # and REJECTED: on this query surface it re-planned one of the

@@ -1,29 +1,33 @@
-"""QBO-style paginated REST source as a Spark 4 Python DataSource.
+"""QBO-style paginated REST source, planned on the driver.
 
 Re-expresses the reference's entire ingestion front end (SURVEY.md §2A
 ops #1-#7) Spark-natively:
 
 - **Paginated scan** (op #1): the reference loops pages serially
   (reference: scheduler_data/scheduler/data_loaders/
-  extract_qb_customers_py.py:31-59). Here the planner issues one
-  ``SELECT COUNT(*)`` probe and emits **one input partition per page**,
-  so a 1000-executor cluster fetches pages concurrently (subject to
-  per-task pacing) instead of serially on one driver.
+  extract_qb_customers_py.py:31-59). Here ``read_qbo`` issues one
+  ``SELECT COUNT(*)`` probe on the driver and plans **one Spark
+  partition per group of pages**, so a 1000-executor cluster fetches
+  pages concurrently (subject to per-task pacing) instead of serially
+  on one driver. The scan is a ``mapInArrow`` over a ``range`` of
+  partition indexes: no Python data-source planner runs for it.
 - **OAuth2 refresh-token exchange** (op #2): qb_auth.py:4-26 —
   ``OAuth2TokenClient`` below, stdlib urllib only.
 - **Environment routing** (op #3): sandbox vs production base URL
   (extract_qb_customers_py.py:21-24) — ``resolve_base_url``.
-- **Entity query** (op #4) + **filter pushdown**: the remote API
-  accepts a SQL-ish query; supported Catalyst filters on ``id`` are
-  translated into its WHERE clause (``pushFilters``) — fixing the
-  reference's known miss of filtering client-side after a full scan
-  (SURVEY.md §4).
+- **Entity query** (op #4) + **server-side filter**: the remote API
+  accepts a SQL-ish query; the ``where`` option becomes its WHERE
+  clause, so the COUNT plan and the pages cover only the filtered
+  records — fixing the reference's known miss of filtering
+  client-side after a full scan (SURVEY.md §4). Spark filters on the
+  scan's columns run after the fetch.
 - **Stop conditions** (op #5): every partition stops at an empty or
   short page; count-planned partitions also stop after their planned
   pages, and the no-count fallback is one partition that pages until
   the short page (extract_qb_customers_py.py:50-57).
 - **Rate limiting + 429 retry** (op #6): 0.5 s pacing between page
   fetches and sleep-then-retry on HTTP 429 honoring ``Retry-After``
+  in either of its forms, seconds or an HTTP date
   (extract_qb_items_py.py:44-69, README.md:95-97).
 - **Error handling** (op #7): transient failures (HTTP 502, 503 and
   504, dropped connections) retry in the same loop with bounded
@@ -37,26 +41,18 @@ ops #1-#7) Spark-natively:
 
 from __future__ import annotations
 
+import email.utils
 import http.client
 import itertools
 import json
+import math
 import time
 import urllib.error
 import urllib.parse
 import urllib.request
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    InputPartition,
-    LessThan,
-    LessThanOrEqual,
-)
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -130,13 +126,36 @@ class OAuth2TokenClient:
         return token
 
 
+def _retry_after(value: str | None, default: float) -> float:
+    """Seconds to wait before a retry, from a ``Retry-After`` header in
+    either RFC 9110 form: delay-seconds, or an HTTP date (a date in the
+    past waits 0). A missing or unparsable value waits ``default``."""
+    if not value:
+        return default
+    try:
+        seconds = float(value)
+    except ValueError:
+        try:
+            when = email.utils.parsedate_to_datetime(value)
+        except (TypeError, ValueError):
+            return default
+        if when.tzinfo is None:  # "-0000": UTC, per RFC 5322
+            when = when.replace(tzinfo=timezone.utc)
+        seconds = (when - datetime.now(timezone.utc)).total_seconds()
+    return max(seconds, 0.0) if math.isfinite(seconds) else default
+
+
 @dataclass
-class _Page(InputPartition):
+class _Page:
     first: int  # 1-based first page
     n_pages: int | None = 1  # pages fetched serially; None: until a short page
 
 
-class _QboRestReader(DataSourceReader):
+class _QboRestReader:
+    """The source's planner and page reader. Built on the driver by
+    ``read_qbo``, which plans with ``partitions``; Spark tasks then run
+    ``read`` on a pickled copy."""
+
     def __init__(self, options: dict):
         self.entity = options.get("entity", "Customer")
         self.environment = options.get("environment", "production")
@@ -155,46 +174,21 @@ class _QboRestReader(DataSourceReader):
         client_id = options.get("client_id", "")
         client_secret = options.get("client_secret", "")
         refresh_token = options.get("refresh_token", "")
-        # Token exchanged once on the driver at plan time; executors
-        # reuse the bearer (pickled with the reader). Long jobs would
-        # refresh inside _query on 401 — out of scope here.
+        # Token exchanged once on the driver, when read_qbo builds the
+        # reader; tasks reuse the bearer (pickled with the reader). Long
+        # jobs would refresh inside _query on 401 — out of scope here.
         self._token = OAuth2TokenClient(
             self.base_url + OAUTH_TOKEN_PATH, client_id, client_secret
         ).access_token(refresh_token)
 
-    # --- pushdown (op #4) -------------------------------------------------
-    def pushFilters(self, filters: list[Filter]):  # noqa: N802 (API name)
-        """Translate one supported Catalyst filter on ``id`` into the
-        remote query's WHERE clause; everything else stays in Spark.
-        Spark never re-checks a pushed filter, so only string values that
-        cannot leave the quoted literal (no quote or backslash) are pushed."""
-        ops = {
-            EqualTo: "=",
-            GreaterThan: ">",
-            GreaterThanOrEqual: ">=",
-            LessThan: "<",
-            LessThanOrEqual: "<=",
-        }
-        for f in filters:
-            op = ops.get(type(f))
-            if (
-                op is not None
-                and self.where is None
-                and tuple(f.attribute) == ("id",)
-                and isinstance(f.value, str)
-                and not any(c in f.value for c in "'\\")
-            ):
-                self.where = f"Id {op} '{f.value}'"
-                continue
-            yield f  # unsupported → Spark evaluates it post-scan
-
     # --- HTTP (ops #4, #6, #7) --------------------------------------------
     def _query(self, select: str, **paging) -> dict:
         """Send one entity query (``SELECT {select} FROM entity`` plus
-        the WHERE) — the only request this reader makes. HTTP 429 sleeps
-        for ``Retry-After`` (else ``retry_wait_s``) and retries (op #6);
-        HTTP 502, 503 and 504 sleep for ``Retry-After`` (else the bounded
-        backoff) and retry, as a dropped connection does (op #7)."""
+        the ``where`` option) — the only request this reader makes. HTTP
+        429 sleeps for ``Retry-After`` (else ``retry_wait_s``) and
+        retries (op #6); HTTP 502, 503 and 504 sleep for ``Retry-After``
+        (else the bounded backoff) and retry, as a dropped connection
+        does (op #7)."""
         query = f"SELECT {select} FROM {self.entity}"
         if self.where:
             query += f" WHERE {self.where}"
@@ -218,7 +212,7 @@ class _QboRestReader(DataSourceReader):
                 if e.code not in _RETRIED or attempts > self.max_retries:
                     raise
                 default = self.retry_wait_s if e.code == 429 else backoff
-                time.sleep(float(e.headers.get("Retry-After") or default))
+                time.sleep(_retry_after(e.headers.get("Retry-After"), default))
             except (OSError, http.client.HTTPException):
                 # a dropped connection: URLError while sending, or
                 # RemoteDisconnected / IncompleteRead / a reset while
@@ -264,34 +258,51 @@ class _QboRestReader(DataSourceReader):
                 return
 
 
-class QboRestDataSource(DataSource):
-    """``spark.read.format("qbo_rest")`` — options:
-
-    entity, environment (sandbox|production), base_url (override),
-    realm_id, client_id, client_secret, refresh_token, page_size,
-    pages_per_partition, page_pause_s, retry_wait_s, max_retries, where.
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "qbo_rest"
-
-    def schema(self) -> StructType:
-        return SCHEMA
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return _QboRestReader(dict(self.options))
-
-
 def read_qbo(spark, **options):
-    """Register the source (idempotent) and return the lazy scan.
+    """The lazy scan of a QBO-style entity, as a DataFrame of ``SCHEMA``.
 
-    Works under any SparkSession: the pushdown conf is runtime-settable
-    and pinned here rather than assuming our session factory built it.
+    Options: entity, environment (sandbox|production), base_url
+    (override), realm_id, client_id, client_secret, refresh_token,
+    page_size, pages_per_partition, page_pause_s, retry_wait_s,
+    max_retries, where (the remote query's WHERE clause, the only
+    filter the server applies).
+
+    The scan is planned here, on the driver: the token exchange and the
+    COUNT probe run once per call, so bad credentials raise from this
+    call. Each action on the result fetches the pages of that one plan;
+    a caller that re-runs an action (a sink retrying a lost
+    compare-and-swap) re-fetches the same pages, and a fresh COUNT
+    needs a fresh call. The result is a ``mapInArrow`` over one
+    ``range`` row per planned partition, which yields one Arrow batch
+    per page, so a partition holds one page in memory at a time, even
+    the no-COUNT partition that pages until a short page. No Python
+    data-source planner runs, and the source needs no session conf.
     """
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(QboRestDataSource)
-    reader = spark.read.format(QboRestDataSource.name())
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load()
+    reader = _QboRestReader({k: str(v) for k, v in options.items()})
+    pages = reader.partitions()
+    return spark.range(len(pages), numPartitions=len(pages)).mapInArrow(
+        _page_batches(reader, pages), SCHEMA
+    )
+
+
+def _page_batches(reader: _QboRestReader, pages: list[_Page]):
+    """The scan's ``mapInArrow`` function: for each partition index it
+    receives, run ``reader.read`` over that planned ``_Page`` and yield
+    one Arrow ``RecordBatch`` per fetched page."""
+
+    def fetch(batches):
+        import pyarrow as pa
+
+        types = [pa.string(), pa.string(), pa.int32(), pa.int32()]
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                for _, rows in itertools.groupby(
+                    reader.read(pages[i]), key=lambda row: row[2]
+                ):
+                    cols = zip(*rows)
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(c, t) for c, t in zip(cols, types)],
+                        names=SCHEMA.names,
+                    )
+
+    return fetch

@@ -3,7 +3,7 @@
 Serves the driver's synthetic ``customer`` parquet table through the
 same HTTP surface the reference consumes (OAuth2 bearer-token exchange,
 paginated ``/v3/company/{realm}/query`` with ``startPosition``/
-``maxResults``, injected 429 or 5xx responses and dropped connections) so the REST DataSource can be
+``maxResults``, injected 429 or 5xx responses and dropped connections) so the REST source can be
 exercised — and oracle-checked — without network access.
 
 This is test/validation infrastructure, not engine code: the engine
@@ -124,7 +124,9 @@ class _QboHandler(_Handler):
                     self.close_connection = True
                     return
                 return self._json(
-                    stub.fail_status, {"error": "injected"}, {"Retry-After": "0"}
+                    stub.fail_status,
+                    {"error": "injected"},
+                    {"Retry-After": stub.retry_after},
                 )
         recs = stub._filtered(field, op, value)
         start = int(qs.get("startPosition", ["1"])[0])
@@ -161,10 +163,12 @@ class StubQboServer(_StubServer):
             for k, name, nation, seg, bal in rows
         ]
         # the first ``fail_first_n`` page requests are answered with
-        # ``fail_status`` (and Retry-After: 0), or dropped unanswered
-        # when it is None; ``n_429_sent`` counts them, whatever the status
+        # ``fail_status`` and a ``Retry-After`` of ``retry_after`` (delay
+        # seconds or an HTTP date), or dropped unanswered when the status
+        # is None; ``n_429_sent`` counts them, whatever the status
         self.fail_first_n = fail_first_n
         self.fail_status = 429
+        self.retry_after = "0"
         self.reject_count = False  # True: COUNT → HTTP 400 (no-COUNT dialect)
         self.n_429_sent = 0
         self.n_page_requests = 0

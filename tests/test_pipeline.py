@@ -211,6 +211,70 @@ def test_backfill_window_spark_jobs(spark, tmp_path, sf_dir):
     assert jobs == [2, 2, 3, 3]
 
 
+def test_window_runs_no_python_planner(spark, tmp_path, sf_dir):
+    """The REST scan is planned on the driver: a landing and a replay
+    start no ``pyspark.sql.worker.*`` planner process, and the scan is
+    a ``mapInArrow`` over a ``range``, not a Python data source."""
+    from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
+    from qb_data_pipeline_backfill_spark.sources.rest import read_qbo
+    from tools.backfill_window_probe import planner_processes
+
+    srv = SQ.StubQboServer(f"{sf_dir}/customer.parquet")
+    target = str(tmp_path / "raw_customers")
+    before = planner_processes().keys()
+    try:
+        plan = read_qbo(
+            spark,
+            base_url=srv.base_url,
+            client_id=SQ.STUB_CLIENT_ID,
+            client_secret=SQ.STUB_CLIENT_SECRET,
+            refresh_token=SQ.STUB_REFRESH_TOKEN,
+        )._jdf.queryExecution().optimizedPlan().toString()
+        for _ in range(2):
+            _stub_backfill(spark, srv, target, "2024-01-01", "2024-01-31")
+    finally:
+        srv.close()
+    assert planner_processes().keys() - before == set()
+    assert plan.startswith("MapInArrow") and "Range (0, 2" in plan
+
+
+def test_probe_runs_only_where_a_file_can_hold_the_window(
+    spark, tmp_path, sf_dir, monkeypatch
+):
+    """A landing on a window no committed file holds builds no key
+    probe; its replay probes once and publishes no version."""
+    from qb_data_pipeline_backfill_spark.operators import sink
+    from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
+
+    probes = []
+    probe = sink.existing_keys_probe
+
+    def counted_probe(*args):
+        probes.append(args)
+        return probe(*args)
+
+    monkeypatch.setattr(sink, "existing_keys_probe", counted_probe)
+    srv = SQ.StubQboServer(f"{sf_dir}/customer.parquet")
+    target = str(tmp_path / "raw_customers")
+    got = []
+    try:
+        for start, end in [
+            ("2024-01-01", "2024-01-31"),  # the first window: a new table
+            ("2024-02-01", "2024-02-29"),  # a new window on the table
+            ("2024-02-01", "2024-02-29"),  # its replay
+        ]:
+            got.append(_stub_backfill(spark, srv, target, start, end))
+            got.append((len(probes), txn.current_version(target)))
+    finally:
+        srv.close()
+    assert got == [
+        {"extracted": 150, "after_filter": 75, "inserted": 75}, (0, 0),
+        {"extracted": 150, "after_filter": 75, "inserted": 75}, (0, 1),
+        # the replay probes February's file and publishes nothing
+        {"extracted": 150, "after_filter": 75, "inserted": 0}, (1, 1),
+    ]
+
+
 def test_lost_cas_on_a_window_re_extracts_and_lands_each_id_once(
     spark, tmp_path, sf_dir, monkeypatch
 ):

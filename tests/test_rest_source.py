@@ -1,11 +1,16 @@
-"""Tests for the QBO-style paginated REST DataSource (ops #1-#7):
-page partitioning, pagination stop conditions, 429 retry, OAuth, filter
-pushdown, and environment routing — all against the local stub server."""
+"""Tests for the QBO-style paginated REST source (ops #1-#7): page
+partitioning, pagination stop conditions, 429 retry, OAuth, the
+server-side ``where`` filter, and environment routing — all against
+the local stub server."""
 
 from __future__ import annotations
 
+import email.utils
+import time
 import urllib.error
+from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
@@ -15,6 +20,10 @@ from qb_data_pipeline_backfill_spark.sources import stub_qbo as SQ
 from qb_data_pipeline_backfill_spark.sources.rest import (
     PROD_BASE_URL,
     SANDBOX_BASE_URL,
+    _Page,
+    _page_batches,
+    _QboRestReader,
+    _retry_after,
 )
 
 PARQUET = "/root/testdata/sf0.001/customer.parquet"  # 150 rows
@@ -69,11 +78,63 @@ def test_sequential_fallback_stops_on_short_page(spark, srv):
     assert srv.n_page_requests == 4
 
 
+def test_no_count_partition_yields_one_arrow_batch_per_page(srv):
+    """The scan's map function yields each fetched page as its own
+    Arrow batch, so the no-COUNT partition, which pages until a short
+    page, holds one page at a time."""
+    srv.reject_count = True
+    reader = _QboRestReader(_opts(srv, page_size="40"))
+    pages = reader.partitions()
+    assert pages == [_Page(1, None)]
+    fetch = _page_batches(reader, pages)
+    batches = list(fetch([pa.record_batch([pa.array([0])], names=["id"])]))
+    assert [b.num_rows for b in batches] == [40, 40, 40, 30]
+    assert [set(b.column("page_number").to_pylist()) for b in batches] == [
+        {1}, {2}, {3}, {4}
+    ]
+    assert srv.n_page_requests == 4
+
+
 def test_429_sleep_and_retry(spark, srv):
     srv.fail_first_n = 3
     df = read_qbo(spark, **_opts(srv, page_size="100", retry_wait_s="0.01"))
     assert df.count() == 150  # all rows despite initial throttling
     assert srv.n_429_sent == 3
+
+
+def _http_date(delta: timedelta) -> str:
+    return email.utils.format_datetime(
+        datetime.now(timezone.utc) + delta, usegmt=True
+    )
+
+
+@pytest.mark.parametrize("form", ["seconds", "http-date"])
+def test_429_retry_after_in_either_form(spark, srv, form):
+    """``Retry-After`` as delay seconds or as an HTTP date (RFC 9110);
+    a date in the past waits 0. Ignoring the header would wait
+    ``retry_wait_s`` per throttled page."""
+    srv.retry_after = {
+        "seconds": "0",
+        "http-date": _http_date(-timedelta(minutes=5)),
+    }[form]
+    srv.fail_first_n = 2
+    df = read_qbo(spark, **_opts(srv, page_size="100", retry_wait_s="30"))
+    t0 = time.monotonic()
+    assert df.count() == 150
+    assert time.monotonic() - t0 < 30
+    assert srv.n_429_sent == 2
+
+
+def test_retry_after_values():
+    assert _retry_after("2", 9.0) == 2.0
+    assert _retry_after("-3", 9.0) == 0.0
+    assert _retry_after(_http_date(-timedelta(minutes=1)), 9.0) == 0.0
+    assert 50 < _retry_after(_http_date(timedelta(minutes=1)), 9.0) <= 60
+    # "-0000" parses to a naive datetime, which is UTC
+    assert _retry_after("Wed, 21 Oct 2015 07:28:00 -0000", 9.0) == 0.0
+    # missing or unparsable: the default wait
+    for value in (None, "", "soon", "nan", "inf"):
+        assert _retry_after(value, 9.0) == 9.0
 
 
 @pytest.mark.parametrize("status", [502, 503, 504, None], ids=str)
@@ -95,31 +156,33 @@ def test_gateway_errors_past_max_retries_fail_loudly(spark, srv):
 
 
 def test_oauth_rejects_bad_credentials(spark, srv):
-    # surfaces as urllib HTTPError or a PySpark wrapper depending on
-    # where plan-time reader init happens — either way it must fail
-    # with the 401 and fetch no data.
-    with pytest.raises(Exception, match="401"):
-        read_qbo(spark, **_opts(srv, client_secret="wrong")).count()
-    assert srv.n_token_requests >= 1
-    assert srv.n_page_requests == 0  # failed before any data fetch
+    # the token exchange runs on the driver when read_qbo plans the
+    # scan, so the 401 raises from read_qbo itself, before any fetch
+    with pytest.raises(urllib.error.HTTPError, match="401"):
+        read_qbo(spark, **_opts(srv, client_secret="wrong"))
+    assert srv.n_token_requests == 1
+    assert srv.n_page_requests == 0
 
 
-def test_filter_pushdown_reaches_server(spark, srv):
-    df = read_qbo(spark, **_opts(srv)).filter(F.col("id") == "42")
-    rows = df.collect()
-    assert [r["id"] for r in rows] == ["42"]
-    # the pushed WHERE shrank the count probe to 1 row → 1 page → 1 request
-    assert srv.n_page_requests == 1
+def test_where_option_shrinks_count_and_pages(spark, srv):
+    """The ``where`` option is the server's only filter: the COUNT plan
+    and the page requests cover the matching records alone (15 pages
+    of 10 unfiltered)."""
+    want = {r["Id"] for r in srv.records if r["Id"] >= "80"}
+    df = read_qbo(spark, **_opts(srv, where="Id >= '80'", page_size="10"))
+    n_pages = -(-len(want) // 10)
+    assert df.rdd.getNumPartitions() == n_pages < 15
+    assert {r["id"] for r in df.collect()} == want
+    assert srv.n_page_requests == n_pages
 
 
-@pytest.mark.parametrize("value", ["4'2", "x' OR Id > '"])
-def test_quoted_filter_value_stays_residual(spark, srv, value):
-    # a quote would break out of the remote query's string literal, so
-    # the filter must stay in Spark instead of reaching the server
+@pytest.mark.parametrize("value", ["42", "4'2", "x' OR Id > '"])
+def test_spark_filter_on_id_stays_in_spark(spark, srv, value):
+    """A Spark filter runs after the fetch, so a quoted value cannot
+    reach the remote query: the full 2-page scan happens and Spark
+    keeps the matching rows."""
     df = read_qbo(spark, **_opts(srv)).filter(F.col("id") == value)
-    assert df.collect() == []
-    # no WHERE pushed → the full 2-page scan happened (a pushed WHERE
-    # matching nothing plans a single page)
+    assert [r["id"] for r in df.collect()] == ([value] if value == "42" else [])
     assert srv.n_page_requests == 2
 
 

@@ -2919,6 +2919,24 @@ def test_replays_add_no_files_no_dvs(spark, tmp_path):
     ) > n_files0
 
 
+def test_empty_keyless_append_publishes_only_a_metadata_change(spark, tmp_path):
+    """A keyless append that stages no row and changes no table
+    metadata returns its base and publishes nothing; the first commit,
+    a new expectation, a new column, a ``txn_app`` watermark and a
+    keyed append still publish."""
+    path = str(tmp_path / "t")
+    empty = _df(spark, 0, 0)
+    assert txn.commit_append(spark, empty, path) == 0  # creates the table
+    assert txn.commit_append(spark, _df(spark, 0, 10), path) == 1
+    assert txn.commit_append(spark, empty, path) == 1
+    assert txn.commit_append(spark, empty, path, expectations={"pos": "k >= 0"}) == 2
+    assert txn.commit_append(spark, empty, path, txn_app="a", txn_version=1) == 3
+    assert txn.commit_append(spark, empty.withColumn("w", F.col("v")), path) == 4
+    assert txn.commit_append(spark, empty, path, key="k") == 5
+    assert txn.commit_append(spark, empty, path) == txn.current_version(path) == 5
+    assert txn.read_table(spark, path).count() == 10
+
+
 def test_replace_where_is_copy_on_write(spark, tmp_path):
     """replace_where rewrites only files holding predicate-matching
     rows (round 7): disjoint-range files untouched by the slice move
